@@ -27,6 +27,20 @@ postgres.py:1160-1239). Two lifecycle hazards this module closes:
    treated as absent, so a crashed build can never be trusted, and a
    concurrent builder that loses the publish race simply discards its
    temp dir.
+
+**Layout.** Every artifact lives at ``<store>/<name>/<sf basename>``,
+where ``<store>`` is the parent of ``plans.dedup._index_root()``
+(``plans.dedup._artifact_path`` is the one place that spells this out;
+it re-reads ``_index_root`` on every call, so rebinding it relocates
+the whole store).
+
+**Staged stamp order.** An artifact maintained in place (base build +
+one ingest/delete step) goes through ``ensure_staged``: unless the
+FINAL fingerprint is current, publish the base under the BASE
+fingerprint (a no-op when the base is already current), run the step,
+then stamp the final fingerprint. A crash after the base publish
+leaves meta at the base fingerprint, so the rerun repeats only the
+step, which must therefore overwrite its own partial output.
 """
 
 from __future__ import annotations
@@ -273,6 +287,23 @@ def publish(
         return _install(tmp, path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def ensure_staged(
+    path: str,
+    base_fp: str,
+    final_fp: str,
+    builder: Callable[[str], None],
+    step: Callable[[], None],
+    final_meta: dict,
+) -> None:
+    """Ensure ``path`` holds the base artifact plus one in-place step,
+    stamped ``final_fp`` (the staged order in the module docstring)."""
+    if is_current(path, final_fp):
+        return
+    publish(path, base_fp, builder)
+    step()
+    update_meta(path, final_fp, final_meta)
 
 
 def update_meta(path: str, fingerprint: str, extra_meta: dict | None = None) -> None:

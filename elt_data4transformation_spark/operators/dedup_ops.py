@@ -865,11 +865,19 @@ def ingest_band_index_fused(
     caller's accumulated shingle view (fetch-by-matched-id — needs no
     source tag; candidates are already visibility-gated).
 
+    Precondition: ``ready`` is non-empty, and tags strictly increase
+    and are never reused across drains of one view — a reused tag
+    would let the ``_vsrc < _ptag`` gate hide an earlier merged
+    segment (silent under-matching) and its ``bands_ingest_{tag}``
+    write would overwrite that segment.
+
     Returns ``(scored, per_tag)``; per_tag rows are
     ``(tag, merge_fn, seg_bands, seg_sh, release_fn)`` with the same
     contracts as ingest_band_index (caller materializes ``scored``
     before any ``merge_fn``, stamps meta after, releases once the
     segment is durable and the in-memory view is re-pointed)."""
+    if not ready:
+        raise ValueError("ingest_band_index_fused: no ready tags to drain")
     dbands_parts: list[DataFrame] = []
     dsh_parts: list[DataFrame] = []
     per_tag = []

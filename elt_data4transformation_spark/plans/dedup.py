@@ -14,6 +14,8 @@ construction (md5).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -25,6 +27,14 @@ from .registry import register
 N_MINHASH = 8
 N_BANDS = 2  # 4 hashes per band
 SHINGLE = 5
+# the (id, text, signature) arguments every documents band index shares
+BAND_KW = dict(
+    id_col="doc_id",
+    text_col="text",
+    shingle=SHINGLE,
+    n_hashes=N_MINHASH,
+    n_bands=N_BANDS,
+)
 _PROBE_CAP = dedup_ops.PROBE_MAX_CANDIDATES  # mirrored into oracles
 # Mega-bucket fan-out cap: a band bucket wider than this degrades to a
 # hub star (bucket-min id vs each member) instead of all pairs — the
@@ -105,17 +115,68 @@ def _signatures_sql(
     return sh, dg, sig
 
 
-def _prep_sigstore(spark: SparkSession, sf_dir: str) -> str:
-    """prepare hook for signature-store consumers: publish the store
-    (one-time per corpus state) so the timed query is reads + joins.
-    Late-bound — _sigstore is defined further down this module."""
-    return _sigstore(spark, sf_dir)
+def _index_root() -> str:
+    """Repo-anchored artifact directory for stored dedup indexes
+    (inside the git-ignored spark-warehouse/)."""
+    repo = os.path.dirname(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
+    return os.path.join(repo, "spark-warehouse", "dedup_index")
 
 
-def _prep_srp_store(spark: SparkSession, sf_dir: str) -> None:
-    """prepare hook for embedding_neardup_srp: publish the stored SRP
-    band keys of the real embeddings (see _srp_band_store)."""
-    _srp_band_store(spark, sf_dir)
+def _artifact_path(name: str, sf_dir: str) -> str:
+    """Where stored artifact ``name`` of corpus ``sf_dir`` lives:
+    ``<dirname(_index_root())>/<name>/<sf basename>``. ``_index_root``
+    is looked up on every call, so rebinding it moves every store."""
+    return os.path.join(
+        os.path.dirname(_index_root()),
+        name,
+        os.path.basename(os.path.normpath(sf_dir)),
+    )
+
+
+def _sigstore(spark: SparkSession, sf_dir: str) -> str:
+    """The SIGNATURE STORE: a fingerprinted stored artifact holding
+    every document's shingle set and LSH band keys — computed ONCE per
+    corpus state and read by every stored-index probe instead of
+    re-shingling the probe batch per query per session; it is the
+    prepare hook of every signature-store consumer.
+
+    This is the at-rest half of what the ingest loop already does in
+    flight (stream_index_ingest computes each arriving batch's
+    signatures exactly once and persists them as the merge segment):
+    in a production pipeline signatures are computed when a document
+    ARRIVES and stored beside it; no later consumer ever re-derives
+    them from text. Signatures are pure per-row functions of
+    (text, params), so stored and freshly-computed rows are identical
+    (pinned by test) and the DuckDB oracles — which recompute from raw
+    text every run — still match bit-for-bit. ANY corpus edit
+    rebuilds, a stable corpus reuses with zero text I/O. Format =
+    write_band_index over the FULL table (bands partitioned by
+    band_idx, shingles flat); a probe filters its delta predicate down
+    the id column — at cluster scale the store would additionally be
+    bucketed by id."""
+    store = _artifact_path("dedup_index_sigstore", sf_dir)
+    fp = artifacts.source_fingerprint(
+        [os.path.join(sf_dir, "documents.parquet")],
+        params=f"sigstore|sh={SHINGLE}|mh={N_MINHASH}|bands={N_BANDS}"
+        f"|fmt=L1|part=mod{DELTA_MOD}",
+    )
+    artifacts.publish(
+        store,
+        fp,
+        lambda tmp: dedup_ops.write_band_index(
+            spread(table(spark, sf_dir, "documents")),
+            tmp,
+            **BAND_KW,
+            # bucket the store by the ingest id class: a delta probe
+            # filters doc_mod and the scan prunes the other classes'
+            # directories (the 100 TB id-range pruning claim, asserted
+            # in tests)
+            partition_mod=DELTA_MOD,
+        ),
+    )
+    return store
 
 
 @register(
@@ -204,7 +265,7 @@ def _minhash_pairs_oracle() -> str:
     "dedup_minhash_lsh",
     oracle=_minhash_pairs_oracle(),
     tags=("dedup",),
-    prepare=_prep_sigstore,
+    prepare=_sigstore,
     doc="MinHash+LSH near-dup pairs: band-key equi-join generates "
     "candidates, exact shingle-Jaccard >= 0.5 re-score keeps precision — "
     "the scale path for T5 trigram dedup (migrations/0006_title_dedup.sql:"
@@ -220,11 +281,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre_sh, pre_bands = _stored_delta_sig(spark, sf_dir, F.lit(True))
     pairs = dedup_ops.minhash_lsh_pairs(
         spread(table(spark, sf_dir, "documents")),
-        id_col="doc_id",
-        text_col="text",
-        shingle=SHINGLE,
-        n_hashes=N_MINHASH,
-        n_bands=N_BANDS,
+        **BAND_KW,
         threshold=0.5,
         max_bucket=LSH_MAX_BUCKET,
         pre_sh=pre_sh,
@@ -279,7 +336,7 @@ def _source_overlap_oracle() -> str:
     "source_overlap_matrix",
     oracle=_source_overlap_oracle(),
     tags=("dedup", "audit"),
-    prepare=_prep_sigstore,
+    prepare=_sigstore,
     doc="Cross-source duplication matrix — the curation audit a "
     "multi-crawl corpus needs before mixing: every capped-LSH near-dup "
     "pair (exact Jaccard >= 0.5, same candidates as dedup_minhash_lsh) "
@@ -296,11 +353,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre_sh, pre_bands = _stored_delta_sig(spark, sf_dir, F.lit(True))
     pairs = dedup_ops.minhash_lsh_pairs(
         d,
-        id_col="doc_id",
-        text_col="text",
-        shingle=SHINGLE,
-        n_hashes=N_MINHASH,
-        n_bands=N_BANDS,
+        **BAND_KW,
         threshold=0.5,
         max_bucket=LSH_MAX_BUCKET,
         pre_sh=pre_sh,
@@ -570,22 +623,16 @@ def _srp_twins_of(e0: DataFrame) -> DataFrame:
 def _srp_band_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stored SRP band keys for the REAL embeddings AND the forged
     fixture twins — the vector sibling of the text signature store
-    (_sigstore): published once per corpus state under the same
-    fingerprint + meta-last + atomic swap protocol, read by every
-    later run. The twins are a pure function of the corpus (the
-    fixture's re-encode analog), so their keys are stored too — the
+    (_sigstore): published once per corpus state and read by every
+    later run; it is also embedding_neardup_srp's prepare hook. The
+    twins are a pure function of the corpus (the fixture's re-encode
+    analog), so their keys are stored too — the
     24-plane sign-fold projection (whose CODEGEN alone costs seconds
     per session) never runs at query time at all. Deterministic
     planes make stored and fresh keys identical — pinned by test; the
     oracle recomputes everything from raw vectors and still matches
     exact-hash."""
-    import os
-
-    store = os.path.join(
-        os.path.dirname(_index_root()),
-        "srp_sigstore",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    store = _artifact_path("srp_sigstore", sf_dir)
     fp = artifacts.source_fingerprint(
         [os.path.join(sf_dir, "embeddings.parquet")],
         params=f"srp|planes={_SRP_PLANES}|bands={_SRP_BANDS}"
@@ -662,7 +709,7 @@ def _srp_oracle() -> str:
     "embedding_neardup_srp",
     oracle=_srp_oracle(),
     tags=("dedup", "similarity"),
-    prepare=_prep_srp_store,
+    prepare=_srp_band_store,
     doc="Signed-random-projection LSH for cosine near-dup — the "
     "hash-bucketed scale route that closes the family's last declared "
     "all-pairs exception, at the operating point where SRP is valid: "
@@ -832,7 +879,7 @@ def _components_cte() -> str:
         ORDER BY component, doc_id
     """,
     tags=("dedup", "graph"),
-    prepare=_prep_sigstore,
+    prepare=_sigstore,
     doc="Connected components over the MinHash-LSH near-dup edge set "
     "(exact Jaccard >= 0.5): the DISTRIBUTED form of the reference's "
     "greedy single-linkage clustering (clustering.py:224-266) and the "
@@ -864,11 +911,7 @@ def _lsh_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre_sh, pre_bands = _stored_delta_sig(spark, sf_dir, F.lit(True))
     return dedup_ops.minhash_lsh_pairs(
         spread(table(spark, sf_dir, "documents")),
-        id_col="doc_id",
-        text_col="text",
-        shingle=SHINGLE,
-        n_hashes=N_MINHASH,
-        n_bands=N_BANDS,
+        **BAND_KW,
         threshold=0.5,
         max_bucket=LSH_MAX_BUCKET,
         pre_sh=pre_sh,
@@ -1218,70 +1261,6 @@ def _probe_best(scored: DataFrame, *group_cols: str) -> DataFrame:
     )
 
 
-def _index_root() -> str:
-    """Repo-anchored artifact directory for stored dedup indexes
-    (inside the git-ignored spark-warehouse/)."""
-    import os
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    return os.path.join(repo, "spark-warehouse", "dedup_index")
-
-
-def _sigstore(spark: SparkSession, sf_dir: str) -> str:
-    """The SIGNATURE STORE: a fingerprinted stored artifact holding
-    every document's shingle set and LSH band keys — computed ONCE per
-    corpus state and read by every stored-index probe instead of
-    re-shingling the probe batch per query per session.
-
-    This is the at-rest half of what the ingest loop already does in
-    flight (stream_index_ingest computes each arriving batch's
-    signatures exactly once and persists them as the merge segment):
-    in a production pipeline signatures are computed when a document
-    ARRIVES and stored beside it; no later consumer ever re-derives
-    them from text. Signatures are pure per-row functions of
-    (text, params), so stored and freshly-computed rows are identical
-    (pinned by test) and the DuckDB oracles — which recompute from raw
-    text every run — still match bit-for-bit. Same publish protocol as
-    every stored artifact (file-level source fingerprint, meta-last,
-    atomic swap): ANY corpus edit rebuilds, a stable corpus reuses
-    with zero text I/O. Format = write_band_index over the FULL table
-    (bands partitioned by band_idx, shingles flat); a probe filters
-    its delta predicate down the id column — at cluster scale the
-    store would additionally be bucketed by id."""
-    import os
-
-    store = os.path.join(
-        f"{_index_root()}_sigstore",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "documents.parquet")],
-        params=f"sigstore|sh={SHINGLE}|mh={N_MINHASH}|bands={N_BANDS}"
-        f"|fmt=L1|part=mod{DELTA_MOD}",
-    )
-    artifacts.publish(
-        store,
-        fp,
-        lambda tmp: dedup_ops.write_band_index(
-            spread(table(spark, sf_dir, "documents")),
-            tmp,
-            id_col="doc_id",
-            text_col="text",
-            shingle=SHINGLE,
-            n_hashes=N_MINHASH,
-            n_bands=N_BANDS,
-            # bucket the store by the ingest id class: a delta probe
-            # filters doc_mod and the scan prunes the other classes'
-            # directories (the 100 TB id-range pruning claim, asserted
-            # in tests)
-            partition_mod=DELTA_MOD,
-        ),
-    )
-    return store
-
-
 def _stored_delta_sig(
     spark: SparkSession, sf_dir: str, pred, mod_class: int | None = None
 ) -> tuple[DataFrame, DataFrame]:
@@ -1305,13 +1284,9 @@ def _stored_delta_sig(
 def _ensure_stored_index(spark: SparkSession, sf_dir: str) -> str:
     """Lifecycle half of dedup_stored_index: the corpus band+shingle
     artifacts, fingerprint-published once per corpus state."""
-    import os
-
     d = table(spark, sf_dir, "documents")
     corpus = spread(d.filter(F.col("doc_id") % DELTA_MOD != 0))
-    path = os.path.join(
-        _index_root(), os.path.basename(os.path.normpath(sf_dir))
-    )
+    path = _artifact_path("dedup_index", sf_dir)
     fp = artifacts.source_fingerprint(
         [os.path.join(sf_dir, "documents.parquet")],
         params=f"dedup_stored_index|corpus=doc_id%{DELTA_MOD}!=0"
@@ -1320,15 +1295,7 @@ def _ensure_stored_index(spark: SparkSession, sf_dir: str) -> str:
     artifacts.publish(
         path,
         fp,
-        lambda tmp: dedup_ops.write_band_index(
-            corpus,
-            tmp,
-            id_col="doc_id",
-            text_col="text",
-            shingle=SHINGLE,
-            n_hashes=N_MINHASH,
-            n_bands=N_BANDS,
-        ),
+        lambda tmp: dedup_ops.write_band_index(corpus, tmp, **BAND_KW),
     )
     return path
 
@@ -1341,40 +1308,27 @@ def _prep_stored_index(spark: SparkSession, sf_dir: str) -> None:
 def _ensure_maintain_index(spark: SparkSession, sf_dir: str) -> str:
     """Lifecycle half of dedup_index_maintain: base index over
     doc_id%5>=2 with ingest A (doc_id%5==0) merged as a segment."""
-    import os
-
     d = table(spark, sf_dir, "documents")
     corpus = spread(d.filter(F.col("doc_id") % DELTA_MOD >= 2))
     ingest_a = spread(d.filter(F.col("doc_id") % DELTA_MOD == 0))
-    kw = dict(
-        id_col="doc_id",
-        text_col="text",
-        shingle=SHINGLE,
-        n_hashes=N_MINHASH,
-        n_bands=N_BANDS,
-    )
-    path = os.path.join(
-        f"{_index_root()}_maintain",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = _artifact_path("dedup_index_maintain", sf_dir)
     src = [os.path.join(sf_dir, "documents.parquet")]
     params = (
         f"dedup_index_maintain|base=doc_id%{DELTA_MOD}>=2"
         f"|sh={SHINGLE}|mh={N_MINHASH}|bands={N_BANDS}|fmt=L1"
     )
-    fp_base = artifacts.source_fingerprint(src, params + "|ingests=")
-    fp_a = artifacts.source_fingerprint(src, params + "|ingests=a")
-    if not artifacts.is_current(path, fp_a):
-        # invocation 1 of the lifecycle: index the base corpus...
-        artifacts.publish(
-            path,
-            fp_base,
-            lambda tmp: dedup_ops.write_band_index(corpus, tmp, **kw),
-        )
-        # ...then ingest A: probe (dedup decision for A's rows would be
-        # made here) and MERGE, so every later ingest sees A
-        dedup_ops.merge_band_index(spark, path, ingest_a, tag="a", **kw)
-        artifacts.update_meta(path, fp_a, {"ingests": ["a"]})
+    # the ingest step probes (the dedup decision for A's rows would be
+    # made here) and MERGEs, so every later ingest sees A
+    artifacts.ensure_staged(
+        path,
+        artifacts.source_fingerprint(src, params + "|ingests="),
+        artifacts.source_fingerprint(src, params + "|ingests=a"),
+        lambda tmp: dedup_ops.write_band_index(corpus, tmp, **BAND_KW),
+        lambda: dedup_ops.merge_band_index(
+            spark, path, ingest_a, tag="a", **BAND_KW
+        ),
+        {"ingests": ["a"]},
+    )
     return path
 
 
@@ -1386,43 +1340,28 @@ def _prep_maintain_index(spark: SparkSession, sf_dir: str) -> None:
 def _ensure_delete_index(spark: SparkSession, sf_dir: str) -> str:
     """Lifecycle half of dedup_index_delete: full-corpus index with
     doc_id%10==7 tombstoned."""
-    import os
-
     d = table(spark, sf_dir, "documents")
     corpus = spread(d.filter(F.col("doc_id") % DELTA_MOD != 0))
-    kw = dict(
-        id_col="doc_id",
-        text_col="text",
-        shingle=SHINGLE,
-        n_hashes=N_MINHASH,
-        n_bands=N_BANDS,
-    )
-    path = os.path.join(
-        f"{_index_root()}_delete",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = _artifact_path("dedup_index_delete", sf_dir)
     src = [os.path.join(sf_dir, "documents.parquet")]
     params = (
         f"dedup_index_delete|corpus=doc_id%{DELTA_MOD}!=0"
         f"|sh={SHINGLE}|mh={N_MINHASH}|bands={N_BANDS}|fmt=L1"
     )
-    fp_base = artifacts.source_fingerprint(src, params + "|deletes=")
-    fp_del = artifacts.source_fingerprint(src, params + "|deletes=d7")
-    if not artifacts.is_current(path, fp_del):
-        # invocation 1: index the full corpus...
-        artifacts.publish(
-            path,
-            fp_base,
-            lambda tmp: dedup_ops.write_band_index(corpus, tmp, **kw),
-        )
-        # ...then the takedown arrives: tombstone doc_id%10==7
-        dedup_ops.delete_from_band_index(
+    # the takedown step tombstones doc_id%10==7
+    artifacts.ensure_staged(
+        path,
+        artifacts.source_fingerprint(src, params + "|deletes="),
+        artifacts.source_fingerprint(src, params + "|deletes=d7"),
+        lambda tmp: dedup_ops.write_band_index(corpus, tmp, **BAND_KW),
+        lambda: dedup_ops.delete_from_band_index(
             spark,
             path,
             d.filter(F.col("doc_id") % 10 == 7).select("doc_id"),
             tag="d7",
-        )
-        artifacts.update_meta(path, fp_del, {"deletes": ["d7"]})
+        ),
+        {"deletes": ["d7"]},
+    )
     return path
 
 
@@ -1434,22 +1373,10 @@ def _prep_delete_index(spark: SparkSession, sf_dir: str) -> None:
 def _ensure_compact_index(spark: SparkSession, sf_dir: str) -> str:
     """Lifecycle half of dedup_index_compact: base -> merge A ->
     tombstone d7 -> compact, ending in a single folded base."""
-    import os
-
     d = table(spark, sf_dir, "documents")
     corpus = spread(d.filter(F.col("doc_id") % DELTA_MOD >= 2))
     ingest_a = spread(d.filter(F.col("doc_id") % DELTA_MOD == 0))
-    kw = dict(
-        id_col="doc_id",
-        text_col="text",
-        shingle=SHINGLE,
-        n_hashes=N_MINHASH,
-        n_bands=N_BANDS,
-    )
-    path = os.path.join(
-        f"{_index_root()}_compact",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = _artifact_path("dedup_index_compact", sf_dir)
     src = [os.path.join(sf_dir, "documents.parquet")]
     params = (
         f"dedup_index_compact|base=doc_id%{DELTA_MOD}>=2"
@@ -1464,9 +1391,9 @@ def _ensure_compact_index(spark: SparkSession, sf_dir: str) -> str:
         artifacts.publish(
             path,
             fp_base,
-            lambda tmp: dedup_ops.write_band_index(corpus, tmp, **kw),
+            lambda tmp: dedup_ops.write_band_index(corpus, tmp, **BAND_KW),
         )
-        dedup_ops.merge_band_index(spark, path, ingest_a, tag="a", **kw)
+        dedup_ops.merge_band_index(spark, path, ingest_a, tag="a", **BAND_KW)
         dedup_ops.delete_from_band_index(
             spark,
             path,
@@ -1497,14 +1424,9 @@ def _prep_compact_index(spark: SparkSession, sf_dir: str) -> None:
 def _ensure_stream_base(spark: SparkSession, sf_dir: str) -> str:
     """Lifecycle half of stream_index_ingest: the immutable
     fingerprinted base corpus index the per-run roots symlink to."""
-    import os
-
     d = table(spark, sf_dir, "documents")
     corpus = spread(d.filter(F.col("doc_id") % DELTA_MOD >= 2))
-    base_idx = os.path.join(
-        f"{_index_root()}_stream_base",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    base_idx = _artifact_path("dedup_index_stream_base", sf_dir)
     fp = artifacts.source_fingerprint(
         [os.path.join(sf_dir, "documents.parquet")],
         params=f"stream_index_ingest|base=doc_id%{DELTA_MOD}>=2"
@@ -1513,15 +1435,7 @@ def _ensure_stream_base(spark: SparkSession, sf_dir: str) -> str:
     artifacts.publish(
         base_idx,
         fp,
-        lambda tmp: dedup_ops.write_band_index(
-            corpus,
-            tmp,
-            id_col="doc_id",
-            text_col="text",
-            shingle=SHINGLE,
-            n_hashes=N_MINHASH,
-            n_bands=N_BANDS,
-        ),
+        lambda tmp: dedup_ops.write_band_index(corpus, tmp, **BAND_KW),
     )
     return base_idx
 
@@ -1545,13 +1459,7 @@ def _ensure_stream_fixture(
     per-file trigger cap (tests; the registered loop before round 11)
     makes the sequencer's buffered reorder path fire, and the uncapped
     availableNow batch arrives file-order-agnostic either way."""
-    import os
-
-    path = os.path.join(
-        os.path.dirname(_index_root()),
-        name,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = _artifact_path(name, sf_dir)
     fp = artifacts.source_fingerprint(
         [os.path.join(sf_dir, f"{src_table}.parquet")],
         params=f"{name}|tags=1,0|sig=v1{params_extra}",
@@ -1630,8 +1538,6 @@ def _ensure_stream_src(spark: SparkSession, sf_dir: str) -> str:
             both[both["doc_id"] % DELTA_MOD == t].to_parquet(
                 os.path.join(tmp, f"batch{t}.parquet"), index=False
             )
-
-    import os
 
     return _ensure_stream_fixture(
         spark, sf_dir, "stream_ingest_src", "documents", build
@@ -1875,7 +1781,7 @@ def _register_decon_fuzzy() -> None:
         "decontamination_fuzzy",
         oracle=_decon_fuzzy_oracle(),
         tags=("text", "dedup", "composite"),
-        prepare=_prep_sigstore,
+        prepare=_sigstore,
         doc="FUZZY train/test decontamination — the near-dup complement "
         "of decontamination_check's exact 8-gram gate: a test (eval) "
         "document is flagged when its exact shingle-Jaccard with any "
@@ -1973,8 +1879,6 @@ def _ensure_decon_src(spark: SparkSession, sf_dir: str) -> str:
     from .text import _SPLIT_TRAIN_MAX
 
     def build(tmp: str) -> None:
-        import os
-
         os.makedirs(tmp, exist_ok=True)
         bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
         ids = (
@@ -2002,7 +1906,7 @@ def _ensure_decon_src(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _prep_stream_decon(spark: SparkSession, sf_dir: str) -> None:
-    _prep_sigstore(spark, sf_dir)
+    _sigstore(spark, sf_dir)
     _ensure_decon_src(spark, sf_dir)
 
 
@@ -2040,7 +1944,6 @@ def _register_stream_decon() -> None:
         "harness.py:52-151) guarded at ingest (main.py ingest loop).",
     )
     def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
         import shutil
         import tempfile
 
@@ -2247,7 +2150,6 @@ def _stream_ingest_oracle() -> str:
     "(storage/postgres.py:1160-1239), fused and made streaming.",
 )
 def stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
     import tempfile
 
@@ -2710,13 +2612,7 @@ def _ensure_winnow_store(spark: SparkSession, sf_dir: str) -> str:
       aggregate over the full anchor table.
 
     The oracles recompute everything from raw text every run."""
-    import os
-
-    store = os.path.join(
-        os.path.dirname(_index_root()),
-        "winnow_anchors",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    store = _artifact_path("winnow_anchors", sf_dir)
     fp = artifacts.source_fingerprint(
         [os.path.join(sf_dir, "documents.parquet")],
         params=f"wsub|k={_WSUB_K}|w={_WSUB_W}|m={_WSUB_M}|layout=v2",
@@ -2765,10 +2661,6 @@ def _winnow_shared_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(
         f"{_ensure_winnow_store(spark, sf_dir)}/shared_docs"
     )
-
-
-def _prep_winnow_store(spark: SparkSession, sf_dir: str) -> None:
-    _ensure_winnow_store(spark, sf_dir)
 
 
 @register(
@@ -2923,7 +2815,7 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "substring_dup_spans_gated",
-    prepare=_prep_winnow_store,
+    prepare=_ensure_winnow_store,
     oracle=f"""
         WITH {_wsub_anchor_ctes()}, shared_fps AS (
             SELECT fp_hash FROM anchors GROUP BY fp_hash
@@ -3058,7 +2950,7 @@ def substring_dup_spans_gated(
 
 @register(
     "substring_dup_spans_winnowed",
-    prepare=_prep_winnow_store,
+    prepare=_ensure_winnow_store,
     oracle=f"""
         WITH {_wsub_anchor_ctes()}, shared AS (
             SELECT fp_hash FROM anchors GROUP BY fp_hash
@@ -3163,29 +3055,22 @@ def _ensure_winnow_delete_store(spark: SparkSession, sf_dir: str) -> str:
     exclusion happens at probe time, so the takedown costs one tiny
     id-list write and the base stays bit-identical for every other
     consumer."""
-    import os
-
-    d = table(spark, sf_dir, "documents")
-    path = os.path.join(
-        os.path.dirname(_index_root()),
-        "winnow_delete",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    src = [os.path.join(sf_dir, "documents.parquet")]
+    path = _artifact_path("winnow_delete", sf_dir)
     fp = artifacts.source_fingerprint(
-        src, "wsub_delete|take=doc_id%10==7|base=v2"
+        [os.path.join(sf_dir, "documents.parquet")],
+        "wsub_delete|take=doc_id%10==7|base=v2",
     )
-    if not artifacts.is_current(path, fp):
-        artifacts.publish(
-            path,
-            fp,
-            lambda tmp: d.filter(F.col("doc_id") % 10 == 7)
-            .select("doc_id")
-            .distinct()
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/tombstones"),
-        )
+    artifacts.publish(
+        path,
+        fp,
+        lambda tmp: table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 10 == 7)
+        .select("doc_id")
+        .distinct()
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{tmp}/tombstones"),
+    )
     return path
 
 
@@ -3295,64 +3180,43 @@ def _ensure_winnow_maintain_store(spark: SparkSession, sf_dir: str) -> str:
     segment, then the delta batch (doc_id%5 == 0) winnowed — a pure
     per-doc function, so maintenance cost is delta-proportional and
     needs no base reread — and appended as ``anchors_delta/`` beside
-    the base, LSM-style (append a segment, never rewrite the base).
-    Meta (fingerprint + ingests list) is stamped LAST: a crashed
-    append leaves an ignored orphan segment, never a half-trusted
-    one, and the rerun overwrites it before stamping."""
-    import os
-
+    the base, LSM-style (append a segment, never rewrite the base)."""
     d = table(spark, sf_dir, "documents")
-    path = os.path.join(
-        os.path.dirname(_index_root()),
-        "winnow_maintain",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = _artifact_path("winnow_maintain", sf_dir)
     src = [os.path.join(sf_dir, "documents.parquet")]
     params = (
         f"wsub_maintain|base=doc_id%{DELTA_MOD}!=0"
         f"|k={_WSUB_K}|w={_WSUB_W}|m={_WSUB_M}"
     )
-    fp_base = artifacts.source_fingerprint(src, params + "|ingests=")
-    fp_delta = artifacts.source_fingerprint(src, params + "|ingests=delta")
-    kw = dict(k=_WSUB_K, w=_WSUB_W, m=_WSUB_M)
-    if not artifacts.is_current(path, fp_delta):
-        # invocation 1: publish the base anchor segment...
-        artifacts.publish(
-            path,
-            fp_base,
-            lambda tmp: artifacts.sized(
-                dedup_ops.winnow_positions(
-                    spread(d.filter(F.col("doc_id") % DELTA_MOD != 0)),
-                    "doc_id",
-                    "text",
-                    **kw,
-                )
-            )
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/anchors"),
-        )
-        # ...then the delta batch arrives: winnow ONLY its docs and
-        # append the segment (overwrite mode makes a crashed orphan
-        # rerun-safe), stamping the meta after the write completes
+
+    def anchors(docs: DataFrame, out: str) -> None:
         artifacts.sized(
             dedup_ops.winnow_positions(
-                spread(d.filter(F.col("doc_id") % DELTA_MOD == 0)),
-                "doc_id",
-                "text",
-                **kw,
+                spread(docs), "doc_id", "text", _WSUB_K, _WSUB_W, _WSUB_M
             )
-        ).write.mode("overwrite").parquet(f"{path}/anchors_delta")
-        artifacts.update_meta(path, fp_delta, {"ingests": ["delta"]})
+        ).write.mode("overwrite").parquet(out)
+
+    # the delta step winnows ONLY the batch's docs; overwrite mode
+    # makes a crashed orphan segment rerun-safe
+    artifacts.ensure_staged(
+        path,
+        artifacts.source_fingerprint(src, params + "|ingests="),
+        artifacts.source_fingerprint(src, params + "|ingests=delta"),
+        lambda tmp: anchors(
+            d.filter(F.col("doc_id") % DELTA_MOD != 0), f"{tmp}/anchors"
+        ),
+        lambda: anchors(
+            d.filter(F.col("doc_id") % DELTA_MOD == 0),
+            f"{path}/anchors_delta",
+        ),
+        {"ingests": ["delta"]},
+    )
     return path
-
-
-def _prep_winnow_maintain(spark: SparkSession, sf_dir: str) -> None:
-    _ensure_winnow_maintain_store(spark, sf_dir)
 
 
 @register(
     "substring_winnow_maintain",
-    prepare=_prep_winnow_maintain,
+    prepare=_ensure_winnow_maintain_store,
     oracle=f"""
         WITH {_wsub_anchor_ctes()}, shared AS (
             SELECT fp_hash FROM anchors GROUP BY fp_hash
@@ -3469,52 +3333,39 @@ def _ensure_winnow_compact_store(spark: SparkSession, sf_dir: str) -> str:
     store's segments (base + delta append) FOLD into one clean base
     with the takedown list (doc_id%10 == 7) applied during the fold —
     the LSM compaction step that ends the base -> append -> takedown
-    cycle. publish() builds into a temp dir and swaps near-atomically,
-    so readers never see a half-folded store; the maintained store
-    itself is left untouched (compaction writes a NEW artifact, the
-    segment-dropping twin of dedup_index_compact's fold)."""
-    import os
-
-    d = table(spark, sf_dir, "documents")
-    path = os.path.join(
-        os.path.dirname(_index_root()),
-        "winnow_compact",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    src = [os.path.join(sf_dir, "documents.parquet")]
+    cycle. Compaction writes a NEW artifact and leaves the maintained
+    store untouched (the segment-dropping twin of
+    dedup_index_compact's fold)."""
+    path = _artifact_path("winnow_compact", sf_dir)
     fp = artifacts.source_fingerprint(
-        src,
+        [os.path.join(sf_dir, "documents.parquet")],
         f"wsub_compact|base=doc_id%{DELTA_MOD}!=0|delta=doc_id%"
         f"{DELTA_MOD}==0|take=doc_id%10==7"
         f"|k={_WSUB_K}|w={_WSUB_W}|m={_WSUB_M}|state=folded",
     )
-    if not artifacts.is_current(path, fp):
+
+    def build(tmp: str) -> None:
         mpath = _ensure_winnow_maintain_store(spark, sf_dir)
         base = spark.read.parquet(f"{mpath}/anchors")
         delta = spark.read.parquet(f"{mpath}/anchors_delta")
-        tomb = d.filter(F.col("doc_id") % 10 == 7).select("doc_id")
-        artifacts.publish(
-            path,
-            fp,
-            lambda tmp: artifacts.sized(
-                base.unionByName(delta).join(tomb, "doc_id", "left_anti")
-            )
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/anchors"),
+        tomb = (
+            table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 10 == 7)
+            .select("doc_id")
         )
-        artifacts.update_meta(
-            path, fp, {"folded": ["base", "delta"], "deletes": ["d7"]}
-        )
+        artifacts.sized(
+            base.unionByName(delta).join(tomb, "doc_id", "left_anti")
+        ).write.mode("overwrite").parquet(f"{tmp}/anchors")
+
+    artifacts.publish(
+        path, fp, build, {"folded": ["base", "delta"], "deletes": ["d7"]}
+    )
     return path
-
-
-def _prep_winnow_compact(spark: SparkSession, sf_dir: str) -> None:
-    _ensure_winnow_compact_store(spark, sf_dir)
 
 
 @register(
     "substring_winnow_compact",
-    prepare=_prep_winnow_compact,
+    prepare=_ensure_winnow_compact_store,
     oracle=f"""
         WITH {_wsub_anchor_ctes(" AND doc_id % 10 <> 7")}, shared AS (
             SELECT fp_hash FROM anchors GROUP BY fp_hash
@@ -3703,7 +3554,6 @@ def _register_stream_substring_guard() -> None:
     def stream_substring_guard(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import os
         import shutil
         import tempfile
 

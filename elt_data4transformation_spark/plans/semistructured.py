@@ -1278,8 +1278,7 @@ def _fingerprint_store(
     """Stored PERCEPTUAL-FINGERPRINT artifact shared by the multimodal
     near-dup triad: the (doc_id, k0..k3) band keys of every sampled
     doc AND its forged re-encoded twin, published once per corpus
-    state (source fingerprint + meta-last + atomic swap like every
-    stored artifact). The encode + real-codec-decode + hash pass —
+    state. The encode + real-codec-decode + hash pass —
     the expensive, pure-per-payload half — runs at PUBLICATION
     (ingest time in production: a media file's fingerprint is derived
     when it arrives and stored beside it; no consumer re-decodes);
@@ -1289,13 +1288,9 @@ def _fingerprint_store(
     import os
 
     from ..operators import artifacts
-    from .dedup import _index_root
+    from .dedup import _artifact_path
 
-    store = os.path.join(
-        os.path.dirname(_index_root()),
-        f"{name}_store",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    store = _artifact_path(f"{name}_store", sf_dir)
     fp = artifacts.source_fingerprint(
         [os.path.join(sf_dir, "documents.parquet")],
         params=f"{name}|mod={mod}|twin={twin_mod}|off={twin_off}"
@@ -1335,10 +1330,6 @@ def _dhash_store(spark: SparkSession, sf_dir: str) -> str:
         multimodal.encode_png_payloads, multimodal.decode_png_dhash,
         {"shift": 8},
     )
-
-
-def _prep_dhash_store(spark: SparkSession, sf_dir: str) -> None:
-    _dhash_store(spark, sf_dir)
 
 
 def _image_neardup_oracle() -> str:
@@ -1411,7 +1402,7 @@ def _image_neardup_oracle() -> str:
     "image_neardup",
     oracle=_image_neardup_oracle(),
     tags=("multimodal", "dedup"),
-    prepare=_prep_dhash_store,
+    prepare=_dhash_store,
     doc="Perceptual image NEAR-DUP via difference-hash (dHash) + "
     "Hamming-banded LSH — the image-dedup operator every multimodal "
     "training pipeline runs, composed end-to-end from the repo's own "
@@ -1488,10 +1479,6 @@ def _vid_store(spark: SparkSession, sf_dir: str) -> str:
         multimodal.encode_video_payloads, multimodal.decode_video_dhash,
         {"shift": 8},
     )
-
-
-def _prep_vid_store(spark: SparkSession, sf_dir: str) -> None:
-    _vid_store(spark, sf_dir)
 
 
 def _video_neardup_oracle() -> str:
@@ -1575,7 +1562,7 @@ def _video_neardup_oracle() -> str:
     "video_neardup",
     oracle=_video_neardup_oracle(),
     tags=("multimodal", "dedup"),
-    prepare=_prep_vid_store,
+    prepare=_vid_store,
     doc="Perceptual VIDEO near-dup via temporal-majority-pooled frame "
     "dHashes + Hamming-banded LSH — completes the multimodal dedup "
     "triad (image_neardup / audio_neardup / this). Every sampled doc "
@@ -1749,10 +1736,6 @@ def _afp_store(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def _prep_afp_store(spark: SparkSession, sf_dir: str) -> None:
-    _afp_store(spark, sf_dir)
-
-
 def _audio_neardup_oracle() -> str:
     from .dedup import _capped_cand_sql
 
@@ -1818,7 +1801,7 @@ def _audio_neardup_oracle() -> str:
     "audio_neardup",
     oracle=_audio_neardup_oracle(),
     tags=("multimodal", "dedup"),
-    prepare=_prep_afp_store,
+    prepare=_afp_store,
     doc="Perceptual audio NEAR-DUP via an energy-gradient fingerprint "
     "+ Hamming-banded LSH — the audio-dedup operator of a multimodal "
     "training pipeline (the chromaprint shape, integerized), composed "

@@ -8,9 +8,12 @@ the base table is hash-partitioned; the query set is broadcast.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators import artifacts
 from ..operators.vectors import (
     assign_nearest,
     bucket_cosine_pairs,
@@ -18,6 +21,7 @@ from ..operators.vectors import (
     cosine_sql,
 )
 from ..sources import spread, table
+from .dedup import _artifact_path, _ensure_stream_fixture
 from .registry import register
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -396,28 +400,14 @@ def _ivf_oracle(exclude: str | None = None) -> str:
 def _ensure_stored_ivf(spark: SparkSession, sf_dir: str) -> str:
     """Lifecycle half of ann_stored_ivf: Lloyd-refined centroids +
     centroid-partitioned vector index over ALL embeddings, published
-    once per corpus state (_ivf_builder, late-bound)."""
-    import os
-
-    from ..operators import artifacts
-    from .dedup import _index_root
-
-    e = _vectors(spark, sf_dir)
-    path = os.path.join(
-        os.path.dirname(_index_root()),
-        "ann_ivf",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    once per corpus state (_ivf_builder)."""
+    path = _artifact_path("ann_ivf", sf_dir)
     fp = artifacts.source_fingerprint(
         [os.path.join(sf_dir, "embeddings.parquet")],
         params=f"ann_stored_ivf|k={N_CENTROIDS}|lloyd=1|round=6",
     )
-    artifacts.publish(path, fp, _ivf_builder(e))
+    artifacts.publish(path, fp, _ivf_builder(_vectors(spark, sf_dir)))
     return path
-
-
-def _prep_stored_ivf(spark: SparkSession, sf_dir: str) -> None:
-    _ensure_stored_ivf(spark, sf_dir)
 
 
 def _prep_maintained_ivf(spark: SparkSession, sf_dir: str) -> None:
@@ -434,11 +424,6 @@ def _prep_compacted_ivf(spark: SparkSession, sf_dir: str) -> None:
     _v.compact_ivf_index(spark, path)
 
 
-def _prep_deleted_ivf(spark: SparkSession, sf_dir: str) -> None:
-    """prepare hook for ann_ivf_delete (late-bound ensure)."""
-    _ensure_deleted_ivf(spark, sf_dir)
-
-
 def _ensure_stream_ivf_src(spark: SparkSession, sf_dir: str) -> str:
     """stream_ivf_ingest's incoming files: tag = vec_id % 5 in {0, 1},
     one file per tag, published once per corpus state (see dedup's
@@ -452,9 +437,6 @@ def _ensure_stream_ivf_src(spark: SparkSession, sf_dir: str) -> str:
     persists, never re-assigns. Assignments are a pure function of
     (v, stored centroids) — stored and fresh rows are identical, and
     the oracle recomputes assignment from raw vectors."""
-    import os
-
-    from .dedup import _ensure_stream_fixture
 
     def build(tmp: str) -> None:
         base_idx = _ensure_stream_ivf_base(spark, sf_dir)
@@ -470,15 +452,12 @@ def _ensure_stream_ivf_src(spark: SparkSession, sf_dir: str) -> str:
                 os.path.join(tmp, f"batch{t}.parquet"), index=False
             )
 
-    # the src fingerprint must track the base K (assignments are a
-    # function of the centroids): a scaled-K stress run publishes its
-    # own fixture instead of poisoning the pinned one
-    k = _stream_ivf_k(
-        _vectors(spark, sf_dir).filter(F.col("vec_id") % 5 >= 2)
-    )
+    # the src fingerprint must track the base K rule (assignments are
+    # a function of the centroids): a pinned-K stress run publishes
+    # its own fixture instead of poisoning the sqrt-K one
     return _ensure_stream_fixture(
         spark, sf_dir, "stream_ivf_src", "embeddings", build,
-        params_extra=f"|assigned=k{k}_lloyd1",
+        params_extra=f"|assigned=k{_stream_ivf_k_rule()}_lloyd1",
     )
 
 
@@ -492,7 +471,7 @@ def _prep_stream_ivf_base(spark: SparkSession, sf_dir: str) -> None:
     "ann_stored_ivf",
     oracle=_ivf_oracle(),
     tags=("similarity", "incremental"),
-    prepare=_prep_stored_ivf,
+    prepare=_ensure_stored_ivf,
     doc="IVF ANN against a STORED index — the production vector-search "
     "shape: run 1 writes the Lloyd-refined centroids and the vector "
     "index PARTITIONED BY centroid_id as parquet artifacts; every "
@@ -754,61 +733,37 @@ def _ivf_maintain_oracle() -> str:
     """
 
 
-def _stream_ivf_k(base: DataFrame) -> int:
-    """K for the stream-ingest IVF base. DEFAULT (round 10): the
-    executable K = ceil(sqrt(N)) rule from ann_ivf_scaled applied to
-    the streaming base — the registered stream_ivf_ingest now runs the
-    bounded-bucket path by default (its oracle computes the identical
-    CEIL(SQRT(COUNT(*))) from the base CTE and the chosen K is an
-    oracle-checked output column), closing the round-9 verdict's last
-    super-linear registered plan: at fixed K=16 the per-probe bucket
-    width grew ~N (measured 15-17x at 10x unique data), with sqrt-K it
-    grows ~sqrt(N) (measured near-linear, SCALE.md round 10).
-    SPARK_GRAFT_IVF_K=<int> pins K explicitly — a stress-only knob
-    that must never be set under the driver's oracle runs: it changes
-    bucket geometry, so probe answers legitimately differ from the
-    sqrt-K oracle ('sqrt' is accepted and now redundant). The artifact
-    fingerprints embed the chosen K, so scaled and pinned indexes
-    never collide."""
-    import math
-    import os
-
+def _stream_ivf_k_rule() -> str:
+    """K rule for the stream-ingest IVF base. DEFAULT (round 10):
+    ``sqrt``, the executable K = ceil(sqrt(N)) rule from ann_ivf_scaled
+    applied to the streaming base — the registered stream_ivf_ingest
+    runs the bounded-bucket path by default (its oracle computes the
+    identical CEIL(SQRT(COUNT(*))) from the base CTE and the chosen K
+    is an oracle-checked output column), closing the round-9 verdict's
+    last super-linear registered plan: at fixed K=16 the per-probe
+    bucket width grew ~N (measured 15-17x at 10x unique data), with
+    sqrt-K it grows ~sqrt(N) (measured near-linear, SCALE.md round
+    10). SPARK_GRAFT_IVF_K=<int> pins K explicitly — a stress-only
+    knob that must never be set for oracle runs: it changes bucket
+    geometry, so probe answers legitimately differ from the sqrt-K
+    oracle ('sqrt' is accepted and now redundant). The
+    artifact fingerprints embed the RULE, not the K it yields, so
+    fingerprinting stays stat-only (no count job); the base build
+    records the computed K in its meta."""
     mode = os.environ.get("SPARK_GRAFT_IVF_K", "")
-    if mode.isdigit():
-        return int(mode)
-    return max(1, math.ceil(math.sqrt(base.count())))
+    return mode if mode.isdigit() else "sqrt"
 
 
 def _ivf_builder(base: DataFrame, k: int = N_CENTROIDS):
     """Artifact builder for a base-trained IVF index: centroid seeds =
     the base vectors with vec_id < ``k``, one deterministic Lloyd
-    iteration (elementwise mean rounded to 6dp so both engines
-    produce identical centroids), base assigned to the refined
+    iteration (_refined_centroids), base assigned to the refined
     centroids, written as ``centroids`` + ``index`` (partitioned by
-    centroid_id). Shared by the maintain/compact lifecycle and the
+    centroid_id). Shared by every stored-IVF lifecycle and the
     streaming ingest loop."""
 
     def build(tmp: str) -> None:
-        cent0 = base.filter(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-        )
-        assigned0 = assign_nearest(
-            base.select("vec_id", "v"), cent0
-        ).drop("cos")
-        cent = (
-            assigned0.select(
-                "centroid_id", F.posexplode("v").alias("dim", "val")
-            )
-            .groupBy("centroid_id", "dim")
-            .agg(F.round(F.avg("val"), 6).alias("m"))
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda x: x["m"],
-                ).alias("cv")
-            )
-        )
+        cent = _refined_centroids(base, k)
         assigned = assign_nearest(base.select("vec_id", "v"), cent).drop(
             "cos"
         )
@@ -826,36 +781,29 @@ def _ensure_maintained_ivf(spark: SparkSession, sf_dir: str, name: str) -> str:
     (vec_id % 5 == 0) merged as a frozen-centroid segment. Returns the
     artifact path; used by ann_ivf_maintain (probes segmented) and
     ann_ivf_compact (compacts first — probe-identical by design)."""
-    import os
-
-    from ..operators import artifacts
-    from .dedup import _index_root
-
     e = _vectors(spark, sf_dir)
-    base = e.filter(F.col("vec_id") % 5 != 0)
-    ingest = e.filter(F.col("vec_id") % 5 == 0)
-    path = os.path.join(
-        os.path.dirname(_index_root()),
-        name,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = _artifact_path(name, sf_dir)
     params = f"{name}|k={N_CENTROIDS}|lloyd=1|round=6|mod=5"
     src = [os.path.join(sf_dir, "embeddings.parquet")]
-    fp_base = artifacts.source_fingerprint(src, params + "|ingests=")
-    fp_a = artifacts.source_fingerprint(src, params + "|ingests=a")
-    build = _ivf_builder(base)
 
-    if not artifacts.is_current(path, fp_a):
-        artifacts.publish(path, fp_base, build)
-        # ingest: assign new vectors to the FROZEN stored centroids,
-        # append as a segment, stamp meta last
+    def ingest() -> None:
+        # assign new vectors to the FROZEN stored centroids and append
+        # them as a segment
         cent = spark.read.parquet(f"{path}/centroids")
-        assign_nearest(ingest.select("vec_id", "v"), cent).drop(
-            "cos"
-        ).select("vec_id", "v", "centroid_id").write.mode(
+        assign_nearest(
+            e.filter(F.col("vec_id") % 5 == 0).select("vec_id", "v"), cent
+        ).drop("cos").select("vec_id", "v", "centroid_id").write.mode(
             "overwrite"
         ).partitionBy("centroid_id").parquet(f"{path}/index_ingest_a")
-        artifacts.update_meta(path, fp_a, {"ingests": ["a"]})
+
+    artifacts.ensure_staged(
+        path,
+        artifacts.source_fingerprint(src, params + "|ingests="),
+        artifacts.source_fingerprint(src, params + "|ingests=a"),
+        _ivf_builder(e.filter(F.col("vec_id") % 5 != 0)),
+        ingest,
+        {"ingests": ["a"]},
+    )
     return path
 
 
@@ -954,8 +902,6 @@ def ann_ivf_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     "drift-recovery test.",
 )
 def ann_ivf_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..operators.vectors import compact_ivf_index
 
     path = _ensure_maintained_ivf(spark, sf_dir, "ann_ivf_compact")
@@ -1129,10 +1075,6 @@ def _split_ivf_fps(sf_dir: str) -> tuple[str, str]:
     an older rule must re-build, not silently serve different answers.
     Extracted so the crash-idempotency test can stamp the intermediate
     state without duplicating the parameter string."""
-    import os
-
-    from ..operators import artifacts
-
     src = [os.path.join(sf_dir, "embeddings.parquet")]
     params = (
         f"ann_ivf_split_compact|k={N_CENTROIDS}|lloyd=1|round=6|mod=5"
@@ -1160,18 +1102,10 @@ def _ensure_split_ivf(spark: SparkSession, sf_dir: str) -> str:
     instead of running a SECOND split pass over an already-split index
     (which, at factor 1.1, could split more clusters and silently
     serve answers diverging from the one-pass oracle)."""
-    import os
-
-    from ..operators import artifacts
     from ..operators.vectors import compact_ivf_index, split_wide_clusters
-    from .dedup import _index_root
 
     name = "ann_ivf_split_compact"
-    path = os.path.join(
-        os.path.dirname(_index_root()),
-        name,
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = _artifact_path(name, sf_dir)
     fp_presplit, fp_split = _split_ivf_fps(sf_dir)
     if not artifacts.is_current(path, fp_split):
         # meta == fp_presplit here matches neither fp_a nor fp_split,
@@ -1185,16 +1119,11 @@ def _ensure_split_ivf(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-def _prep_split_ivf(spark: SparkSession, sf_dir: str) -> None:
-    """prepare hook for ann_ivf_split_compact (late-bound ensure)."""
-    _ensure_split_ivf(spark, sf_dir)
-
-
 @register(
     "ann_ivf_split_compact",
     oracle=_ivf_split_oracle(),
     tags=("similarity", "incremental"),
-    prepare=_prep_split_ivf,
+    prepare=_ensure_split_ivf,
     doc="WIDTH-BOUNDED SPLIT COMPACTION — the stored-index half of the "
     "round-9 K-scaling fix (the verdict's alternative form: 'a "
     "compaction step that splits clusters past a width bound'). "
@@ -1280,7 +1209,7 @@ def _ivf_split_nprobe_oracle() -> str:
     "ann_ivf_split_nprobe",
     oracle=_ivf_split_nprobe_oracle(),
     tags=("similarity", "incremental"),
-    prepare=_prep_split_ivf,
+    prepare=_ensure_split_ivf,
     doc=f"Multi-probe (nprobe={NPROBE}) over the SPLIT-COMPACTED "
     "index — the other half of what width bounding buys: the split "
     "turns one coarse all-or-nothing bucket into a fine nprobe knob "
@@ -1341,49 +1270,26 @@ DEL_REM = 3
 def _ensure_deleted_ivf(spark: SparkSession, sf_dir: str) -> str:
     """Lifecycle half of ann_ivf_delete: full-set IVF index with
     vec_id%7==3 tombstoned."""
-    import os
-
-    from ..operators import artifacts
     from ..operators.vectors import delete_from_ivf_index
-    from .dedup import _index_root
 
     e = _vectors(spark, sf_dir)
-    path = os.path.join(
-        os.path.dirname(_index_root()),
-        "ann_ivf_delete",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = _artifact_path("ann_ivf_delete", sf_dir)
     src = [os.path.join(sf_dir, "embeddings.parquet")]
     params = f"ann_ivf_delete|k={N_CENTROIDS}|lloyd=1|round=6"
-    fp_base = artifacts.source_fingerprint(src, params + "|deletes=")
-    fp_del = artifacts.source_fingerprint(
-        src, params + f"|deletes=d{DEL_MOD}_{DEL_REM}"
-    )
-    if not artifacts.is_current(path, fp_del):
-        # invocation 1: index the full vector set...
-        def build(tmp: str) -> None:
-            cent = _refined_centroids(e)
-            assigned = assign_nearest(e.select("vec_id", "v"), cent).drop(
-                "cos"
-            )
-            cent.write.mode("overwrite").parquet(f"{tmp}/centroids")
-            assigned.select("vec_id", "v", "centroid_id").write.mode(
-                "overwrite"
-            ).partitionBy("centroid_id").parquet(f"{tmp}/index")
-
-        artifacts.publish(path, fp_base, build)
-        # ...then the takedown arrives: tombstone vec_id%7==3
-        delete_from_ivf_index(
+    tag = f"d{DEL_MOD}_{DEL_REM}"
+    artifacts.ensure_staged(
+        path,
+        artifacts.source_fingerprint(src, params + "|deletes="),
+        artifacts.source_fingerprint(src, params + f"|deletes={tag}"),
+        _ivf_builder(e),
+        lambda: delete_from_ivf_index(
             spark,
             path,
-            e.filter(
-                F.col("vec_id") % DEL_MOD == DEL_REM
-            ).select("vec_id"),
-            tag=f"d{DEL_MOD}_{DEL_REM}",
-        )
-        artifacts.update_meta(
-            path, fp_del, {"deletes": [f"d{DEL_MOD}_{DEL_REM}"]}
-        )
+            e.filter(F.col("vec_id") % DEL_MOD == DEL_REM).select("vec_id"),
+            tag=tag,
+        ),
+        {"deletes": [tag]},
+    )
     return path
 
 
@@ -1391,7 +1297,7 @@ def _ensure_deleted_ivf(spark: SparkSession, sf_dir: str) -> str:
     "ann_ivf_delete",
     oracle=_ivf_oracle(exclude=f"vec_id % {DEL_MOD} = {DEL_REM}"),
     tags=("similarity", "incremental"),
-    prepare=_prep_deleted_ivf,
+    prepare=_ensure_deleted_ivf,
     doc="Stored-IVF DELETE by TOMBSTONE — the removal half of the "
     "vector-store lifecycle, completing the parity with the dedup "
     "index family (dedup_index_delete): an embedded document's "
@@ -1423,25 +1329,29 @@ def ann_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ensure_stream_ivf_base(spark: SparkSession, sf_dir: str) -> str:
     """Lifecycle half of stream_ivf_ingest: the immutable base-trained
-    IVF index (vec_id % 5 >= 2) the per-run roots symlink to."""
-    import os
+    IVF index (vec_id % 5 >= 2) the per-run roots symlink to. Its meta
+    records the K the build chose (``k``)."""
+    import math
 
-    from ..operators import artifacts
-    from .dedup import _index_root
-
-    base = _vectors(spark, sf_dir).filter(F.col("vec_id") % 5 >= 2)
-    k = _stream_ivf_k(base)
-    base_idx = os.path.join(
-        os.path.dirname(_index_root()),
-        "ann_ivf_stream_base",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    rule = _stream_ivf_k_rule()
+    base_idx = _artifact_path("ann_ivf_stream_base", sf_dir)
     fp = artifacts.source_fingerprint(
         [os.path.join(sf_dir, "embeddings.parquet")],
         params=f"stream_ivf_ingest|base=vec_id%5>=2"
-        f"|k={k}|lloyd=1|round=6",
+        f"|k={rule}|lloyd=1|round=6",
     )
-    artifacts.publish(base_idx, fp, _ivf_builder(base, k=k))
+    meta: dict = {}  # filled by build; publish writes it after build
+
+    def build(tmp: str) -> None:
+        base = _vectors(spark, sf_dir).filter(F.col("vec_id") % 5 >= 2)
+        meta["k"] = (
+            int(rule)
+            if rule.isdigit()
+            else max(1, math.ceil(math.sqrt(base.count())))
+        )
+        _ivf_builder(base, k=meta["k"])(tmp)
+
+    artifacts.publish(base_idx, fp, build, meta)
     return base_idx
 
 
@@ -1558,14 +1468,10 @@ def _stream_ivf_oracle() -> str:
     "throughout.",
 )
 def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
     import tempfile
 
     from pyspark import StorageLevel
-
-    from ..operators import artifacts
-    from .dedup import _index_root
 
     work = tempfile.mkdtemp(prefix="stream_ivf_ingest_")
     try:
@@ -1574,11 +1480,8 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # so merges stay run-scoped and concurrent runs share one base
         # — same layout as stream_index_ingest
         base_idx = _ensure_stream_ivf_base(spark, sf_dir)
-        # the oracle-checked K column: same rule (and same env pin, if
-        # any) the base build used — ceil(sqrt(count(base)))
-        k = _stream_ivf_k(
-            _vectors(spark, sf_dir).filter(F.col("vec_id") % 5 >= 2)
-        )
+        # the oracle-checked K column: the K the base build chose
+        k = artifacts.load_meta(base_idx)["k"]
         idx = os.path.join(work, "idx")
         os.makedirs(idx)
         for seg in ("centroids", "index"):

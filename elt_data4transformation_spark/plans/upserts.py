@@ -688,7 +688,7 @@ def cdc_aggregate_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_stored_state_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from .dedup import _index_root
+    from .dedup import _artifact_path
 
     e = table(spark, sf_dir, "events")
     base = e.filter(F.col("ts") < F.lit(T1).cast("timestamp")).select(
@@ -698,11 +698,7 @@ def cdc_stored_state_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", "value"
     )
     dec = F.col("value").cast("decimal(18,2)")
-    path = os.path.join(
-        os.path.dirname(_index_root()),
-        "cdc_state",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = _artifact_path("cdc_state", sf_dir)
     fp = artifacts.source_fingerprint(
         [os.path.join(sf_dir, "events.parquet")],
         params=f"cdc_stored_state|cut={T1}",
@@ -847,7 +843,7 @@ def _cdc_advance_oracle() -> str:
 def cdc_state_advance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    from .dedup import _index_root
+    from .dedup import _artifact_path
 
     e = table(spark, sf_dir, "events")
     base = e.filter(F.col("ts") < F.lit(T1).cast("timestamp")).select(
@@ -876,17 +872,10 @@ def cdc_state_advance(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias(n), F.sum(dec).alias(s)
         )
 
-    path = os.path.join(
-        os.path.dirname(_index_root()),
-        "cdc_advance",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
-    src = [os.path.join(sf_dir, "events.parquet")]
-    fp_v2 = artifacts.source_fingerprint(
-        src, params=f"cdc_state_advance|cut={T2}"
-    )
+    path = _artifact_path("cdc_advance", sf_dir)
     ins1, del1 = split_ops(e1)
-    if not artifacts.is_current(path, fp_v2):
+
+    def build(tmp: str) -> None:
         # fold epoch 1 into the stored state and ADVANCE the cut:
         # v2 = base_agg + ins1 - del1, where del1 targets rows live
         # at cut T2 (base ∪ ins1)
@@ -894,7 +883,7 @@ def cdc_state_advance(spark: SparkSession, sf_dir: str) -> DataFrame:
         deleted1 = live1.join(
             del1, live1["event_id"] == del1["target_id"]
         ).select("event_type", "value")
-        v2 = (
+        (
             agg(base, "b_n", "b_sum")
             .join(agg(ins1, "i_n", "i_sum"), "event_type", "full_outer")
             .join(agg(deleted1, "d_n", "d_sum"), "event_type", "full_outer")
@@ -913,13 +902,19 @@ def cdc_state_advance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce("i_n", F.lit(0)).alias("s_ins"),
                 F.coalesce("d_n", F.lit(0)).alias("s_del"),
             )
+            .write.mode("overwrite")
+            .parquet(f"{tmp}/state")
         )
-        artifacts.publish(
-            path,
-            fp_v2,
-            lambda tmp: v2.write.mode("overwrite").parquet(f"{tmp}/state"),
-            extra_meta={"cut": T2},
-        )
+
+    artifacts.publish(
+        path,
+        artifacts.source_fingerprint(
+            [os.path.join(sf_dir, "events.parquet")],
+            params=f"cdc_state_advance|cut={T2}",
+        ),
+        build,
+        extra_meta={"cut": T2},
+    )
     state = spark.read.parquet(f"{path}/state")
 
     # steady state: only the ops SINCE the stored cut are applied; the

@@ -14,7 +14,8 @@ import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -22,7 +23,7 @@ from elt_data4transformation_spark.operators import dedup_ops  # noqa: E402
 from elt_data4transformation_spark.plans import dedup as D  # noqa: E402
 from elt_data4transformation_spark.session import get_spark  # noqa: E402
 
-OUT = "/root/repo/plans/r11"
+OUT = os.path.join(REPO, "plans", "r11")
 
 
 def fmt(df) -> str:

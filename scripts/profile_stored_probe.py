@@ -16,7 +16,6 @@ Usage: python scripts/profile_stored_probe.py [sf_dir]
 
 from __future__ import annotations
 
-import os
 import sys
 import time
 
@@ -30,14 +29,13 @@ from elt_data4transformation_spark.sources.tables import (  # noqa: E402
     spread,
     table,
 )
-from elt_data4transformation_spark.operators import artifacts  # noqa: E402
 from elt_data4transformation_spark.operators import dedup_ops  # noqa: E402
 from elt_data4transformation_spark.plans.dedup import (  # noqa: E402
     DELTA_MOD,
     N_BANDS,
     N_MINHASH,
     SHINGLE,
-    _index_root,
+    _ensure_stored_index,
 )
 from elt_data4transformation_spark.functions import textfns as T  # noqa: E402
 
@@ -68,26 +66,10 @@ def main() -> None:
 
     out: dict[str, float] = {}
     d = table(spark, sf_dir, "documents")
-    is_delta = F.col("doc_id") % DELTA_MOD == 0
-    corpus = spread(d.filter(~is_delta))
-    delta = spread(d.filter(is_delta))
-    path = os.path.join(
-        _index_root(), os.path.basename(os.path.normpath(sf_dir))
-    )
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "documents.parquet")],
-        params=f"dedup_stored_index|corpus=doc_id%{DELTA_MOD}!=0"
-        f"|sh={SHINGLE}|mh={N_MINHASH}|bands={N_BANDS}",
-    )
+    delta = spread(d.filter(F.col("doc_id") % DELTA_MOD == 0))
     t = time.monotonic()
-    artifacts.publish(
-        path,
-        fp,
-        lambda tmp: dedup_ops.write_band_index(
-            corpus, tmp, id_col="doc_id", text_col="text",
-            shingle=SHINGLE, n_hashes=N_MINHASH, n_bands=N_BANDS,
-        ),
-    )
+    # the query's own artifact (same path and fingerprint)
+    path = _ensure_stored_index(spark, sf_dir)
     t = mark("publish", t, out)
 
     # --- delta signature ---
