@@ -18,7 +18,10 @@ postgres.py:1160-1239). Two lifecycle hazards this module closes:
    I/O. Any edit rewrites a file, changing size/mtime_ns → mismatch →
    rebuild. This is the single-node moral of versioning by table
    snapshot id / ingest watermark (Delta, Iceberg), which is what a
-   cluster deployment keys on.
+   cluster deployment keys on. The same stat fingerprint also keys
+   schema reuse: ``sources.tables.read_parquet`` infers each parquet
+   schema once per file state and reuses it while the fingerprint of
+   the path holds.
 
 2. **Partial / concurrent builds.** Builders write into a unique temp
    directory beside the final path; the ``_ARTIFACT_META.json``

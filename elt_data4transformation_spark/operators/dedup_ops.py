@@ -28,6 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import textfns as T
+from ..sources import read_parquet
 
 
 def jaccard_pairs(
@@ -583,9 +584,9 @@ def _index_segments(index_path: str) -> tuple[list[str], list[str]]:
 
 
 def _read_segments(spark, dirs: list[str]) -> DataFrame:
-    out = spark.read.parquet(dirs[0])
+    out = read_parquet(spark, dirs[0])
     for d in dirs[1:]:
-        out = out.unionByName(spark.read.parquet(d))
+        out = out.unionByName(read_parquet(spark, d))
     return out
 
 

@@ -19,6 +19,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import read_parquet
+
 # --- JVM-side fold expressions (small-candidate-set path) -----------------
 
 
@@ -317,9 +319,9 @@ def read_ivf_index(spark, index_path: str) -> DataFrame:
     one multi-root read() call makes partition discovery guess a
     common base path."""
     dirs = ivf_index_dirs(index_path)
-    out = spark.read.parquet(dirs[0])
+    out = read_parquet(spark, dirs[0])
     for d in dirs[1:]:
-        out = out.unionByName(spark.read.parquet(d))
+        out = out.unionByName(read_parquet(spark, d))
     return out
 
 
@@ -331,8 +333,8 @@ def ivf_segment_fraction(spark, index_path: str) -> float:
     decays silently. Row counts come from parquet metadata (footer
     row-group counts — no data scan)."""
     dirs = ivf_index_dirs(index_path)
-    base = spark.read.parquet(dirs[0]).count()
-    seg = sum(spark.read.parquet(d).count() for d in dirs[1:])
+    base = read_parquet(spark, dirs[0]).count()
+    seg = sum(read_parquet(spark, d).count() for d in dirs[1:])
     total = base + seg
     return (seg / total) if total else 0.0
 
@@ -380,9 +382,9 @@ def read_ivf_tombstones(spark, index_path: str) -> DataFrame | None:
     dirs = ivf_tombstone_dirs(index_path)
     if not dirs:
         return None
-    out = spark.read.parquet(dirs[0])
+    out = read_parquet(spark, dirs[0])
     for d in dirs[1:]:
-        out = out.unionByName(spark.read.parquet(d))
+        out = out.unionByName(read_parquet(spark, d))
     return out.distinct()
 
 
@@ -408,7 +410,7 @@ def compact_ivf_index(spark, index_path: str) -> bool:
     dels = read_ivf_tombstones(spark, index_path)
     if dels is not None:
         idx = idx.join(F.broadcast(dels), "vec_id", "left_anti")
-    cent = spark.read.parquet(f"{index_path}/centroids")
+    cent = read_parquet(spark, f"{index_path}/centroids")
 
     def build(tmp: str) -> None:
         cent.write.mode("overwrite").parquet(f"{tmp}/centroids")
@@ -448,7 +450,7 @@ def retrain_ivf_index(spark, index_path: str, iters: int = 3) -> None:
     if dels is not None:
         vecs = vecs.join(F.broadcast(dels), "vec_id", "left_anti")
     vecs = vecs.localCheckpoint(eager=True)  # iterated consumer: cut re-reads
-    cent = spark.read.parquet(f"{index_path}/centroids")
+    cent = read_parquet(spark, f"{index_path}/centroids")
     for _ in range(iters):
         assigned = assign_nearest(vecs, cent).drop("cos")
         cent = (
@@ -550,7 +552,7 @@ def split_wide_clusters(
     dels = read_ivf_tombstones(spark, index_path)
     if dels is not None:
         idx = idx.join(F.broadcast(dels), "vec_id", "left_anti")
-    cent = spark.read.parquet(f"{index_path}/centroids")
+    cent = read_parquet(spark, f"{index_path}/centroids")
 
     n = idx.count()
     k = cent.count()
@@ -727,12 +729,12 @@ def split_until_bounded(
     compaction step of a maintenance cycle, not per ingest."""
     total = 0
     for _ in range(max_passes):
-        k_before = spark.read.parquet(f"{index_path}/centroids").count()
+        k_before = read_parquet(spark, f"{index_path}/centroids").count()
         n = split_wide_clusters(spark, index_path, max_width=max_width)
         if n == 0:
             break
         total += n
-        k_after = spark.read.parquet(f"{index_path}/centroids").count()
+        k_after = read_parquet(spark, f"{index_path}/centroids").count()
         if k_after == k_before:
             break
     return total

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions import textfns as T
 from ..operators import artifacts, dedup_ops, vectors
-from ..sources import spread, table
+from ..sources import read_parquet, spread, table
 from .registry import register
 
 N_MINHASH = 8
@@ -346,7 +346,9 @@ def _source_overlap_oracle() -> str:
     "double-count it. Cost over dedup_minhash_lsh: two dimension joins "
     "(doc -> source, broadcast at any realistic source cardinality) "
     "and one tiny aggregate; the jaccard is a ratio of exact set "
-    "sizes rounded before AVG on both engines.",
+    "sizes rounded before AVG on both engines; the Spark mean sums "
+    "each cell in ascending order, so it does not depend on arrival "
+    "order.",
 )
 def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(table(spark, sf_dir, "documents"))
@@ -381,11 +383,24 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "jac",
         )
     )
+    # the mean sums the cell's doubles in one fixed (ascending) order: a
+    # plain AVG sums them in arrival order, and on a .5e-6 tie the last
+    # bit of that sum decides which way ROUND goes
     return (
         lab.groupBy("source_a", "source_b")
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
-            F.round(F.avg("jac"), 6).alias("avg_jaccard"),
+            F.array_sort(F.collect_list("jac")).alias("_jacs"),
+        )
+        .select(
+            "source_a",
+            "source_b",
+            "n_pairs",
+            F.round(
+                F.aggregate("_jacs", F.lit(0.0), lambda acc, j: acc + j)
+                / F.col("n_pairs"),
+                6,
+            ).alias("avg_jaccard"),
         )
         .orderBy("source_a", "source_b")
     )
@@ -653,7 +668,7 @@ def _srp_band_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     artifacts.publish(store, fp, build)
-    return spark.read.parquet(f"{store}/bands")
+    return read_parquet(spark, f"{store}/bands")
 
 
 def _srp_oracle() -> str:
@@ -1276,8 +1291,8 @@ def _stored_delta_sig(
     if mod_class is not None:
         pred = F.col("doc_mod") == mod_class
     return (
-        spark.read.parquet(f"{store}/shingles").filter(pred),
-        spark.read.parquet(f"{store}/bands").filter(pred),
+        read_parquet(spark, f"{store}/shingles").filter(pred),
+        read_parquet(spark, f"{store}/bands").filter(pred),
     )
 
 
@@ -1806,8 +1821,8 @@ def _register_decon_fuzzy() -> None:
     ) -> DataFrame:
         store = _sigstore(spark, sf_dir)
         bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-        bands = spark.read.parquet(f"{store}/bands")
-        sh = spark.read.parquet(f"{store}/shingles")
+        bands = read_parquet(spark, f"{store}/bands")
+        sh = read_parquet(spark, f"{store}/shingles")
         scored = dedup_ops.probe_band_index(
             spark,
             store,
@@ -1956,10 +1971,10 @@ def _register_stream_decon() -> None:
         # materializes the cache while doing its own work
         from pyspark import StorageLevel
 
-        bands = spark.read.parquet(f"{store}/bands").persist(
+        bands = read_parquet(spark, f"{store}/bands").persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        sh = spark.read.parquet(f"{store}/shingles").persist(
+        sh = read_parquet(spark, f"{store}/shingles").persist(
             StorageLevel.MEMORY_AND_DISK
         )
         # the FIXED eval-set index: test-split slices of the store
@@ -2199,8 +2214,8 @@ def stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # long-lived production loop SHOULD pin its index view after a
         # few drains — stream_decontaminate / stream_ivf_ingest keep
         # that persist pattern.
-        base_bands = spark.read.parquet(f"{idx}/bands")
-        base_sh = spark.read.parquet(f"{idx}/shingles")
+        base_bands = read_parquet(spark, f"{idx}/bands")
+        base_sh = read_parquet(spark, f"{idx}/shingles")
         state = {
             "expected": 0,
             # source-tagged band view for the fused probe (round 11):
@@ -2455,7 +2470,7 @@ def stream_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rows visible only to later tags (_vis=1) — the flattened form of
     # the loop's merge-before-next-probe ordering
     idx_bands = (
-        spark.read.parquet(f"{base_idx}/bands")
+        read_parquet(spark, f"{base_idx}/bands")
         .select("doc_id", "band_idx", "band_key", F.lit(0).alias("_vis"))
         .unionByName(
             sig.filter(tag == 0).select(
@@ -2487,7 +2502,7 @@ def stream_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rescore side: base shingles ∪ batch 0's (candidate visibility was
     # already enforced at the band stage, so the union is join-safe)
     idx_sh = (
-        spark.read.parquet(f"{base_idx}/shingles")
+        read_parquet(spark, f"{base_idx}/shingles")
         .select("doc_id", "n_sh", "sh_hash")
         .unionByName(
             sig.filter(tag == 0).select("doc_id", "n_sh", "sh_hash")
@@ -2629,7 +2644,7 @@ def _ensure_winnow_store(spark: SparkSession, sf_dir: str) -> str:
                 _WSUB_M,
             )
         ).write.mode("overwrite").parquet(f"{tmp}/anchors")
-        a = spark.read.parquet(f"{tmp}/anchors")
+        a = read_parquet(spark, f"{tmp}/anchors")
         shared_fp = (
             a.groupBy("fp_hash")
             .agg(F.min("doc_id").alias("_a"), F.max("doc_id").alias("_b"))
@@ -2651,15 +2666,15 @@ def _ensure_winnow_store(spark: SparkSession, sf_dir: str) -> str:
 
 def _winnow_anchor_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored winnow anchor table (see _ensure_winnow_store)."""
-    return spark.read.parquet(
-        f"{_ensure_winnow_store(spark, sf_dir)}/anchors"
+    return read_parquet(
+        spark, f"{_ensure_winnow_store(spark, sf_dir)}/anchors"
     )
 
 
 def _winnow_shared_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stored anchor-sharing doc_id set (see _ensure_winnow_store)."""
-    return spark.read.parquet(
-        f"{_ensure_winnow_store(spark, sf_dir)}/shared_docs"
+    return read_parquet(
+        spark, f"{_ensure_winnow_store(spark, sf_dir)}/shared_docs"
     )
 
 
@@ -3133,8 +3148,8 @@ def _prep_winnow_delete(spark: SparkSession, sf_dir: str) -> None:
 )
 def substring_winnow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     K = _WSUB_K
-    tomb = spark.read.parquet(
-        f"{_ensure_winnow_delete_store(spark, sf_dir)}/tombstones"
+    tomb = read_parquet(
+        spark, f"{_ensure_winnow_delete_store(spark, sf_dir)}/tombstones"
     )
     anchors = _winnow_anchor_store(spark, sf_dir).join(
         tomb, "doc_id", "left_anti"
@@ -3281,8 +3296,8 @@ def _ensure_winnow_maintain_store(spark: SparkSession, sf_dir: str) -> str:
 def substring_winnow_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     K = _WSUB_K
     path = _ensure_winnow_maintain_store(spark, sf_dir)
-    base = spark.read.parquet(f"{path}/anchors")
-    delta = spark.read.parquet(f"{path}/anchors_delta")
+    base = read_parquet(spark, f"{path}/anchors")
+    delta = read_parquet(spark, f"{path}/anchors_delta")
     # batch-internal sharing: min != max <=> two distinct delta docs
     # hold the fp (single-phase partial agg, same rewrite as the
     # winnowed query)
@@ -3346,8 +3361,8 @@ def _ensure_winnow_compact_store(spark: SparkSession, sf_dir: str) -> str:
 
     def build(tmp: str) -> None:
         mpath = _ensure_winnow_maintain_store(spark, sf_dir)
-        base = spark.read.parquet(f"{mpath}/anchors")
-        delta = spark.read.parquet(f"{mpath}/anchors_delta")
+        base = read_parquet(spark, f"{mpath}/anchors")
+        delta = read_parquet(spark, f"{mpath}/anchors_delta")
         tomb = (
             table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 10 == 7)
@@ -3418,7 +3433,7 @@ def _ensure_winnow_compact_store(spark: SparkSession, sf_dir: str) -> str:
 def substring_winnow_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     K = _WSUB_K
     path = _ensure_winnow_compact_store(spark, sf_dir)
-    anchors = spark.read.parquet(f"{path}/anchors")
+    anchors = read_parquet(spark, f"{path}/anchors")
     delta = anchors.filter(F.col("doc_id") % DELTA_MOD == 0)
     base = anchors.filter(F.col("doc_id") % DELTA_MOD != 0)
     intra = (

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.artifacts import CheckedThread
-from ..sources import table
+from ..sources import read_parquet, table
 from .registry import register
 
 _NATION_SCHEMA = "n_nationkey long, n_name string, n_regionkey long"
@@ -193,7 +193,7 @@ def partitioned_events_path(sf_dir: str) -> str:
 
 def pruned_events_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The filtered scan alone (tests assert PartitionFilters on it)."""
-    return spark.read.parquet(partitioned_events_path(sf_dir)).filter(
+    return read_parquet(spark, partitioned_events_path(sf_dir)).filter(
         F.col("day") >= F.lit(_PRUNE_FROM).cast("date")
     )
 
@@ -635,9 +635,9 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
     small, packed = os.path.join(base, "small"), os.path.join(base, "packed")
     d.repartition(_COMPACT_SMALL).write.mode("overwrite").parquet(small)
-    sm = spark.read.parquet(small)
+    sm = read_parquet(spark, small)
     sm.repartition(_COMPACT_TARGET).write.mode("overwrite").parquet(packed)
-    pk = spark.read.parquet(packed)
+    pk = read_parquet(spark, packed)
     def n_files(df: DataFrame, name: str) -> DataFrame:
         # project the (non-deterministic) file name first, then count —
         # input_file_name() can't sit inside the aggregate itself

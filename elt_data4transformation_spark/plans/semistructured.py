@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions import parsing
 from ..operators import cubefile, jsonstat, multimodal
-from ..sources import spread, table
+from ..sources import read_parquet, spread, table
 from .registry import register
 
 _CUBE1 = json.dumps(
@@ -1434,7 +1434,7 @@ def image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # perceptual fingerprints are derived when an image is INGESTED
     # and stored beside it (see _dhash_store; same contract as the
     # text signature store and the SRP band store)
-    keys = spark.read.parquet(_dhash_store(spark, sf_dir)).persist(
+    keys = read_parquet(spark, _dhash_store(spark, sf_dir)).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     keys.count()  # eager: band melt + both key joins read the cache
@@ -1594,7 +1594,7 @@ def video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pooled frame-dHash keys from the STORED fingerprint artifact
     # (container decode + per-frame hashing at publication; see
     # _fingerprint_store)
-    keys = spark.read.parquet(_vid_store(spark, sf_dir)).persist(
+    keys = read_parquet(spark, _vid_store(spark, sf_dir)).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     keys.count()  # eager: band melt + both key joins read the cache
@@ -1831,7 +1831,7 @@ def audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # energy-gradient fingerprints from the STORED artifact (WAV
     # decode + hashing at publication; see _fingerprint_store)
-    keys = spark.read.parquet(_afp_store(spark, sf_dir)).persist(
+    keys = read_parquet(spark, _afp_store(spark, sf_dir)).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     keys.count()  # eager: band melt + both key joins read the cache

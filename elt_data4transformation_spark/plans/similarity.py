@@ -20,7 +20,7 @@ from ..operators.vectors import (
     cosine_col,
     cosine_sql,
 )
-from ..sources import spread, table
+from ..sources import read_parquet, spread, table
 from .dedup import _artifact_path, _ensure_stream_fixture
 from .registry import register
 
@@ -440,7 +440,7 @@ def _ensure_stream_ivf_src(spark: SparkSession, sf_dir: str) -> str:
 
     def build(tmp: str) -> None:
         base_idx = _ensure_stream_ivf_base(spark, sf_dir)
-        cent = spark.read.parquet(f"{base_idx}/centroids")
+        cent = read_parquet(spark, f"{base_idx}/centroids")
         both = assign_nearest(
             _vectors(spark, sf_dir)
             .filter(F.col("vec_id") % 5 <= 1)
@@ -489,7 +489,7 @@ def _prep_stream_ivf_base(spark: SparkSession, sf_dir: str) -> None:
 )
 def ann_stored_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_stored_ivf(spark, sf_dir)
-    idx = spark.read.parquet(f"{path}/index")
+    idx = read_parquet(spark, f"{path}/index")
     q = idx.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -789,7 +789,7 @@ def _ensure_maintained_ivf(spark: SparkSession, sf_dir: str, name: str) -> str:
     def ingest() -> None:
         # assign new vectors to the FROZEN stored centroids and append
         # them as a segment
-        cent = spark.read.parquet(f"{path}/centroids")
+        cent = read_parquet(spark, f"{path}/centroids")
         assign_nearest(
             e.filter(F.col("vec_id") % 5 == 0).select("vec_id", "v"), cent
         ).drop("cos").select("vec_id", "v", "centroid_id").write.mode(
@@ -1147,7 +1147,7 @@ def _ensure_split_ivf(spark: SparkSession, sf_dir: str) -> str:
 )
 def ann_ivf_split_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_split_ivf(spark, sf_dir)
-    kc = spark.read.parquet(f"{path}/centroids").count()
+    kc = read_parquet(spark, f"{path}/centroids").count()
     return _probe_ivf_index(spark, path).withColumn(
         "n_centroids", F.lit(kc).cast("long")
     )
@@ -1226,8 +1226,8 @@ def _ivf_split_nprobe_oracle() -> str:
 )
 def ann_ivf_split_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_split_ivf(spark, sf_dir)
-    idx = spark.read.parquet(f"{path}/index")
-    cent = spark.read.parquet(f"{path}/centroids")
+    idx = read_parquet(spark, f"{path}/index")
+    cent = read_parquet(spark, f"{path}/centroids")
     qv = idx.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
@@ -1498,7 +1498,7 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         src = _ensure_stream_ivf_src(spark, sf_dir)
 
         results = os.path.join(work, "probes")
-        base_index = spark.read.parquet(f"{idx}/index").persist(
+        base_index = read_parquet(spark, f"{idx}/index").persist(
             StorageLevel.MEMORY_AND_DISK
         )
         state = {

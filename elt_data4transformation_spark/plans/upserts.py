@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
 from ..operators import artifacts, upsert
-from ..sources import table
+from ..sources import read_parquet, table
 from .registry import register
 
 T1 = "2024-01-15 00:00:00"
@@ -711,7 +711,7 @@ def cdc_stored_state_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(f"{tmp}/state"),
     )
-    base_agg = spark.read.parquet(f"{path}/state")
+    base_agg = read_parquet(spark, f"{path}/state")
 
     inserts = post.filter(F.col("event_id") % 10 != 0)
     del_req = post.filter(F.col("event_id") % 10 == 0).select(
@@ -915,7 +915,7 @@ def cdc_state_advance(spark: SparkSession, sf_dir: str) -> DataFrame:
         build,
         extra_meta={"cut": T2},
     )
-    state = spark.read.parquet(f"{path}/state")
+    state = read_parquet(spark, f"{path}/state")
 
     # steady state: only the ops SINCE the stored cut are applied; the
     # delete fetch joins live2 (base ∪ ins1 ∪ ins2) — a point lookup

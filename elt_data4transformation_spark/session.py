@@ -70,6 +70,8 @@ def get_spark(
         # concern, not a scale parameter.
         .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
+        # keep stderr for log lines, not `[Stage N:>` progress bars
+        .config("spark.ui.showConsoleProgress", "false")
     )
     # Optional JVM-flag passthrough (round 11): lets GC/region-geometry
     # experiments run as session-shaped A/B (the ParallelGC lesson:

@@ -1,3 +1,17 @@
-from .tables import TABLES, load_tables, spread, table
+from .tables import (
+    TABLES,
+    load_tables,
+    parquet_schema,
+    read_parquet,
+    spread,
+    table,
+)
 
-__all__ = ["TABLES", "load_tables", "spread", "table"]
+__all__ = [
+    "TABLES",
+    "load_tables",
+    "parquet_schema",
+    "read_parquet",
+    "spread",
+    "table",
+]

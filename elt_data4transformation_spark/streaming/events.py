@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
+from ..sources import parquet_schema, read_parquet
+
 _COUNTER = itertools.count()
 
 # StreamingQueryProgress state metrics of the most recent
@@ -58,7 +60,7 @@ def read_events_stream(
     table_path = os.path.join(sf_dir, glob)
     as_dir = "*" not in glob and os.path.isdir(table_path)
     schema = (
-        spark.read.parquet(table_path).schema
+        parquet_schema(spark, table_path)
         if as_dir
         else _events_schema(spark, sf_dir, glob)
     )
@@ -457,7 +459,7 @@ def stream_upsert_materialized(
             F.max("ts").alias("last_ts"),
         )
         if latest["v"] >= 0:
-            cur = spark.read.parquet(f"{state_root}/v{latest['v']}")
+            cur = read_parquet(spark, f"{state_root}/v{latest['v']}")
             merged = (
                 cur.unionByName(part)
                 .groupBy("event_type")
@@ -482,7 +484,7 @@ def stream_upsert_materialized(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(f"{state_root}/v{latest['v']}")
+    return read_parquet(spark, f"{state_root}/v{latest['v']}")
 
 
 def stream_stream_view_purchase(
