@@ -866,11 +866,11 @@ def ingest_band_index_fused(
     caller's accumulated shingle view (fetch-by-matched-id — needs no
     source tag; candidates are already visibility-gated).
 
-    Precondition: ``ready`` is non-empty, and tags strictly increase
-    and are never reused across drains of one view — a reused tag
-    would let the ``_vsrc < _ptag`` gate hide an earlier merged
-    segment (silent under-matching) and its ``bands_ingest_{tag}``
-    write would overwrite that segment.
+    Precondition, checked on the Python tags (no job): ``ready`` is
+    non-empty, and its tags strictly increase past every src tag in
+    ``idx_bands_src`` — a reused tag would let the ``_vsrc < _ptag``
+    gate hide an earlier merged segment (silent under-matching) and
+    its ``bands_ingest_{tag}`` write would overwrite that segment.
 
     Returns ``(scored, per_tag)``; per_tag rows are
     ``(tag, merge_fn, seg_bands, seg_sh, release_fn)`` with the same
@@ -879,6 +879,14 @@ def ingest_band_index_fused(
     segment is durable and the in-memory view is re-pointed)."""
     if not ready:
         raise ValueError("ingest_band_index_fused: no ready tags to drain")
+    prior = max(int(src) for src, _ in idx_bands_src)
+    for tag, _ in ready:
+        if int(tag) <= prior:
+            raise ValueError(
+                f"ingest_band_index_fused: tag {tag} is not greater than "
+                f"tag {prior} already in the view"
+            )
+        prior = int(tag)
     dbands_parts: list[DataFrame] = []
     dsh_parts: list[DataFrame] = []
     per_tag = []

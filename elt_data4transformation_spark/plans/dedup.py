@@ -15,6 +15,7 @@ construction (md5).
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -22,6 +23,7 @@ from pyspark.sql import functions as F
 from ..functions import textfns as T
 from ..operators import artifacts, dedup_ops, vectors
 from ..sources import read_parquet, spread, table
+from ..streaming.loop import drain_in_tag_order, ingest_run_root, run_available_now
 from .registry import register
 
 N_MINHASH = 8
@@ -1218,29 +1220,11 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = narrow.filter(
         F.col("_i") * 2 >= F.col("_na") + F.col("_nb") - F.col("_i")
     ).withColumn(
-        "jac",
+        "jaccard_raw",
         F.col("_i").cast("double")
         / (F.col("_na") + F.col("_nb") - F.col("_i")),
     )
-    # best-match as a max_by aggregate (no per-group sort, map-side
-    # partial aggregation): key (jac, -matched) reproduces the former
-    # window's (jac DESC, matched ASC) tie-break exactly — jac is a
-    # ratio of positive ints, never NULL
-    best_key = F.struct(F.col("jac"), (-F.col("matched_doc_id")).cast("long"))
-    pay = F.struct(
-        F.col("matched_doc_id").alias("matched_doc_id"),
-        F.col("jac").alias("jac"),
-    )
-    return (
-        scored.groupBy("new_doc_id")
-        .agg(F.max_by(pay, best_key).alias("_b"))
-        .select(
-            "new_doc_id",
-            F.col("_b.matched_doc_id").alias("matched_doc_id"),
-            F.round("_b.jac", 6).alias("jaccard"),
-        )
-        .orderBy("new_doc_id")
-    )
+    return _probe_best(scored).orderBy("new_doc_id")
 
 
 def _probe_best(scored: DataFrame, *group_cols: str) -> DataFrame:
@@ -1938,8 +1922,8 @@ def _register_stream_decon() -> None:
         doc="STREAMING test-set leakage guard — decontamination moved "
         "to where a production pipeline actually needs it: the ingest "
         "path. Train-candidate documents arrive as file micro-batches "
-        "(readStream, availableNow — no per-file trigger cap since "
-        "round 11: the fixed index makes batching invisible); inside "
+        "(readStream, availableNow, no per-file trigger cap: the "
+        "fixed index makes batching invisible); inside "
         "foreachBatch each batch's STORED signatures (signature "
         "store, zero re-shingling) probe the FIXED eval-set fuzzy "
         "index (the test split's band keys — small by construction, "
@@ -1959,16 +1943,13 @@ def _register_stream_decon() -> None:
         "harness.py:52-151) guarded at ingest (main.py ingest loop).",
     )
     def stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import shutil
-        import tempfile
-
         store = _sigstore(spark, sf_dir)
         bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
         # the store frames are read ONCE and cached for the whole loop
-        # (three micro-batches each slice the same frames — without the
-        # cache every batch re-scans the shingle store's wide arrays);
-        # no eager count: the drains run sequentially, the first probe
-        # materializes the cache while doing its own work
+        # (every micro-batch slices the same frames — without the cache
+        # each batch re-scans the shingle store's wide arrays); no eager
+        # count: the first probe materializes the cache while doing its
+        # own work
         from pyspark import StorageLevel
 
         bands = read_parquet(spark, f"{store}/bands").persist(
@@ -1980,16 +1961,13 @@ def _register_stream_decon() -> None:
         # the FIXED eval-set index: test-split slices of the store
         test_bands = bands.filter(bucket >= _SPLIT_VAL_MAX)
         test_sh = sh.filter(bucket >= _SPLIT_VAL_MAX)
-        # two arrival files -> two micro-batches, matching the ingest
-        # loop's 2-tag fixture convention (any split works: the fixed
-        # index makes batching invisible — the oracle is the one-shot
-        # batch query either way). The files are a published immutable
-        # artifact (_ensure_decon_src, prepare-hook untimed), not a
-        # per-run rewrite.
+        # the arrival files are a published immutable artifact
+        # (_ensure_decon_src, prepare-hook untimed), not a per-run
+        # rewrite
         src = _ensure_decon_src(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="stream_decon_")
+        work = tempfile.TemporaryDirectory(prefix="stream_decon_")
         try:
-            log = os.path.join(work, "log")
+            log = os.path.join(work.name, "log")
 
             def guard(batch_df: DataFrame, _batch_id: int) -> None:
                 batch_ids = batch_df.select("doc_id")
@@ -2005,8 +1983,6 @@ def _register_stream_decon() -> None:
                     idx_bands=test_bands,
                     idx_sh=test_sh,
                 )
-                # best match as a max_by partial aggregate (round 11 —
-                # _probe_best; same rows/tie-break as the old window)
                 hit = _probe_best(scored)
                 (
                     batch_ids.join(
@@ -2024,29 +2000,19 @@ def _register_stream_decon() -> None:
                         F.col("matched_doc_id").alias("test_doc_id"),
                         "jaccard",
                     )
-                    # no coalesce(1): one-task writes serialize the
-                    # upstream join + window too (round 9)
+                    # no coalesce(1): a one-task write would
+                    # serialize the upstream join too
                     .write.mode("append")
                     .parquet(log)
                 )
 
-            # no maxFilesPerTrigger cap (round 11): the index is FIXED
-            # and probes are pure per-doc functions, so batching is
-            # invisible to results (the doc above already declares
-            # this) — availableNow then probes every pending arrival
-            # in ONE trigger + ONE append instead of one per file,
-            # removing stream lifecycle only.
-            q = (
-                spark.readStream.schema("doc_id long")
-                .parquet(src)
-                .writeStream.foreachBatch(guard)
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
+            # no maxFilesPerTrigger cap: probes are pure per-doc
+            # functions of a fixed index, so batching is invisible to
+            # results and every pending arrival is probed in one
+            # trigger and one append
+            run_available_now(
+                spark.readStream.schema("doc_id long").parquet(src), guard
             )
-            q.awaitTermination()
             out_schema = (
                 "doc_id long, status string, test_doc_id long, "
                 "jaccard double"
@@ -2061,7 +2027,7 @@ def _register_stream_decon() -> None:
         finally:
             bands.unpersist()
             sh.unpersist()
-            shutil.rmtree(work, ignore_errors=True)
+            work.cleanup()
 
 
 _register_stream_decon()
@@ -2138,285 +2104,121 @@ def _stream_ingest_oracle() -> str:
     prepare=_prep_stream_base,
     doc="The INGEST LOOP as a real Structured Streaming job — the "
     "composition the stored-index family builds toward: document "
-    "batches arrive as files (readStream, availableNow — round 11: "
-    "no maxFilesPerTrigger cap, so co-arriving files share one "
-    "trigger and one probe pass; the sequencer below still handles "
+    "batches arrive as files (readStream, availableNow, no "
+    "maxFilesPerTrigger cap, so co-arriving files share one "
+    "trigger and one probe pass; the sequencer still handles "
     "split arrivals); inside foreachBatch each batch is probed against "
     "the STORED band index and then MERGED into it "
     "(merge_band_index segment + meta stamp), so every batch dedups "
     "against the corpus AND all earlier batches — streaming "
     "dedup_index_maintain. Out-of-order arrival is handled by an "
-    "EXECUTOR-BUFFERED sequencer (round 9; was a parquet spill "
-    "round-trip): a batch whose ingest tag is not next is pinned via "
+    "EXECUTOR-BUFFERED sequencer (streaming/loop.drain_in_tag_order, "
+    "shared with stream_ivf_ingest): a batch whose ingest tag is not "
+    "next is pinned via "
     "localCheckpoint(eager) — materialized in executor storage, "
     "lineage cut from the expiring micro-batch source — and drained "
     "when its turn comes, so results are deterministic REGARDLESS of "
     "file-source ordering (the production answer to commit-order vs "
-    "arrival-order; a lost executor loses the buffer and the restart "
-    "replays the batch from the checkpoint, same recovery as the "
-    "spill). Work per batch is delta-proportional; probe results "
+    "arrival-order; a lost executor fails the run, and every run "
+    "re-streams all arrivals from a fresh checkpoint). Work per batch "
+    "is delta-proportional; probe results "
     "land in an append-only parquet log (batch_tag, new_doc_id, "
-    "matched_doc_id, jaccard) written at FULL PARALLELISM (round 9: "
-    "the per-drain coalesce(1) forced the rank window AND the write "
-    "through one task — a single-writer bottleneck at 100x ingest "
-    "rates; the log is now a normal partitioned append). Reference "
+    "matched_doc_id, jaccard) written at FULL PARALLELISM (no "
+    "per-drain coalesce(1), which would force the best-match pass "
+    "AND the write through one task). Reference "
     "analog: the per-run known-ID diff loop "
     "(main.py:80-85) + idempotent extending store "
     "(storage/postgres.py:1160-1239), fused and made streaming.",
 )
 def stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+    def tag_of(id_col: str):
+        # the fixture's ingest tag; tags own disjoint id sets
+        return (F.col(id_col) % DELTA_MOD).cast("int")
 
-    work = tempfile.mkdtemp(prefix="stream_index_ingest_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="stream_index_ingest_") as work:
         # the base corpus index is an IMMUTABLE stored artifact
-        # (fingerprinted, built once per corpus state — the run never
-        # mutates it; _ensure_stream_base, shared with bench prepare);
-        # each run gets a private index root with the base segments
-        # SYMLINKED in and its own ingest segments written beside
-        # them, so concurrent runs share one base and a run's merges
-        # stay run-scoped. At cluster scale the same split is
-        # base-index table + run-namespaced segment dirs.
-        base_idx = _ensure_stream_base(spark, sf_dir)
-        idx = os.path.join(work, "idx")
-        os.makedirs(idx)
-        for seg in ("bands", "shingles"):
-            os.symlink(
-                os.path.join(base_idx, seg), os.path.join(idx, seg)
-            )
-        artifacts.update_meta(idx, "run", {"ingests": []})
-
-        # fixture plumbing: the two ingest batch files (tag =
-        # doc_id % 5 in {0, 1}; tag 1 mtime-OLDER, exercising the
-        # sequencer whenever the source splits arrivals) are a
-        # published immutable artifact — built once per corpus state,
-        # consumed read-only by every run's fresh checkpoint (see
-        # _ensure_stream_fixture)
-        src = _ensure_stream_src(spark, sf_dir)
-
-        results = os.path.join(work, "probes")
-        # base index frames read from disk ONCE for the whole loop and
-        # cached; each merged batch's already-persisted segment frames
-        # are unioned in (write once, reference twice — the probe for
-        # batch N+1 never reads back the parquet segment batch N just
-        # wrote, and the base artifacts are scanned once, not per
-        # batch). The disk segments still exist and the meta still
-        # lists them — any LATER process probes the identical rows.
-        # NO executor cache of the base frames (round 9): populating a
-        # MEMORY_AND_DISK cache of the full band+shingle frames costs
-        # more than a probe's own parquet scan, and this loop drains
-        # exactly twice (the sequencer asserts it) — the first probe
-        # paid the cache build for a single reuse, measured ~+1 s cold
-        # per run at sf0.1. Each drain scans the (OS-page-cached)
-        # artifact directly; already-merged segments still come from
-        # the in-memory seg frames (write once, reference twice). A
-        # long-lived production loop SHOULD pin its index view after a
-        # few drains — stream_decontaminate / stream_ivf_ingest keep
-        # that persist pattern.
-        base_bands = read_parquet(spark, f"{idx}/bands")
-        base_sh = read_parquet(spark, f"{idx}/shingles")
-        state = {
-            "expected": 0,
-            # source-tagged band view for the fused probe (round 11):
-            # base at src -1, each merged segment appended at its tag —
-            # ingest_band_index_fused's _vsrc < _ptag gate rebuilds
-            # every tag's per-tag view from this one list
-            "bands_src": [(-1, base_bands)],
-            "sh": base_sh,
-            "merges": [],
-        }
-        out_schema = (
-            "batch_tag int, new_doc_id long, matched_doc_id long, "
-            "jaccard double"
+        # (fingerprinted, built once per corpus state, shared with bench
+        # prepare); the run merges into a private root beside it. At
+        # cluster scale the same split is base-index table +
+        # run-namespaced segment dirs.
+        idx = ingest_run_root(
+            work, _ensure_stream_base(spark, sf_dir), ("bands", "shingles")
         )
+        # the two ingest batch files (tag 1 mtime-OLDER, exercising the
+        # sequencer whenever the source splits arrivals) are a published
+        # immutable artifact (see _ensure_stream_src)
+        src = _ensure_stream_src(spark, sf_dir)
+        results = os.path.join(work, "probes")
+        # NO executor cache of the base frames: populating a
+        # MEMORY_AND_DISK cache of the full band+shingle frames costs
+        # more than a probe's own parquet scan, and this loop drains at
+        # most twice (measured ~+1 s cold per run at sf0.1). Each merged
+        # batch's already-persisted segment frames are unioned into the
+        # view instead (write once, reference twice — a later probe never
+        # reads back the segment an earlier drain just wrote). A
+        # long-lived loop should pin its view after a few drains.
+        #
+        # source-tagged band view for the fused probe: base at src -1,
+        # each merged segment appended at its tag — the _vsrc < _ptag
+        # gate of ingest_band_index_fused rebuilds every tag's view
+        bands_src = [(-1, read_parquet(spark, f"{idx}/bands"))]
+        sh = read_parquet(spark, f"{idx}/shingles")
 
-        def drain_ready(ready: list[tuple[int, DataFrame]]) -> None:
-            # ONE FUSED probe pass and ONE sink append for every tag
-            # that is ready in this micro-batch (round 11, verdict ask
-            # #1 in two steps: first the per-tag drains were folded
-            # into one union action — one write commit, tag 1's tasks
-            # backfilling tag 0's tail, guide §2.6 — then the union of
-            # two per-tag probe PLANS, which still scanned the base
-            # band/shingle artifacts once per tag inside the one job,
-            # was fused into a single source-gated pass:
-            # ingest_band_index_fused tags every index row with its
-            # source (_vsrc: base -1, segment = its tag) and every
-            # probe band with its batch tag, and the _vsrc < _ptag
-            # gate reproduces each tag's probe-sees-only-prior-state
-            # view exactly — base scanned ONCE per drain, one plan
-            # build instead of one per tag, guide §2.3/§2.4. Tags own
-            # disjoint new_doc_id sets (doc_id % DELTA_MOD == tag), so
-            # batch_tag is recovered from new_doc_id and the
-            # per-(batch_tag, new_doc_id) best-match aggregate returns
-            # the same rows as per-tag aggregates.
-            #
-            # presigned ingest: the arriving batch CARRIES its
-            # signatures (computed once by the upstream writer — see
-            # _ensure_stream_src), so the loop's per-batch work is
-            # probe + persist only, zero hashing. The APPEND below
-            # lands the probe log in the sink table AND materializes
-            # every probe BEFORE any merge() adds its segment — order
-            # preserved; the log never touches driver memory, so a
-            # 100 TB ingest loop's match volume is bounded by the
-            # sink, not the driver heap.
-            if not ready:
-                return
+        def drain(ready):
+            nonlocal sh
+            # ONE fused probe pass and ONE sink append for every ready
+            # tag. The arriving batch carries its signatures (presigned
+            # upstream), so a drain is probe + persist only. The append
+            # materializes every probe BEFORE any segment write starts,
+            # and the log never touches driver memory.
             scored, per_tag = dedup_ops.ingest_band_index_fused(
                 spark,
                 idx,
                 ready,
-                idx_bands_src=state["bands_src"],
-                idx_sh=state["sh"],
+                idx_bands_src=bands_src,
+                idx_sh=sh,
                 threshold=0.5,
                 id_col="doc_id",
             )
-            new_merges = []
-            for tag, merge, seg_bands, seg_sh, release in per_tag:
-                new_merges.append((str(tag), merge, release))
-                state["bands_src"].append((tag, seg_bands))
-                state["sh"] = state["sh"].unionByName(seg_sh)
-            un = scored.select(
-                (F.col("new_doc_id") % DELTA_MOD)
-                .cast("int")
-                .alias("batch_tag"),
-                "new_doc_id",
-                "matched_doc_id",
-                "jaccard_raw",
-            )
+            for tag, _merge, seg_bands, seg_sh, _release in per_tag:
+                bands_src.append((tag, seg_bands))
+                sh = sh.unionByName(seg_sh)
             (
-                # best match as a max_by partial aggregate (round 11 —
-                # _probe_best, grouped by (batch_tag, new_doc_id);
-                # tags own disjoint id sets so rows equal the per-tag
-                # windows)
-                _probe_best(un, "batch_tag")
-                # no coalesce(1): it collapsed the best-match pass AND
-                # the file write into ONE task per drain — the log is
-                # an audit trail, small-file count is irrelevant next
-                # to a serialized writer at 100x ingest rates (round 9)
+                _probe_best(
+                    scored.select(
+                        tag_of("new_doc_id").alias("batch_tag"),
+                        "new_doc_id",
+                        "matched_doc_id",
+                        "jaccard_raw",
+                    ),
+                    "batch_tag",
+                )
+                # no coalesce(1): a one-task write would serialize the
+                # best-match pass too
                 .write.mode("append")
                 .parquet(results)
             )
-            # the probes are materialized (append above) and the
-            # segment frames are hot in the cache, so the DISK writes
-            # of ALL ready segments run concurrently on threads and
-            # overlap the loop's tail (meta stamps, log read-back) —
-            # the batched segment-durability half of verdict ask #1.
-            # Crash invariant unchanged: the meta listing a segment is
-            # stamped only after its write thread JOINS (below) — and
-            # CheckedThread re-raises a failed write at join(), so a
-            # failed segment can never be stamped (same surface as the
-            # synchronous path's raise-before-stamp).
-            for tag, merge, release in new_merges:
-                th = artifacts.CheckedThread(target=merge)
-                th.start()
-                state["merges"].append((tag, th, release))
+            return [(tag, merge, release) for tag, merge, _b, _s, release in per_tag]
 
-        buffered: dict[int, DataFrame] = {}
-
-        def sink(batch_df: DataFrame, _batch_id: int) -> None:
-            # tag discovery: ONE narrow agg job (min/max/countDistinct
-            # over a pure row function; the round-8 shape paid a
-            # separate distinct().collect() action); a single-tag
-            # batch then drains the WHOLE live batch with no per-tag
-            # filter pass
-            lo, hi, nt = batch_df.agg(
-                F.min(F.col("doc_id") % DELTA_MOD),
-                F.max(F.col("doc_id") % DELTA_MOD),
-                F.countDistinct(F.col("doc_id") % DELTA_MOD),
-            ).first()
-            if lo is None:
-                return  # empty micro-batch
-            if lo == hi:
-                tags = [lo]
-            elif nt == hi - lo + 1:
-                # contiguous tag set (the uncapped availableNow batch:
-                # every pending file in one trigger) — the one
-                # discovery agg already names every tag, no second
-                # collect job (round 11)
-                tags = list(range(lo, hi + 1))
-            else:
-                # sparse multi-tag batch: exact discovery
-                tags = sorted(
-                    r["_t"]
-                    for r in batch_df.select(
-                        (F.col("doc_id") % DELTA_MOD).alias("_t")
-                    )
-                    .distinct()
-                    .collect()
-                )
-            ready: list[tuple[int, DataFrame]] = []
-            for t in tags:
-                part = (
-                    batch_df
-                    if lo == hi
-                    else batch_df.filter(F.col("doc_id") % DELTA_MOD == t)
-                )
-                if t == state["expected"]:
-                    # in-order arrival: drain straight from the live
-                    # micro-batch — no buffering
-                    ready.append((t, part))
-                    state["expected"] += 1
-                elif t > state["expected"]:
-                    # out-of-order ACROSS micro-batches: pin in
-                    # executor storage with the lineage cut (the
-                    # micro-batch source expires when this callback
-                    # returns); one job, like the old parquet spill's
-                    # write, but the drain later reads memory instead
-                    # of re-reading files. Within one multi-tag batch
-                    # the sorted tag loop already sequences, so this
-                    # path fires only when the source splits arrivals
-                    # (a maxFilesPerTrigger cap, or continuous
-                    # arrival).
-                    buffered[t] = part.localCheckpoint(eager=True)
-            while state["expected"] in buffered:
-                ready.append(
-                    (state["expected"], buffered.pop(state["expected"]))
-                )
-                state["expected"] += 1
-            drain_ready(ready)
-
-        # no maxFilesPerTrigger cap (round 11, verdict ask #1):
-        # availableNow then delivers every pending file in ONE
-        # micro-batch, so the run pays one trigger + one offset/commit
-        # log round instead of one per file, the out-of-order pin (an
-        # eager localCheckpoint job) never fires for co-arriving
-        # files, and in-order tags drain together in one probe pass.
-        # Results are arrival-order-independent either way — the
-        # sequencer above still handles split arrivals — so this
-        # removes stream lifecycle only; the probe, segment-durability
-        # and meta-stamp work is unchanged.
-        stream = spark.readStream.schema(STREAM_SRC_SCHEMA).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        # no maxFilesPerTrigger cap: co-arriving files share one trigger
+        # and one probe pass; results do not depend on arrival order
+        drain_in_tag_order(
+            spark.readStream.schema(STREAM_SRC_SCHEMA).parquet(src),
+            tag_of("doc_id"),
+            drain,
+            idx,
         )
-        q.awaitTermination()
-        assert state["expected"] == 2, "sequencer did not drain all tags"
-        # commit the merges IN ORDER: each meta stamp waits for its
-        # segment write to finish (join re-raises a write failure
-        # BEFORE the stamp) — the on-disk index ends bit-identical to
-        # the synchronous path; once a segment is durable its batch's
-        # cached frames are released (the in-memory union view is done)
-        for tag, th, release in state["merges"]:
-            th.join()
-            meta = artifacts.load_meta(idx)
-            artifacts.update_meta(
-                idx, "base", {"ingests": meta["ingests"] + [tag]}
-            )
-            release()
-        # the probe log lives in the sink table; localCheckpoint so the
-        # returned frame survives the workdir cleanup below
+        out_schema = (
+            "batch_tag int, new_doc_id long, matched_doc_id long, "
+            "jaccard double"
+        )
+        # localCheckpoint so the returned frame survives the cleanup
         out = (
             spark.read.schema(out_schema)
             .parquet(results)
             .localCheckpoint(eager=True)
         )
         return out.orderBy("new_doc_id")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 @register(
@@ -2541,25 +2343,13 @@ def stream_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "matched_doc_id",
         (F.col("_i").cast("double") / den).alias("jaccard_raw"),
     )
-    # best match per probe doc: max_by over (jaccard DESC, id ASC) —
-    # partial-agg form of the loop's rn=1 window, identical rows
-    payload = F.struct(
-        F.col("matched_doc_id").alias("matched_doc_id"),
-        F.col("jaccard_raw").alias("jaccard_raw"),
-    )
-    key = F.struct(
-        F.col("jaccard_raw"), (-F.col("matched_doc_id")).cast("long")
-    )
     return (
-        gated.groupBy("new_doc_id")
-        .agg(F.max_by(payload, key).alias("_b"))
+        _probe_best(gated)
         .select(
-            (F.col("new_doc_id") % DELTA_MOD)
-            .cast("int")
-            .alias("batch_tag"),
+            (F.col("new_doc_id") % DELTA_MOD).cast("int").alias("batch_tag"),
             "new_doc_id",
-            F.col("_b.matched_doc_id").alias("matched_doc_id"),
-            F.round("_b.jaccard_raw", 6).alias("jaccard"),
+            "matched_doc_id",
+            "jaccard",
         )
         .orderBy("new_doc_id")
     )
@@ -3546,8 +3336,8 @@ def _register_stream_substring_guard() -> None:
         "QUOTE eval text verbatim inside otherwise-different content "
         "— the 'Deduplicating Training Data' overlap failure a doc-"
         "level score misses. Same loop shape: train-candidate docs "
-        "arrive as file micro-batches (readStream, availableNow — no "
-        "per-file trigger cap since round 11); inside foreachBatch "
+        "arrive as file micro-batches (readStream, availableNow, no "
+        "per-file trigger cap); inside foreachBatch "
         "each batch's STORED "
         "winnow anchors (the shared full-corpus artifact — zero re-"
         "winnowing at ingest) probe the FIXED test split's anchor fp "
@@ -3569,9 +3359,6 @@ def _register_stream_substring_guard() -> None:
     def stream_substring_guard(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        import shutil
-        import tempfile
-
         from pyspark import StorageLevel
 
         K = _WSUB_K
@@ -3589,9 +3376,9 @@ def _register_stream_substring_guard() -> None:
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         src = _ensure_decon_src(spark, sf_dir)
-        work = tempfile.mkdtemp(prefix="stream_subguard_")
+        work = tempfile.TemporaryDirectory(prefix="stream_subguard_")
         try:
-            log = os.path.join(work, "log")
+            log = os.path.join(work.name, "log")
 
             def guard(batch_df: DataFrame, _batch_id: int) -> None:
                 batch_ids = batch_df.select("doc_id")
@@ -3645,21 +3432,11 @@ def _register_stream_substring_guard() -> None:
                     .parquet(log)
                 )
 
-            # no maxFilesPerTrigger cap (round 11): fixed anchor-store
-            # index + pure per-doc span math make batching invisible
-            # to results — one trigger + one append for all pending
-            # arrivals (mirrors stream_decontaminate).
-            q = (
-                spark.readStream.schema("doc_id long")
-                .parquet(src)
-                .writeStream.foreachBatch(guard)
-                .option(
-                    "checkpointLocation", os.path.join(work, "ckpt")
-                )
-                .trigger(availableNow=True)
-                .start()
+            # no maxFilesPerTrigger cap: a fixed anchor index and pure
+            # per-doc span math make batching invisible to results
+            run_available_now(
+                spark.readStream.schema("doc_id long").parquet(src), guard
             )
-            q.awaitTermination()
             out_schema = (
                 "doc_id long, status string, n_dup_spans long, "
                 "max_span_len long"
@@ -3673,7 +3450,7 @@ def _register_stream_substring_guard() -> None:
         finally:
             anchors.unpersist()
             test_fps.unpersist()
-            shutil.rmtree(work, ignore_errors=True)
+            work.cleanup()
 
 
 _register_stream_substring_guard()

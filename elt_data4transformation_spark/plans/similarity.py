@@ -9,6 +9,7 @@ the base table is hash-partitioned; the query set is broadcast.
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -21,6 +22,7 @@ from ..operators.vectors import (
     cosine_sql,
 )
 from ..sources import read_parquet, spread, table
+from ..streaming.loop import drain_in_tag_order, ingest_run_root
 from .dedup import _artifact_path, _ensure_stream_fixture
 from .registry import register
 
@@ -1437,7 +1439,7 @@ def _stream_ivf_oracle() -> str:
     doc="The VECTOR-STORE INGEST LOOP as a real Structured Streaming "
     "job — the streaming composition the stored-IVF family builds "
     "toward, and the vector mirror of stream_index_ingest: vector "
-    "batches arrive as files (readStream, availableNow — round 11: no "
+    "batches arrive as files (readStream, availableNow, no "
     "maxFilesPerTrigger cap, so co-arriving files share one trigger "
     "and one probe pass); inside foreachBatch each batch is assigned to the "
     "FROZEN stored centroids (broadcast — the production no-re-cluster "
@@ -1468,69 +1470,39 @@ def _stream_ivf_oracle() -> str:
     "throughout.",
 )
 def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
     from pyspark import StorageLevel
 
-    work = tempfile.mkdtemp(prefix="stream_ivf_ingest_")
-    try:
-        # immutable fingerprinted base index (_ensure_stream_ivf_base,
-        # shared with bench prepare), symlinked into a private run root
-        # so merges stay run-scoped and concurrent runs share one base
-        # — same layout as stream_index_ingest
+    with tempfile.TemporaryDirectory(prefix="stream_ivf_ingest_") as work:
+        # immutable fingerprinted base index, shared with bench prepare;
+        # the run merges into a private root beside it
         base_idx = _ensure_stream_ivf_base(spark, sf_dir)
         # the oracle-checked K column: the K the base build chose
         k = artifacts.load_meta(base_idx)["k"]
-        idx = os.path.join(work, "idx")
-        os.makedirs(idx)
-        for seg in ("centroids", "index"):
-            os.symlink(
-                os.path.join(base_idx, seg), os.path.join(idx, seg)
-            )
-        artifacts.update_meta(idx, "run", {"ingests": []})
-
-        # fixture plumbing: the ingest batch files (tag = vec_id % 5
-        # in {0, 1}; tag 1 mtime-older, exercising the sequencer
-        # whenever the source splits arrivals) are a published
-        # immutable artifact consumed read-only by every run's fresh
-        # checkpoint (see _ensure_stream_ivf_src)
+        idx = ingest_run_root(work, base_idx, ("centroids", "index"))
+        # the ingest batch files (tag = vec_id % 5 in {0, 1}; tag 1
+        # mtime-older, exercising the sequencer whenever the source
+        # splits arrivals) are a published immutable artifact (see
+        # _ensure_stream_ivf_src)
         src = _ensure_stream_ivf_src(spark, sf_dir)
-
         results = os.path.join(work, "probes")
         base_index = read_parquet(spark, f"{idx}/index").persist(
             StorageLevel.MEMORY_AND_DISK
         )
-        state = {
-            "expected": 0,
-            "idx": base_index,
-            "merges": [],
-        }
-        out_schema = (
-            "batch_tag int, vec_id long, matched_vec_id long, "
-            "cosine double"
-        )
-        def drain_ready(ready: list[tuple[int, DataFrame]]) -> None:
-            # ONE probe pass + ONE sink append for every tag ready in
-            # this micro-batch (round 11, mirrors stream_index_ingest:
-            # per-tag drains each paid a job round and ran serially;
-            # the union lets tag 1's probe backfill tag 0's tail,
-            # guide §2.6, and halves write commits). Sequencing is
-            # plan-level: tag t+1's probe joins an index view that
-            # already unions tag t's in-memory segment, and tags own
-            # disjoint vec_id sets (vec_id % 5 == tag), so the
-            # per-vec_id best window over the union equals per-tag
-            # windows.
-            if not ready:
-                return
+        view = base_index
+
+        def drain(ready):
+            nonlocal view
+            # ONE probe pass + ONE sink append for every ready tag.
+            # Sequencing is plan-level: tag t+1's probe joins an index
+            # view that already unions tag t's in-memory segment, and
+            # tags own disjoint vec_id sets, so the per-(batch_tag,
+            # vec_id) best over the union equals per-tag bests.
             outs: list[DataFrame] = []
-            new_merges = []
+            merges = []
             for tag, delta in ready:
                 # the arriving batch CARRIES its centroid assignment
                 # (computed once against the frozen stored centroids
-                # by the upstream ingest writer — see
-                # _ensure_stream_ivf_src), so the loop's per-batch
-                # work is probe + persist only
+                # upstream), so a drain is probe + persist only
                 assigned = delta.select(
                     "vec_id", "v", "centroid_id"
                 ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -1539,42 +1511,36 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("v").alias("_pv"),
                     F.col("centroid_id").alias("_pc"),
                 )
-                scored = state["idx"].join(
-                    F.broadcast(probe),
-                    F.col("centroid_id") == F.col("_pc"),
-                ).select(
-                    F.col("_pid").alias("vec_id"),
-                    F.col("vec_id").alias("matched_vec_id"),
-                    F.round(
-                        cosine_col(F.col("_pv"), F.col("v")), 6
-                    ).alias("cosine"),
-                )
                 outs.append(
-                    scored.select(
+                    view
+                    .join(
+                        F.broadcast(probe),
+                        F.col("centroid_id") == F.col("_pc"),
+                    )
+                    .select(
                         F.lit(tag).alias("batch_tag"),
-                        "vec_id",
-                        "matched_vec_id",
-                        "cosine",
+                        F.col("_pid").alias("vec_id"),
+                        F.col("vec_id").alias("matched_vec_id"),
+                        F.round(
+                            cosine_col(F.col("_pv"), F.col("v")), 6
+                        ).alias("cosine"),
                     )
                 )
-                seg = assigned.select("vec_id", "v", "centroid_id")
 
-                def merge(seg=seg, tag=tag) -> None:
+                def merge(seg=assigned, tag=tag) -> None:
                     seg.coalesce(4).write.mode("overwrite").partitionBy(
                         "centroid_id"
                     ).parquet(f"{idx}/index_ingest_{tag}")
 
-                new_merges.append((str(tag), merge, assigned))
-                state["idx"] = state["idx"].unionByName(seg)
+                merges.append((tag, merge, assigned.unpersist))
+                view = view.unionByName(assigned)
             un = outs[0]
             for o in outs[1:]:
                 un = un.unionByName(o)
-            # best match as a max_by partial aggregate (round 11,
-            # mirrors dedup._probe_best): key (cosine, -matched)
-            # reproduces the former window's (cosine DESC, matched
-            # ASC) tie-break exactly on the pre-rounded cosine; tags
-            # own disjoint vec_id sets so grouping by (batch_tag,
-            # vec_id) equals per-tag windows
+            # best match as a max_by partial aggregate: key (cosine,
+            # -matched) gives (cosine DESC, matched ASC) on the cosine
+            # already rounded above, so it stays apart from
+            # dedup._probe_best, which rounds after the key
             pay = F.struct(
                 F.col("matched_vec_id").alias("matched_vec_id"),
                 F.col("cosine").alias("cosine"),
@@ -1591,104 +1557,31 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("_b.matched_vec_id").alias("matched_vec_id"),
                     F.col("_b.cosine").alias("cosine"),
                 )
-                # no coalesce(1): it serialized the best-match pass +
-                # the write into one task per drain (round 9, mirrors
-                # stream_index_ingest)
+                # no coalesce(1): a one-task write would serialize the
+                # best-match pass too
                 .write.mode("append")
                 .parquet(results)
             )
-            # probes materialized (sink-table append — the log never
-            # rides in driver memory) before any segment write starts;
-            # ALL ready segments then write concurrently on threads,
-            # overlapping the loop's tail. Meta stamped only after
-            # join (below), and CheckedThread re-raises a failed write
-            # AT join, before the stamp — a failed segment is never
-            # listed.
-            for tag, merge, assigned in new_merges:
-                th = artifacts.CheckedThread(target=merge)
-                th.start()
-                state["merges"].append((tag, th, assigned))
+            return merges
 
-        buffered: dict[int, DataFrame] = {}
-
-        def sink(batch_df: DataFrame, _batch_id: int) -> None:
-            # one narrow min/max agg discovers the tag set; out-of-
-            # order batches pin in executor storage via localCheckpoint
-            # — round 9, mirrors stream_index_ingest
-            lo, hi, nt = batch_df.agg(
-                F.min(F.col("vec_id") % 5),
-                F.max(F.col("vec_id") % 5),
-                F.countDistinct(F.col("vec_id") % 5),
-            ).first()
-            if lo is None:
-                return
-            if lo == hi:
-                tags = [lo]
-            elif nt == hi - lo + 1:
-                # contiguous tags: one discovery agg, no collect job
-                # (round 11, mirrors stream_index_ingest)
-                tags = list(range(lo, hi + 1))
-            else:
-                tags = sorted(
-                    r["_t"]
-                    for r in batch_df.select(
-                        (F.col("vec_id") % 5).alias("_t")
-                    )
-                    .distinct()
-                    .collect()
-                )
-            ready: list[tuple[int, DataFrame]] = []
-            for t in tags:
-                part = (
-                    batch_df
-                    if lo == hi
-                    else batch_df.filter(F.col("vec_id") % 5 == t)
-                )
-                if t == state["expected"]:
-                    ready.append((t, part))
-                    state["expected"] += 1
-                elif t > state["expected"]:
-                    buffered[t] = part.localCheckpoint(eager=True)
-            while state["expected"] in buffered:
-                ready.append(
-                    (state["expected"], buffered.pop(state["expected"]))
-                )
-                state["expected"] += 1
-            drain_ready(ready)
-
-        # no maxFilesPerTrigger cap (round 11, mirrors
-        # stream_index_ingest): availableNow delivers every pending
-        # file in ONE micro-batch — one trigger + one commit round,
-        # no out-of-order pin for co-arriving files, in-order tags
-        # drain in one probe pass. Results are arrival-order-
-        # independent either way; only stream lifecycle is removed.
-        stream = spark.readStream.schema(
-            "vec_id long, v array<double>, centroid_id long"
-        ).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain_in_tag_order(
+            spark.readStream.schema(
+                "vec_id long, v array<double>, centroid_id long"
+            ).parquet(src),
+            F.col("vec_id") % 5,
+            drain,
+            idx,
         )
-        q.awaitTermination()
-        assert state["expected"] == 2, "sequencer did not drain all tags"
-        for tag, th, cached in state["merges"]:
-            th.join()  # re-raises a failed segment write — no stamp
-            meta = artifacts.load_meta(idx)
-            artifacts.update_meta(
-                idx, "run", {"ingests": meta["ingests"] + [tag]}
-            )
-            cached.unpersist()  # segment durable; release batch cache
         out = (
-            spark.read.schema(out_schema)
+            spark.read.schema(
+                "batch_tag int, vec_id long, matched_vec_id long, "
+                "cosine double"
+            )
             .parquet(results)
             .localCheckpoint(eager=True)
         )
         base_index.unpersist()
         return out.withColumn("k", F.lit(k).cast("long")).orderBy("vec_id")
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 SEM_TAU = 0.4  # within-bucket cosine above which the larger id is pruned

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
 from ..sources import parquet_schema, read_parquet
+from .loop import run_available_now
 
 _COUNTER = itertools.count()
 
@@ -136,7 +137,8 @@ def _run_to_memory(
     restored after the job so batch queries are untouched."""
     spark = stream_df.sparkSession
     name = f"stream_out_{os.getpid()}_{next(_COUNTER)}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
+    # the memory sink holds the rows; the checkpoint goes after stop()
+    ckpt = tempfile.TemporaryDirectory(prefix="ckpt_")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         if state_partitions is not None:
@@ -145,7 +147,7 @@ def _run_to_memory(
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
             .queryName(name)
-            .option("checkpointLocation", ckpt)
+            .option("checkpointLocation", ckpt.name)
             .start()
         )
         q.processAllAvailable()
@@ -163,6 +165,7 @@ def _run_to_memory(
         q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+        ckpt.cleanup()
     return spark.table(name)
 
 
@@ -263,7 +266,7 @@ def foreach_batch_snapshot_diff(
     stored watch_snapshots row" loop, with the snapshot table swapped
     for a keyed dict (a Delta/parquet table in production)."""
     # Per-key (sum, count) accumulated ACROSS micro-batches; the avg is
-    # finalized only after awaitTermination. Per-batch averaging would
+    # finalized only after the run ends. Per-batch averaging would
     # match the whole-window oracle only when the bounded fixture yields
     # exactly one micro-batch — with more input files than
     # maxFilesPerTrigger the per-batch averages diverge and duplicate
@@ -290,14 +293,7 @@ def foreach_batch_snapshot_diff(
         (F.lit(True), cur_acc),
     ):
         ev = read_events_stream(spark, sf_dir, glob, max_files_per_trigger).filter(flt)
-        ckpt = tempfile.mkdtemp(prefix="ckpt_fb_")
-        q = (
-            ev.writeStream.foreachBatch(accumulate_into(acc))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(ev, accumulate_into(acc))
 
     def _round4(x: float) -> float:
         # half-away-from-zero, matching SQL ROUND (Python round() is
@@ -449,7 +445,6 @@ def stream_upsert_materialized(
     group-by, which the oracle checks; the cross-batch merge path is
     proven by the multi-file test."""
     ev = read_events_stream(spark, sf_dir, glob, max_files_per_trigger)
-    state_root = tempfile.mkdtemp(prefix="stream_mat_")
     latest: dict[str, int] = {"v": -1}
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
@@ -476,15 +471,12 @@ def stream_upsert_materialized(
         )
         latest["v"] += 1
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_mat_")
-    q = (
-        ev.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return read_parquet(spark, f"{state_root}/v{latest['v']}")
+    with tempfile.TemporaryDirectory(prefix="stream_mat_") as state_root:
+        run_available_now(ev, merge)
+        # localCheckpoint so the returned frame survives the cleanup
+        return read_parquet(spark, f"{state_root}/v{latest['v']}").localCheckpoint(
+            eager=True
+        )
 
 
 def stream_stream_view_purchase(

@@ -88,3 +88,20 @@ def test_ensure_staged_without_meta_rebuilds_both(tmp_path):
 def test_ingest_band_index_fused_rejects_empty_ready():
     with pytest.raises(ValueError, match="no ready tags"):
         dedup_ops.ingest_band_index_fused(None, "unused", [], [], None)
+
+
+@pytest.mark.parametrize(
+    "view_tags, ready_tags",
+    [([-1, 0], [0]), ([-1, 1], [0, 2]), ([-1], [1, 1])],
+)
+def test_ingest_band_index_fused_rejects_reused_tags(view_tags, ready_tags):
+    # a tag not above every tag already in the view would hide that
+    # segment behind the _vsrc < _ptag gate; the check runs no job
+    with pytest.raises(ValueError, match="not greater than"):
+        dedup_ops.ingest_band_index_fused(
+            None,
+            "unused",
+            [(t, None) for t in ready_tags],
+            [(t, None) for t in view_tags],
+            None,
+        )
