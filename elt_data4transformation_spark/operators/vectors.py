@@ -80,6 +80,26 @@ def assign_nearest(
     )
 
 
+def centroid_means(assigned: DataFrame) -> DataFrame:
+    """One Lloyd update over ``assigned`` (centroid_id, v): each
+    centroid's elementwise member mean, rounded to 6 decimals so both
+    engines build bit-identical centroids. Returns (centroid_id, cv),
+    the vector rebuilt in dim order by array_sort over (dim, m) structs
+    (collect_list alone is order-unstable)."""
+    return (
+        assigned.select("centroid_id", F.posexplode("v").alias("dim", "val"))
+        .groupBy("centroid_id", "dim")
+        .agg(F.round(F.avg("val"), 6).alias("m"))
+        .groupBy("centroid_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dim", "m"))),
+                lambda x: x["m"],
+            ).alias("cv")
+        )
+    )
+
+
 def cosine_sql(a: str, b: str) -> str:
     """DuckDB twin of cosine_col (zero vectors -> NULL, not -1)."""
     return (
@@ -452,22 +472,9 @@ def retrain_ivf_index(spark, index_path: str, iters: int = 3) -> None:
     vecs = vecs.localCheckpoint(eager=True)  # iterated consumer: cut re-reads
     cent = read_parquet(spark, f"{index_path}/centroids")
     for _ in range(iters):
-        assigned = assign_nearest(vecs, cent).drop("cos")
-        cent = (
-            assigned.select(
-                "centroid_id", F.posexplode("v").alias("dim", "val")
-            )
-            .groupBy("centroid_id", "dim")
-            .agg(F.round(F.avg("val"), 6).alias("m"))
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda x: x["m"],
-                ).alias("cv")
-            )
-            .localCheckpoint(eager=True)  # k rows; freeze per step
-        )
+        cent = centroid_means(
+            assign_nearest(vecs, cent).drop("cos")
+        ).localCheckpoint(eager=True)  # k rows; freeze per step
     assigned = assign_nearest(vecs, cent).drop("cos")
 
     def build(tmp: str) -> None:
@@ -623,19 +630,9 @@ def split_wide_clusters(
     )
 
     def _side_mean(df: DataFrame, flag: bool, out: str) -> DataFrame:
-        return (
+        return centroid_means(
             df.filter(F.col("side_b") == flag)
-            .select("centroid_id", F.posexplode("v").alias("dim", "val"))
-            .groupBy("centroid_id", "dim")
-            .agg(F.round(F.avg("val"), 6).alias("m"))
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda x: x["m"],
-                ).alias(out)
-            )
-        )
+        ).withColumnRenamed("cv", out)
 
     # one Lloyd step over the seed halves: re-side every member with
     # the nearer of the two half-means (a parent whose b-half is empty
@@ -665,20 +662,7 @@ def split_wide_clusters(
         F.broadcast(wide_ids.select("centroid_id")), "centroid_id", "left_anti"
     ).select("vec_id", "v", "centroid_id")
     new_index = keep_index.unionByName(split_index)
-    child_cent = (
-        split_index.select(
-            "centroid_id", F.posexplode("v").alias("dim", "val")
-        )
-        .groupBy("centroid_id", "dim")
-        .agg(F.round(F.avg("val"), 6).alias("m"))
-        .groupBy("centroid_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                lambda x: x["m"],
-            ).alias("cv")
-        )
-    )
+    child_cent = centroid_means(split_index)
     new_cent = cent.join(
         F.broadcast(wide_ids.select("centroid_id")), "centroid_id", "left_anti"
     ).select("centroid_id", "cv").unionByName(child_cent)

@@ -796,27 +796,22 @@ def embedding_neardup_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the stored artifact (the vector analog of the text signature
     # store; keys are pure per-row functions of (v, fixed planes),
     # computed once per corpus state, identical whether stored or
-    # fresh — pinned by test). persist + eager count: the candidate
-    # self-join (and the width aggregate under the cap) consumes
-    # `bands` three times
-    from pyspark import StorageLevel
-
-    bands = _srp_band_store(spark, sf_dir).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    bands.count()
+    # fresh — pinned by test). Pinned with an eager local checkpoint:
+    # the candidate self-join (and the width aggregate under the cap)
+    # consumes `bands` three times, and unlike persist() it leaves no
+    # session cache entry that a later read of a rebuilt store matches
+    bands = _srp_band_store(spark, sf_dir).localCheckpoint(eager=True)
     cand = dedup_ops.capped_band_candidates(
         bands, "vec_id", _SRP_MAX_BUCKET
     )
     # rescore frame: per-row NORM precomputed once (the norm fold is a
     # pure per-row function — dividing the per-pair dot by the stored
     # norms' product is the IDENTICAL float expression, evaluated
-    # n times instead of n_pairs times), persisted because both sides
-    # of the pair join consume it
+    # n times instead of n_pairs times), pinned because both sides of
+    # the pair join consume it
     en = e.select(
         "vec_id", "v", vectors.norm_col(F.col("v")).alias("_n")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    en.count()
+    ).localCheckpoint(eager=True)
     ea = en.select(
         F.col("vec_id").alias("doc_a"),
         F.col("v").alias("_va"),
@@ -2399,6 +2394,108 @@ def _wsub_anchor_ctes(doc_filter: str = "") -> str:
         )"""
 
 
+def _shared_keys(anchors: DataFrame, key: str) -> DataFrame:
+    """The ``key`` values held by >= 2 distinct documents of
+    ``anchors`` (doc_id, ``key``, ...).
+
+    min(doc_id) != max(doc_id) is the oracles' COUNT(DISTINCT doc_id)
+    >= 2, but min/max are single-phase partial aggregates: no distinct
+    expansion, one shuffle of (key, two longs) instead of
+    countDistinct's two-phase plan (measured ~11% off the steady
+    substring_dup_spans time at sf0.1). A hash prefilter of the raw-gram
+    form (pass 1 on xxhash64(g) at 16 B/row, exact recheck on the
+    survivors) was tried and rejected: the interleaved A/B read 1.75x
+    against 1.42x for this single pass over the same baseline, because
+    at this scale the extra checkpoint scan and semi-join cost more than
+    the saved shuffle bytes. Retry it only on evidence that the gram
+    exchange dominates."""
+    return (
+        anchors.groupBy(key)
+        .agg(F.min("doc_id").alias("_a"), F.max("doc_id").alias("_b"))
+        .filter(F.col("_a") != F.col("_b"))
+        .select(key)
+    )
+
+
+def _shared_positions(anchors: DataFrame, key: str) -> DataFrame:
+    """(doc_id, p) of every anchor whose ``key`` another doc also
+    holds."""
+    return anchors.join(_shared_keys(anchors, key), key, "left_semi").select(
+        "doc_id", "p"
+    )
+
+
+def _delta_shared_positions(base: DataFrame, delta: DataFrame) -> DataFrame:
+    """(doc_id, p) of every delta anchor whose fp_hash a second doc
+    holds, decomposed delta-proportionally: sharing inside the batch
+    UNION presence in the base segment (one semi-join of base anchors
+    against the delta's fp set; no forced broadcast)."""
+    delta_fps = delta.select("fp_hash").distinct()
+    base_hit = base.join(delta_fps, "fp_hash", "left_semi").select(
+        "fp_hash"
+    ).distinct()
+    shared = _shared_keys(delta, "fp_hash").unionByName(base_hit).distinct()
+    return delta.join(shared, "fp_hash", "left_semi").select("doc_id", "p")
+
+
+def _gram_positions(docs: DataFrame) -> DataFrame:
+    """(doc_id, p, g): every ``_SUB_K``-char window of every doc, pinned
+    with an eager local checkpoint because it feeds both the sharing
+    aggregate and the dup semi-join (exploding twice costs more)."""
+    K = _SUB_K
+    return (
+        docs.filter(F.length("text") >= K)
+        .select(
+            "doc_id",
+            F.explode(
+                F.sequence(F.lit(1), F.length("text") - K + 1)
+            ).alias("p"),
+            "text",
+        )
+        .select(
+            "doc_id",
+            F.col("p").cast("long").alias("p"),
+            F.col("text").substr(F.col("p"), F.lit(K)).alias("g"),
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
+def _dup_spans(dup: DataFrame, k: int) -> DataFrame:
+    """Fold the (doc_id, p) starts of duplicated ``k``-char windows into
+    maximal spans: a window starting at most one char past the running
+    MAX(window end) of the doc's earlier windows extends the current
+    span, a later one opens a new span (gaps-and-islands in integer
+    arithmetic only, so both engines agree exactly). Returns unordered
+    (doc_id, span_start, span_end, span_len, n_anchors)."""
+    prev = (
+        Window.partitionBy("doc_id")
+        .orderBy("p")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    run = (
+        Window.partitionBy("doc_id")
+        .orderBy("p")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    prev_e = F.max(F.col("p") + k - 1).over(prev)
+    return (
+        dup.withColumn(
+            "_new",
+            F.when(prev_e.isNull() | (F.col("p") > prev_e + 1), 1).otherwise(0),
+        )
+        .withColumn("_island", F.sum("_new").over(run))
+        .groupBy("doc_id", "_island")
+        .agg(
+            F.min("p").alias("span_start"),
+            (F.max("p") + k - 1).alias("span_end"),
+            (F.max("p") + k - F.min("p")).alias("span_len"),
+            F.count(F.lit(1)).alias("n_anchors"),
+        )
+        .drop("_island")
+    )
+
+
 def _ensure_winnow_store(spark: SparkSession, sf_dir: str) -> str:
     """Stored winnow artifact at the substring-span parameters,
     two segments (v2, round 10):
@@ -2435,14 +2532,10 @@ def _ensure_winnow_store(spark: SparkSession, sf_dir: str) -> str:
             )
         ).write.mode("overwrite").parquet(f"{tmp}/anchors")
         a = read_parquet(spark, f"{tmp}/anchors")
-        shared_fp = (
-            a.groupBy("fp_hash")
-            .agg(F.min("doc_id").alias("_a"), F.max("doc_id").alias("_b"))
-            .filter(F.col("_a") != F.col("_b"))
-            .select("fp_hash")
-        )
         (
-            a.join(F.broadcast(shared_fp), "fp_hash", "left_semi")
+            a.join(
+                F.broadcast(_shared_keys(a, "fp_hash")), "fp_hash", "left_semi"
+            )
             .select("doc_id")
             .distinct()
             .coalesce(1)
@@ -2541,80 +2634,15 @@ def _winnow_shared_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "keying the aggregate on xxhash64(anchor) instead of the raw "
     "string to cut shuffle bytes — kept as raw text here so the "
     "DuckDB twin is bit-identical (a hash-prefilter-with-recheck "
-    "variant measured slower at sf0.1; see the in-plan note).",
+    "variant measured slower at sf0.1; see _shared_keys).",
 )
 def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    K = _SUB_K
-    d = spread(table(spark, sf_dir, "documents"))
-    # NO stored prefilter here (round 11): this registration's oracle
-    # computes from raw text with no stored component, so its timed
-    # region performs ALL the work the oracle pays — the winnow-anchor
-    # prefilter lives in substring_dup_spans_gated, whose oracle
-    # declares the store.
-    sh = (
-        d.filter(F.length("text") >= K)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(1), F.length("text") - K + 1)
-            ).alias("p"),
-            "text",
-        )
-        .select(
-            "doc_id",
-            F.col("p").cast("long").alias("p"),
-            F.col("text").substr(F.col("p"), F.lit(K)).alias("g"),
-        )
-        # sh feeds the sharing aggregate AND the dup semi-join: pin the
-        # (prefiltered, ~13%-of-corpus) position table instead of
-        # exploding twice
-        .localCheckpoint(eager=True)
-    )
-    # ">= 2 distinct docs" <=> min(doc_id) != max(doc_id): same
-    # predicate as the oracle's COUNT(DISTINCT), but min/max are
-    # single-phase partial aggregates — no distinct expansion, one
-    # shuffle of (g, two longs) instead of countDistinct's two-phase
-    # plan (round 9; measured ~11% off the steady time at sf0.1).
-    # A round-11 attempt to HASH-PREFILTER this aggregate (pass 1 on
-    # xxhash64(g) at 16 B/row, exact raw-gram recheck on survivors —
-    # guide §2.3's decide-with-metadata pattern) was REJECTED with
-    # measurement: interleaved A/B read 1.75x vs 1.42x for this plain
-    # single-pass form against the same baseline — at this SF the
-    # extra checkpoint scan + semi-join cost more than the saved
-    # shuffle bytes. Worth retrying only on evidence the g-exchange
-    # dominates (true shuffle-bound regime).
-    shared = (
-        sh.groupBy("g")
-        .agg(F.min("doc_id").alias("_a"), F.max("doc_id").alias("_b"))
-        .filter(F.col("_a") != F.col("_b"))
-        .select("g")
-    )
-    dup = sh.join(shared, "g", "left_semi").select("doc_id", "p")
-    prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    run = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    prev_e = F.max(F.col("p") + K - 1).over(prev)
-    marked = dup.withColumn(
-        "_new",
-        F.when(prev_e.isNull() | (F.col("p") > prev_e + 1), 1).otherwise(0),
-    ).withColumn("_island", F.sum("_new").over(run))
-    return (
-        marked.groupBy("doc_id", "_island")
-        .agg(
-            F.min("p").alias("span_start"),
-            (F.max("p") + K - 1).alias("span_end"),
-            (F.max("p") + K - F.min("p")).alias("span_len"),
-            F.count(F.lit(1)).alias("n_anchors"),
-        )
-        .drop("_island")
-        .orderBy("doc_id", "span_start")
+    # no stored prefilter: this oracle computes from raw text with no
+    # stored component, so the timed region pays all of that work (the
+    # winnow-anchor prefilter is substring_dup_spans_gated's)
+    sh = _gram_positions(spread(table(spark, sf_dir, "documents")))
+    return _dup_spans(_shared_positions(sh, "g"), _SUB_K).orderBy(
+        "doc_id", "span_start"
     )
 
 
@@ -2690,66 +2718,16 @@ def substring_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def substring_dup_spans_gated(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    K = _SUB_K
-    d = spread(table(spark, sf_dir, "documents"))
     # the stored winnow-anchor prefilter (see the registration doc);
     # everything below it is the raw query's exact pipeline
-    d = d.join(
+    d = spread(table(spark, sf_dir, "documents")).join(
         F.broadcast(_winnow_shared_docs(spark, sf_dir)),
         "doc_id",
         "left_semi",
     )
-    sh = (
-        d.filter(F.length("text") >= K)
-        .select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.lit(1), F.length("text") - K + 1)
-            ).alias("p"),
-            "text",
-        )
-        .select(
-            "doc_id",
-            F.col("p").cast("long").alias("p"),
-            F.col("text").substr(F.col("p"), F.lit(K)).alias("g"),
-        )
-        # sh feeds the sharing aggregate AND the dup semi-join: pin the
-        # (prefiltered, ~13%-of-corpus) position table instead of
-        # exploding twice
-        .localCheckpoint(eager=True)
-    )
-    shared = (
-        sh.groupBy("g")
-        .agg(F.min("doc_id").alias("_a"), F.max("doc_id").alias("_b"))
-        .filter(F.col("_a") != F.col("_b"))
-        .select("g")
-    )
-    dup = sh.join(shared, "g", "left_semi").select("doc_id", "p")
-    prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    run = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    prev_e = F.max(F.col("p") + K - 1).over(prev)
-    marked = dup.withColumn(
-        "_new",
-        F.when(prev_e.isNull() | (F.col("p") > prev_e + 1), 1).otherwise(0),
-    ).withColumn("_island", F.sum("_new").over(run))
-    return (
-        marked.groupBy("doc_id", "_island")
-        .agg(
-            F.min("p").alias("span_start"),
-            (F.max("p") + K - 1).alias("span_end"),
-            (F.max("p") + K - F.min("p")).alias("span_len"),
-            F.count(F.lit(1)).alias("n_anchors"),
-        )
-        .drop("_island")
-        .orderBy("doc_id", "span_start")
+    sh = _gram_positions(d)
+    return _dup_spans(_shared_positions(sh, "g"), _SUB_K).orderBy(
+        "doc_id", "span_start"
     )
 
 
@@ -2808,45 +2786,11 @@ def substring_dup_spans_gated(
     "windows only; no global sort; linear like the raw plan.",
 )
 def substring_dup_spans_winnowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    K = _WSUB_K
-    # anchors read from the stored fingerprint artifact (computed once
-    # per corpus state at publication — see _winnow_anchor_store); the
-    # query is the shared-hash join + islands over stored integers
+    # anchors come from the stored fingerprint artifact (computed once
+    # per corpus state at publication, see _winnow_anchor_store)
     anchors = _winnow_anchor_store(spark, sf_dir)
-    # min != max <=> >= 2 distinct docs: single-phase partial agg
-    # (same rewrite as the raw variant, round 9)
-    shared = (
-        anchors.groupBy("fp_hash")
-        .agg(F.min("doc_id").alias("_a"), F.max("doc_id").alias("_b"))
-        .filter(F.col("_a") != F.col("_b"))
-        .select("fp_hash")
-    )
-    dup = anchors.join(shared, "fp_hash", "left_semi").select("doc_id", "p")
-    prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    run = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    prev_e = F.max(F.col("p") + K - 1).over(prev)
-    marked = dup.withColumn(
-        "_new",
-        F.when(prev_e.isNull() | (F.col("p") > prev_e + 1), 1).otherwise(0),
-    ).withColumn("_island", F.sum("_new").over(run))
-    return (
-        marked.groupBy("doc_id", "_island")
-        .agg(
-            F.min("p").alias("span_start"),
-            (F.max("p") + K - 1).alias("span_end"),
-            (F.max("p") + K - F.min("p")).alias("span_len"),
-            F.count(F.lit(1)).alias("n_anchors"),
-        )
-        .drop("_island")
-        .orderBy("doc_id", "span_start")
+    return _dup_spans(_shared_positions(anchors, "fp_hash"), _WSUB_K).orderBy(
+        "doc_id", "span_start"
     )
 
 
@@ -2937,45 +2881,14 @@ def _prep_winnow_delete(spark: SparkSession, sf_dir: str) -> None:
     "recompute over the surviving corpus.",
 )
 def substring_winnow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    K = _WSUB_K
     tomb = read_parquet(
         spark, f"{_ensure_winnow_delete_store(spark, sf_dir)}/tombstones"
     )
     anchors = _winnow_anchor_store(spark, sf_dir).join(
         tomb, "doc_id", "left_anti"
     )
-    shared = (
-        anchors.groupBy("fp_hash")
-        .agg(F.min("doc_id").alias("_a"), F.max("doc_id").alias("_b"))
-        .filter(F.col("_a") != F.col("_b"))
-        .select("fp_hash")
-    )
-    dup = anchors.join(shared, "fp_hash", "left_semi").select("doc_id", "p")
-    prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    run = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    prev_e = F.max(F.col("p") + K - 1).over(prev)
-    marked = dup.withColumn(
-        "_new",
-        F.when(prev_e.isNull() | (F.col("p") > prev_e + 1), 1).otherwise(0),
-    ).withColumn("_island", F.sum("_new").over(run))
-    return (
-        marked.groupBy("doc_id", "_island")
-        .agg(
-            F.min("p").alias("span_start"),
-            (F.max("p") + K - 1).alias("span_end"),
-            (F.max("p") + K - F.min("p")).alias("span_len"),
-            F.count(F.lit(1)).alias("n_anchors"),
-        )
-        .drop("_island")
-        .orderBy("doc_id", "span_start")
+    return _dup_spans(_shared_positions(anchors, "fp_hash"), _WSUB_K).orderBy(
+        "doc_id", "span_start"
     )
 
 
@@ -3084,52 +2997,11 @@ def _ensure_winnow_maintain_store(spark: SparkSession, sf_dir: str) -> str:
     "substring fingerprint store.",
 )
 def substring_winnow_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    K = _WSUB_K
     path = _ensure_winnow_maintain_store(spark, sf_dir)
     base = read_parquet(spark, f"{path}/anchors")
     delta = read_parquet(spark, f"{path}/anchors_delta")
-    # batch-internal sharing: min != max <=> two distinct delta docs
-    # hold the fp (single-phase partial agg, same rewrite as the
-    # winnowed query)
-    intra = (
-        delta.groupBy("fp_hash")
-        .agg(F.min("doc_id").alias("_a"), F.max("doc_id").alias("_b"))
-        .filter(F.col("_a") != F.col("_b"))
-        .select("fp_hash")
-    )
-    # base-side sharing: the fp exists anywhere in the stored base
-    # segment (the delta fp set keys the join; no forced broadcast)
-    delta_fps = delta.select("fp_hash").distinct()
-    base_hit = base.join(delta_fps, "fp_hash", "left_semi").select(
-        "fp_hash"
-    ).distinct()
-    shared = intra.unionByName(base_hit).distinct()
-    dup = delta.join(shared, "fp_hash", "left_semi").select("doc_id", "p")
-    prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    run = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    prev_e = F.max(F.col("p") + K - 1).over(prev)
-    marked = dup.withColumn(
-        "_new",
-        F.when(prev_e.isNull() | (F.col("p") > prev_e + 1), 1).otherwise(0),
-    ).withColumn("_island", F.sum("_new").over(run))
-    return (
-        marked.groupBy("doc_id", "_island")
-        .agg(
-            F.min("p").alias("span_start"),
-            (F.max("p") + K - 1).alias("span_end"),
-            (F.max("p") + K - F.min("p")).alias("span_len"),
-            F.count(F.lit(1)).alias("n_anchors"),
-        )
-        .drop("_island")
-        .orderBy("doc_id", "span_start")
+    return _dup_spans(_delta_shared_positions(base, delta), _WSUB_K).orderBy(
+        "doc_id", "span_start"
     )
 
 
@@ -3221,48 +3093,13 @@ def _ensure_winnow_compact_store(spark: SparkSession, sf_dir: str) -> str:
     "corpus, spans restricted to the delta batch.",
 )
 def substring_winnow_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    K = _WSUB_K
     path = _ensure_winnow_compact_store(spark, sf_dir)
     anchors = read_parquet(spark, f"{path}/anchors")
+    # the fold erased segment boundaries: recover them by predicate
     delta = anchors.filter(F.col("doc_id") % DELTA_MOD == 0)
     base = anchors.filter(F.col("doc_id") % DELTA_MOD != 0)
-    intra = (
-        delta.groupBy("fp_hash")
-        .agg(F.min("doc_id").alias("_a"), F.max("doc_id").alias("_b"))
-        .filter(F.col("_a") != F.col("_b"))
-        .select("fp_hash")
-    )
-    delta_fps = delta.select("fp_hash").distinct()
-    base_hit = base.join(delta_fps, "fp_hash", "left_semi").select(
-        "fp_hash"
-    ).distinct()
-    shared = intra.unionByName(base_hit).distinct()
-    dup = delta.join(shared, "fp_hash", "left_semi").select("doc_id", "p")
-    prev = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    run = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    prev_e = F.max(F.col("p") + K - 1).over(prev)
-    marked = dup.withColumn(
-        "_new",
-        F.when(prev_e.isNull() | (F.col("p") > prev_e + 1), 1).otherwise(0),
-    ).withColumn("_island", F.sum("_new").over(run))
-    return (
-        marked.groupBy("doc_id", "_island")
-        .agg(
-            F.min("p").alias("span_start"),
-            (F.max("p") + K - 1).alias("span_end"),
-            (F.max("p") + K - F.min("p")).alias("span_len"),
-            F.count(F.lit(1)).alias("n_anchors"),
-        )
-        .drop("_island")
-        .orderBy("doc_id", "span_start")
+    return _dup_spans(_delta_shared_positions(base, delta), _WSUB_K).orderBy(
+        "doc_id", "span_start"
     )
 
 
@@ -3361,7 +3198,6 @@ def _register_stream_substring_guard() -> None:
     ) -> DataFrame:
         from pyspark import StorageLevel
 
-        K = _WSUB_K
         bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
         # the anchor store is read once and cached for the whole loop;
         # the test-split fp set is tiny (an eval set, not a corpus)
@@ -3386,31 +3222,7 @@ def _register_stream_substring_guard() -> None:
                 dup = probe.join(test_fps, "fp_hash", "left_semi").select(
                     "doc_id", "p"
                 )
-                prev = (
-                    Window.partitionBy("doc_id")
-                    .orderBy("p")
-                    .rowsBetween(Window.unboundedPreceding, -1)
-                )
-                run = (
-                    Window.partitionBy("doc_id")
-                    .orderBy("p")
-                    .rowsBetween(Window.unboundedPreceding, 0)
-                )
-                prev_e = F.max(F.col("p") + K - 1).over(prev)
-                spans = (
-                    dup.withColumn(
-                        "_new",
-                        F.when(
-                            prev_e.isNull() | (F.col("p") > prev_e + 1), 1
-                        ).otherwise(0),
-                    )
-                    .withColumn("_island", F.sum("_new").over(run))
-                    .groupBy("doc_id", "_island")
-                    .agg(
-                        (F.max("p") + K - F.min("p")).alias("span_len")
-                    )
-                )
-                agg = spans.groupBy("doc_id").agg(
+                agg = _dup_spans(dup, _WSUB_K).groupBy("doc_id").agg(
                     F.count(F.lit(1)).alias("n_dup_spans"),
                     F.max("span_len").alias("max_span_len"),
                 )
@@ -3561,7 +3373,6 @@ def _register_decontamination_excise() -> None:
     def decontamination_excise(
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
-        K = _WSUB_K
         bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
         anchors = _winnow_anchor_store(spark, sf_dir)
         test_fps = (
@@ -3584,31 +3395,8 @@ def _register_decontamination_excise() -> None:
             .join(test_fps, "fp_hash", "left_semi")
             .select("doc_id", "p")
         )
-        prev = (
-            Window.partitionBy("doc_id")
-            .orderBy("p")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        run = (
-            Window.partitionBy("doc_id")
-            .orderBy("p")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-        prev_e = F.max(F.col("p") + K - 1).over(prev)
-        spans = (
-            dup.withColumn(
-                "_new",
-                F.when(
-                    prev_e.isNull() | (F.col("p") > prev_e + 1), 1
-                ).otherwise(0),
-            )
-            .withColumn("_island", F.sum("_new").over(run))
-            .groupBy("doc_id", "_island")
-            .agg(
-                F.min("p").alias("s"),
-                (F.max("p") + K - 1).alias("e"),
-            )
-            .drop("_island")
+        spans = _dup_spans(dup, _WSUB_K).select(
+            "doc_id", F.col("span_start").alias("s"), F.col("span_end").alias("e")
         )
         # kept segments: the gap before each span (LAG over span ends)
         # plus the tail after the last span (ke NULL = to end of text)

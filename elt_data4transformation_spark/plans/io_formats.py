@@ -45,22 +45,27 @@ def csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_io_{os.getpid()}"
-    )
-    csv_path, json_path = base + "_csv", base + "_json"
-    n.coalesce(1).write.mode("overwrite").option("header", True).csv(csv_path)
-    n.coalesce(1).write.mode("overwrite").json(json_path)
-    c = spark.read.schema(_NATION_SCHEMA).option("header", True).csv(csv_path)
-    j = spark.read.schema(_NATION_SCHEMA).json(json_path)
-    return (
-        c.join(
-            F.broadcast(j.select("n_nationkey", F.col("n_name").alias("n_name_json"))),
-            "n_nationkey",
+    # the written files live only for this call: the result is read
+    # back into a local checkpoint before the temp dir is removed
+    with tempfile.TemporaryDirectory(prefix="spark_graft_io_") as base:
+        csv_path = os.path.join(base, "csv")
+        json_path = os.path.join(base, "json")
+        n.coalesce(1).write.mode("overwrite").option("header", True).csv(
+            csv_path
         )
-        .select("n_nationkey", "n_name", "n_regionkey", "n_name_json")
-        .orderBy("n_nationkey")
-    )
+        n.coalesce(1).write.mode("overwrite").json(json_path)
+        c = spark.read.schema(_NATION_SCHEMA).option("header", True).csv(
+            csv_path
+        )
+        j = spark.read.schema(_NATION_SCHEMA).json(json_path).select(
+            "n_nationkey", F.col("n_name").alias("n_name_json")
+        )
+        return (
+            c.join(F.broadcast(j), "n_nationkey")
+            .select("n_nationkey", "n_name", "n_regionkey", "n_name_json")
+            .orderBy("n_nationkey")
+            .localCheckpoint(eager=True)
+        )
 
 
 # --- bucketed co-located join (zero-shuffle large-large join) -------------

@@ -1324,6 +1324,52 @@ def _fingerprint_store(
     return store
 
 
+def _hamming_neardup(
+    spark: SparkSession, store: str, cap: int, max_ham: int
+) -> DataFrame:
+    """Near-dup pairs over a stored (doc_id, k0..k3) fingerprint
+    artifact at ``store``: a band equi-join of the four 16-bit keys
+    under the hub-star ``cap``, rescored by the 64-bit Hamming distance
+    and kept within ``max_ham``; (doc_a, doc_b, hamming) ordered by
+    pair.
+
+    The keys are pinned with an eager local checkpoint (the band melt
+    and both key joins read them): it is one job, like persist() plus
+    count(), but leaves no session cache entry, which a later read of
+    the same path would match after a corpus edit rebuilds the store."""
+    from ..operators import dedup_ops
+
+    keys = read_parquet(spark, store).localCheckpoint(eager=True)
+    bands = dedup_ops.band_table(
+        keys.select(
+            "doc_id", *[F.col(f"k{b}").alias(f"band{b}") for b in range(4)]
+        ),
+        "doc_id",
+        4,
+    )
+    cand = dedup_ops.capped_band_candidates(bands, "doc_id", cap)
+    ka = keys.select(
+        F.col("doc_id").alias("doc_a"),
+        *[F.col(f"k{b}").alias(f"a{b}") for b in range(4)],
+    )
+    kb = keys.select(
+        F.col("doc_id").alias("doc_b"),
+        *[F.col(f"k{b}").alias(f"b{b}") for b in range(4)],
+    )
+    ham = sum(
+        F.bit_count(F.col(f"a{b}").bitwiseXOR(F.col(f"b{b}")))
+        for b in range(4)
+    ).cast("long")
+    return (
+        cand.join(ka, "doc_a")
+        .join(kb, "doc_b")
+        .withColumn("hamming", ham)
+        .filter(F.col("hamming") <= max_ham)
+        .select("doc_a", "doc_b", "hamming")
+        .orderBy("doc_a", "doc_b")
+    )
+
+
 def _dhash_store(spark: SparkSession, sf_dir: str) -> str:
     return _fingerprint_store(
         spark, sf_dir, "dhash", 7, 70, _DH_TWIN_OFF,
@@ -1424,47 +1470,14 @@ def _image_neardup_oracle() -> str:
     "zero-shuffle hashing, bucketed join, no all-pairs anywhere.",
 )
 def image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
-    from ..operators import dedup_ops
-
     # dHash keys come from the STORED fingerprint artifact — computed
     # once per corpus state at publication (encode + real-PNG decode +
     # dHash), read by every later run; the production shape, where
     # perceptual fingerprints are derived when an image is INGESTED
     # and stored beside it (see _dhash_store; same contract as the
     # text signature store and the SRP band store)
-    keys = read_parquet(spark, _dhash_store(spark, sf_dir)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    keys.count()  # eager: band melt + both key joins read the cache
-    bands = dedup_ops.band_table(
-        keys.select(
-            "doc_id", *[F.col(f"k{b}").alias(f"band{b}") for b in range(4)]
-        ),
-        "doc_id",
-        4,
-    )
-    cand = dedup_ops.capped_band_candidates(bands, "doc_id", _DH_CAP)
-    ka = keys.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"k{b}").alias(f"a{b}") for b in range(4)],
-    )
-    kb = keys.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"k{b}").alias(f"b{b}") for b in range(4)],
-    )
-    ham = sum(
-        F.bit_count(F.col(f"a{b}").bitwiseXOR(F.col(f"b{b}")))
-        for b in range(4)
-    ).cast("long")
-    return (
-        cand.join(ka, "doc_a")
-        .join(kb, "doc_b")
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= _DH_HAM)
-        .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
+    return _hamming_neardup(
+        spark, _dhash_store(spark, sf_dir), _DH_CAP, _DH_HAM
     )
 
 
@@ -1587,44 +1600,11 @@ def _video_neardup_oracle() -> str:
     "partition and the pooled 64-bit hash is all that shuffles.",
 )
 def video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
-    from ..operators import dedup_ops
-
     # pooled frame-dHash keys from the STORED fingerprint artifact
     # (container decode + per-frame hashing at publication; see
     # _fingerprint_store)
-    keys = read_parquet(spark, _vid_store(spark, sf_dir)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    keys.count()  # eager: band melt + both key joins read the cache
-    bands = dedup_ops.band_table(
-        keys.select(
-            "doc_id", *[F.col(f"k{b}").alias(f"band{b}") for b in range(4)]
-        ),
-        "doc_id",
-        4,
-    )
-    cand = dedup_ops.capped_band_candidates(bands, "doc_id", _VID_CAP)
-    ka = keys.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"k{b}").alias(f"a{b}") for b in range(4)],
-    )
-    kb = keys.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"k{b}").alias(f"b{b}") for b in range(4)],
-    )
-    ham = sum(
-        F.bit_count(F.col(f"a{b}").bitwiseXOR(F.col(f"b{b}")))
-        for b in range(4)
-    ).cast("long")
-    return (
-        cand.join(ka, "doc_a")
-        .join(kb, "doc_b")
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= _VID_HAM)
-        .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
+    return _hamming_neardup(
+        spark, _vid_store(spark, sf_dir), _VID_CAP, _VID_HAM
     )
 
 
@@ -1825,41 +1805,8 @@ def _audio_neardup_oracle() -> str:
     "anywhere.",
 )
 def audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
-    from ..operators import dedup_ops
-
     # energy-gradient fingerprints from the STORED artifact (WAV
     # decode + hashing at publication; see _fingerprint_store)
-    keys = read_parquet(spark, _afp_store(spark, sf_dir)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    keys.count()  # eager: band melt + both key joins read the cache
-    bands = dedup_ops.band_table(
-        keys.select(
-            "doc_id", *[F.col(f"k{b}").alias(f"band{b}") for b in range(4)]
-        ),
-        "doc_id",
-        4,
-    )
-    cand = dedup_ops.capped_band_candidates(bands, "doc_id", _AFP_CAP)
-    ka = keys.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"k{b}").alias(f"a{b}") for b in range(4)],
-    )
-    kb = keys.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"k{b}").alias(f"b{b}") for b in range(4)],
-    )
-    ham = sum(
-        F.bit_count(F.col(f"a{b}").bitwiseXOR(F.col(f"b{b}")))
-        for b in range(4)
-    ).cast("long")
-    return (
-        cand.join(ka, "doc_a")
-        .join(kb, "doc_b")
-        .withColumn("hamming", ham)
-        .filter(F.col("hamming") <= _AFP_HAM)
-        .select("doc_a", "doc_b", "hamming")
-        .orderBy("doc_a", "doc_b")
+    return _hamming_neardup(
+        spark, _afp_store(spark, sf_dir), _AFP_CAP, _AFP_HAM
     )

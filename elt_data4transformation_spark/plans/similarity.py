@@ -11,13 +11,14 @@ from __future__ import annotations
 import os
 import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import artifacts
 from ..operators.vectors import (
     assign_nearest,
     bucket_cosine_pairs,
+    centroid_means,
     cosine_col,
     cosine_sql,
 )
@@ -35,6 +36,70 @@ EMB_DIM = 64  # testdata embedding dimensionality (TESTDATA.md)
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spread(table(spark, sf_dir, "embeddings")).select(
         "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
+    )
+
+
+def _own_bucket_probes(idx: DataFrame) -> DataFrame:
+    """The query vectors (vec_id < N_QUERIES) of an assigned set
+    (vec_id, v, centroid_id), each probing its own bucket, as
+    (query_id, qv, qc)."""
+    return idx.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("centroid_id").alias("qc"),
+    )
+
+
+def _nprobe_probes(vecs: DataFrame, cent: DataFrame) -> DataFrame:
+    """The query vectors of ``vecs`` (vec_id, v), each probing the
+    NPROBE buckets of ``cent`` (centroid_id, cv) nearest to it, as
+    (query_id, qv, qc). Centroids rank on the 6dp-rounded cosine so the
+    probe cut cannot flip on a fold-order near-tie."""
+    qv = vecs.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
+    )
+    pw = Window.partitionBy("query_id").orderBy(
+        F.desc("_qcos"), F.asc("centroid_id")
+    )
+    return (
+        qv.crossJoin(F.broadcast(cent))
+        .withColumn(
+            "_qcos", F.round(cosine_col(F.col("qv"), F.col("cv")), 6)
+        )
+        .withColumn("_pr", F.row_number().over(pw))
+        .filter(F.col("_pr") <= NPROBE)
+        .select("query_id", "qv", F.col("centroid_id").alias("qc"))
+    )
+
+
+def _ivf_topk(idx: DataFrame, probes: DataFrame, *extra: Column) -> DataFrame:
+    """The TOP_K nearest neighbors of each probe: ``idx`` (vec_id, v,
+    centroid_id) joined on the bucket to the broadcast ``probes``
+    (query_id, qv, qc), the query itself excluded. Returns (query_id,
+    rank, neighbor_id, cosine, *extra) ordered by (query_id, rank).
+
+    The cosine is rounded to 6dp BEFORE the rank window (the
+    round-before-compare rule): ranking the raw cosine here against a
+    fold-order cosine in the oracle could flip a near-tie across the
+    top-k cut."""
+    scored = idx.join(
+        F.broadcast(probes),
+        (F.col("centroid_id") == F.col("qc"))
+        & (F.col("vec_id") != F.col("query_id")),
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(cosine_col(F.col("qv"), F.col("v")), 6).alias("cos"),
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= TOP_K)
+        .select(
+            "query_id", "rank", "neighbor_id", F.col("cos").alias("cosine"),
+            *extra,
+        )
+        .orderBy("query_id", "rank")
     )
 
 
@@ -163,40 +228,9 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _vectors(spark, sf_dir)
-
-    def assign(base: DataFrame, cent: DataFrame) -> DataFrame:
-        return assign_nearest(base, cent).drop("cos")
-
-    cent0 = (
-        e.filter(F.col("vec_id") < N_CENTROIDS)
-        .select(F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv"))
-    )
-    assigned0 = assign(e.select("vec_id", "v"), cent0)
-    # one Lloyd iteration: per-dimension member mean, rounded to 6
-    # decimals so both engines build identical refined centroids;
-    # array_sort over (dim, m) structs rebuilds the vector in a
-    # deterministic order (collect_list alone is order-unstable)
-    cent = (
-        assigned0.select("centroid_id", F.posexplode("v").alias("dim", "val"))
-        .groupBy("centroid_id", "dim")
-        .agg(F.round(F.avg("val"), 6).alias("m"))
-        .groupBy("centroid_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                lambda x: x["m"],
-            ).alias("cv")
-        )
-    )
-    assigned = assign(e, cent)
-    q = (
-        assigned.filter(F.col("vec_id") < N_QUERIES)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("centroid_id").alias("qc"),
-        )
-    )
+    assigned = assign_nearest(e, _refined_centroids(e)).drop("cos")
+    q = _own_bucket_probes(assigned)
+    # ranks on the raw cosine, as its oracle does (not _ivf_topk)
     scored = (
         assigned.join(
             F.broadcast(q),
@@ -305,33 +339,8 @@ def ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = max(1, math.ceil(math.sqrt(n)))
     cent = _refined_centroids(e.select("vec_id", "v"), k=k)
     assigned = assign_nearest(e.select("vec_id", "v"), cent).drop("cos")
-    q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("centroid_id").alias("qc"),
-    )
-    scored = assigned.join(
-        F.broadcast(q),
-        (F.col("centroid_id") == F.col("qc"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cosine_col(F.col("qv"), F.col("v")), 6).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "rank",
-            F.col("neighbor_id"),
-            F.col("cos").alias("cosine"),
-            F.lit(k).cast("long").alias("k"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    k_col = F.lit(k).cast("long").alias("k")
+    return _ivf_topk(assigned, _own_bucket_probes(assigned), k_col)
 
 
 def _ivf_oracle(exclude: str | None = None) -> str:
@@ -492,35 +501,7 @@ def _prep_stream_ivf_base(spark: SparkSession, sf_dir: str) -> None:
 def ann_stored_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_stored_ivf(spark, sf_dir)
     idx = read_parquet(spark, f"{path}/index")
-    q = idx.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("centroid_id").alias("qc"),
-    )
-    scored = idx.join(
-        F.broadcast(q),
-        (F.col("centroid_id") == F.col("qc"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        # round BEFORE the rank window (round-before-compare rule):
-        # ranking on the raw cosine here but a fold-order cosine in the
-        # oracle could flip a near-tie across the top-k cut
-        F.round(cosine_col(F.col("qv"), F.col("v")), 6).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            F.col("cos").alias("cosine"),
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _ivf_topk(idx, _own_bucket_probes(idx))
 
 
 NPROBE = 2  # buckets searched per query in the multi-probe variant
@@ -528,29 +509,17 @@ NPROBE = 2  # buckets searched per query in the multi-probe variant
 
 def _refined_centroids(e: DataFrame, k: int = N_CENTROIDS) -> DataFrame:
     """Seed centroids (vec_id < ``k``) refined by one deterministic
-    Lloyd iteration — the same math as ann_ivf_topk's inline pipeline
-    (elementwise member mean rounded to 6dp, vector rebuilt in dim
-    order)."""
+    Lloyd iteration (operators.vectors.centroid_means)."""
     cent0 = e.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
     )
-    assigned0 = assign_nearest(e.select("vec_id", "v"), cent0).drop("cos")
     # NOT checkpointed (measured): pinning the k-row result with an
     # eager job read 0.93x on ann_ivf_nprobe but 1.67x on
     # ann_ivf_scaled in the interleaved A/B — the runtime reuses the
     # identical broadcast subtrees on its own, and the extra serial
     # job costs more than the (already-shared) Lloyd pass
-    return (
-        assigned0.select("centroid_id", F.posexplode("v").alias("dim", "val"))
-        .groupBy("centroid_id", "dim")
-        .agg(F.round(F.avg("val"), 6).alias("m"))
-        .groupBy("centroid_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                lambda x: x["m"],
-            ).alias("cv")
-        )
+    return centroid_means(
+        assign_nearest(e.select("vec_id", "v"), cent0).drop("cos")
     )
 
 
@@ -639,39 +608,7 @@ def ann_ivf_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _vectors(spark, sf_dir).select("vec_id", "v")
     cent = _refined_centroids(e)
     assigned = assign_nearest(e, cent).drop("cos")
-    qv = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    pw = Window.partitionBy("query_id").orderBy(
-        F.desc("_qcos"), F.asc("centroid_id")
-    )
-    probes = (
-        qv.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "_qcos", F.round(cosine_col(F.col("qv"), F.col("cv")), 6)
-        )
-        .withColumn("_pr", F.row_number().over(pw))
-        .filter(F.col("_pr") <= NPROBE)
-        .select("query_id", "qv", F.col("centroid_id").alias("qc"))
-    )
-    scored = assigned.join(
-        F.broadcast(probes),
-        (F.col("centroid_id") == F.col("qc"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cosine_col(F.col("qv"), F.col("v")), 6).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "rank", "neighbor_id", F.col("cos").alias("cosine")
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _ivf_topk(assigned, _nprobe_probes(e, cent))
 
 
 def _ivf_maintain_oracle() -> str:
@@ -824,29 +761,7 @@ def _probe_ivf_index(spark: SparkSession, path: str) -> DataFrame:
         idx = idx.join(
             F.broadcast(dels.select("vec_id")), "vec_id", "left_anti"
         )
-    q = idx.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("centroid_id").alias("qc"),
-    )
-    scored = idx.join(
-        F.broadcast(q),
-        (F.col("centroid_id") == F.col("qc"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cosine_col(F.col("qv"), F.col("v")), 6).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "rank", "neighbor_id", F.col("cos").alias("cosine")
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _ivf_topk(idx, _own_bucket_probes(idx))
 
 
 @register(
@@ -1230,39 +1145,7 @@ def ann_ivf_split_nprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_split_ivf(spark, sf_dir)
     idx = read_parquet(spark, f"{path}/index")
     cent = read_parquet(spark, f"{path}/centroids")
-    qv = idx.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    pw = Window.partitionBy("query_id").orderBy(
-        F.desc("_qcos"), F.asc("centroid_id")
-    )
-    probes = (
-        qv.crossJoin(F.broadcast(cent))
-        .withColumn(
-            "_qcos", F.round(cosine_col(F.col("qv"), F.col("cv")), 6)
-        )
-        .withColumn("_pr", F.row_number().over(pw))
-        .filter(F.col("_pr") <= NPROBE)
-        .select("query_id", "qv", F.col("centroid_id").alias("qc"))
-    )
-    scored = idx.join(
-        F.broadcast(probes),
-        (F.col("centroid_id") == F.col("qc"))
-        & (F.col("vec_id") != F.col("query_id")),
-    ).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cosine_col(F.col("qv"), F.col("v")), 6).alias("cos"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id", "rank", "neighbor_id", F.col("cos").alias("cosine")
-        )
-        .orderBy("query_id", "rank")
-    )
+    return _ivf_topk(idx, _nprobe_probes(idx, cent))
 
 
 DEL_MOD = 7  # vec_id % 7 == 3 is the takedown batch
@@ -1878,26 +1761,6 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     e = _vectors(spark, sf_dir)
-
-    def assign(base: DataFrame, cent: DataFrame) -> DataFrame:
-        return assign_nearest(base, cent)
-
-    def update(assigned: DataFrame) -> DataFrame:
-        return (
-            assigned.select(
-                "centroid_id", F.posexplode("v").alias("dim", "val")
-            )
-            .groupBy("centroid_id", "dim")
-            .agg(F.round(F.avg("val"), 6).alias("m"))
-            .groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                    lambda x: x["m"],
-                ).alias("cv")
-            )
-        )
-
     # ONE localCheckpoint per Lloyd iteration: without it the centroid
     # plan CHAINS (iteration i's broadcast subtree replays iterations
     # 0..i-1, re-scanning the base table quadratically — and Catalyst
@@ -1916,8 +1779,10 @@ def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast path schedules the nested chain worse than three
     # explicit tiny jobs do
     for _ in range(_KM_ITERS):
-        cent = update(assign(base, cent)).localCheckpoint(eager=True)
-    final = assign(base, cent)
+        cent = centroid_means(assign_nearest(base, cent)).localCheckpoint(
+            eager=True
+        )
+    final = assign_nearest(base, cent)
     return (
         final.groupBy("centroid_id")
         .agg(

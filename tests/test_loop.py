@@ -1,7 +1,7 @@
 """The shared stream lifecycle (streaming/loop.py): the tag-ordered
 drain under split and gapped arrivals, temp-dir hygiene of the stream
-queries, and a static guard that keeps every availableNow run on the
-one self-cleaning runner."""
+queries and of csv_json_roundtrip, and a static guard that keeps every
+availableNow run on the one self-cleaning runner."""
 
 from __future__ import annotations
 
@@ -116,6 +116,16 @@ def test_stream_runs_leave_temp_dir_empty(spark, tmp_path, tmp_path_factory, mon
     assert foreach_batch_snapshot_diff(spark, SF_SMALL).collect()
     assert tumbling_counts(spark, SF_SMALL).collect()
     assert REGISTRY["stream_index_ingest"].fn(spark, SF_SMALL).collect()
+    assert os.listdir(tmp_path) == []
+
+
+def test_csv_json_roundtrip_leaves_temp_dir_empty(spark, tmp_path, monkeypatch):
+    # its CSV and JSON files are read back before their temp dir goes
+    from elt_data4transformation_spark.plans import REGISTRY
+    from tests.conftest import SF_SMALL
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert REGISTRY["csv_json_roundtrip"].fn(spark, SF_SMALL).count() == 25
     assert os.listdir(tmp_path) == []
 
 
