@@ -1046,8 +1046,9 @@ def canonical_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dashboard's headline table as one composite (reference "
     "streamlit_app/pages/3_Topic_Browser.py:75-120): per-source "
     "dataset totals, three DISTINCT status streams (assigned / "
-    "review / excluded) UNION'd, conditional-DISTINCT counts per "
-    "status (ClickHouse uniqExactIf -> countDistinct(when)), and a "
+    "review / excluded) UNION'd, conditional counts per status "
+    "(ClickHouse uniqExactIf -> count(when) over the already-distinct "
+    "streams), and a "
     "LEFT JOIN back onto totals with ifNull-zero defaults and the "
     "residual unlabeled = total - handled (handled counts each "
     "dataset ONCE even when it sits in several status streams — the "
@@ -1080,14 +1081,19 @@ def coverage_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(stream("O", "review"))
         .unionByName(stream("P", "excluded"))
     )
+    # each stream is already distinct per (source, dataset_id), so a
+    # plain conditional count is its uniqExactIf; one DISTINCT
+    # aggregate, not four, also keeps Spark's distinct-aggregate
+    # rewrite out: it orders its Expand projections by expression-id
+    # hash, so each run would generate new source text and recompile
     counts = handled.groupBy("source").agg(
-        F.countDistinct(
+        F.count(
             F.when(F.col("status") == "topic", F.col("dataset_id"))
         ).alias("labeled_datasets"),
-        F.countDistinct(
+        F.count(
             F.when(F.col("status") == "review", F.col("dataset_id"))
         ).alias("review_datasets"),
-        F.countDistinct(
+        F.count(
             F.when(F.col("status") == "excluded", F.col("dataset_id"))
         ).alias("excluded_datasets"),
         F.countDistinct("dataset_id").alias("handled_datasets"),

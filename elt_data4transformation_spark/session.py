@@ -1,9 +1,11 @@
 """SparkSession factory.
 
 Defaults are tuned for correctness-vs-oracle comparison (UTC session
-timezone, ANSI off) and for scale (AQE on, skew-join handling on,
-shuffle partitions sized to the local core count but overridable for a
-real cluster via SPARK_GRAFT_SHUFFLE_PARTITIONS).
+timezone; ANSI mode is Spark's default, on) and for scale (AQE on,
+skew-join handling on, a fixed 32 shuffle partitions, overridable for
+a real cluster via SPARK_GRAFT_SHUFFLE_PARTITIONS, and a
+generated-class cache that holds every class the registry's
+whole-stage codegen generates).
 """
 
 from __future__ import annotations
@@ -70,6 +72,24 @@ def get_spark(
         # concern, not a scale parameter.
         .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
+        # Spark's generated-class cache (CodeGenerator.cache, an LRU
+        # keyed by source text) defaults to 100 entries, but one pass of
+        # perfbench's dashboard mix generates 127 distinct classes and
+        # one ingest pass 118: at 100 a cycled mix evicts every class
+        # before its next use and Janino-compiles about 9 per op (795 ms
+        # per dashboard pass), then runs them un-JITted. All 214
+        # queries plus their prepare hooks generate about 2870 distinct
+        # classes at sf0.001 (about 3420 with the stage id below in the
+        # class name; metaspace 240 MB), so 4096 holds the working set.
+        # A static conf: it only takes effect on the builder.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # On, the codegen stage id is part of each class name, and AQE
+        # numbers query stages in the order they are planned, which
+        # varies run to run: a re-run over unchanged inputs would
+        # generate new source text (74 compiles in 11 queries on a
+        # second registry pass at sf0.001). Off, equal stage code is one
+        # class, within a query, across runs and across queries.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # keep stderr for log lines, not `[Stage N:>` progress bars
         .config("spark.ui.showConsoleProgress", "false")
     )

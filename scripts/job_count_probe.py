@@ -7,12 +7,20 @@ Runs each named query to the noop sink ``runs`` times after an untimed
 prepare/warm pass, and reports per-run wall seconds plus the number of
 Spark JOBS the run submitted (StatusTracker delta — triggers, probe
 writes, segment writes, pins and read-backs each cost at least one
-job, so the delta is the honest count of scheduled work).
+job, so the delta is the honest count of scheduled work) and the
+number of whole-stage-codegen classes it Janino-compiled (CodegenMetrics
+delta — a class already in Spark's generated-class cache costs none).
+
+The runs of one query follow each other back to back, so every class a
+run generates is still cached for the next: the probe cannot show a
+cache-capacity effect (classes evicted by the other queries of a cycled
+mix). A non-zero ``compiles`` after the warm pass means the run
+generated source text that differs from the previous run's.
 
 Usage: python scripts/job_count_probe.py q1[,q2,...] [runs]
 Emits one JSON line:
   {"metric": "job_count_probe", "queries": {name:
-      {"jobs": [..], "sec": [..], "min_sec": s}}}
+      {"jobs": [..], "compiles": [..], "sec": [..], "min_sec": s}}}
 """
 
 from __future__ import annotations
@@ -37,6 +45,13 @@ def _jobs_so_far(spark) -> int:
     return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
 
 
+def _compiles_so_far(spark) -> int:
+    # one compilation-time sample per generated class Janino compiled;
+    # a cache hit records none
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = [q for q in sys.argv[1].split(",") if q]
@@ -53,17 +68,21 @@ def main() -> None:
         # warm pass (JIT, page cache) — not recorded
         spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         spark.catalog.clearCache()
-        jobs, secs = [], []
+        jobs, compiles, secs = [], [], []
         for _ in range(runs):
-            j0 = _jobs_so_far(spark)
+            j0, c0 = _jobs_so_far(spark), _compiles_so_far(spark)
             t0 = time.monotonic()
             spec.fn(spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             secs.append(round(time.monotonic() - t0, 3))
             jobs.append(_jobs_so_far(spark) - j0)
+            compiles.append(_compiles_so_far(spark) - c0)
             spark.catalog.clearCache()
-        out[name] = {"jobs": jobs, "sec": secs, "min_sec": min(secs)}
+        out[name] = {
+            "jobs": jobs, "compiles": compiles, "sec": secs,
+            "min_sec": min(secs),
+        }
     print(
         json.dumps({"metric": "job_count_probe", "queries": out})
     )
