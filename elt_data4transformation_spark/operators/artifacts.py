@@ -35,7 +35,12 @@ postgres.py:1160-1239). Two lifecycle hazards this module closes:
 where ``<store>`` is the parent of ``plans.dedup._index_root()``
 (``plans.dedup._artifact_path`` is the one place that spells this out;
 it re-reads ``_index_root`` on every call, so rebinding it relocates
-the whole store).
+the whole store). Each artifact is declared once as a record,
+``plans.dedup.Stored(name, table, params, build, step=None)``: its
+path, its fingerprint over ``<sf_dir>/<table>.parquet`` and ``params``,
+and the ``publish`` / ``ensure_staged`` call all come from the record,
+which calls this module's functions through the module so a tracer
+that rebinds them sees every check and build.
 
 **Staged stamp order.** An artifact maintained in place (base build +
 one ingest/delete step) goes through ``ensure_staged``: unless the
@@ -43,7 +48,13 @@ FINAL fingerprint is current, publish the base under the BASE
 fingerprint (a no-op when the base is already current), run the step,
 then stamp the final fingerprint. A crash after the base publish
 leaves meta at the base fingerprint, so the rerun repeats only the
-step, which must therefore overwrite its own partial output.
+step, which must therefore overwrite its own partial output. A record
+with ``step=(key, tag, fn)`` takes this order, with base fingerprint
+``params|key=``, final fingerprint ``params|key=tag`` and final meta
+``{key: [tag]}``. Two lifecycles keep other stamp orders by hand:
+``plans.dedup._ensure_compact_index`` stamps its final fingerprint
+before compacting, and ``plans.similarity._ensure_split_ivf`` stamps a
+pre-split fingerprint before splitting.
 """
 
 from __future__ import annotations

@@ -16,8 +16,10 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Callable
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import textfns as T
@@ -29,6 +31,7 @@ from .registry import register
 N_MINHASH = 8
 N_BANDS = 2  # 4 hashes per band
 SHINGLE = 5
+DELTA_MOD = 5  # doc_id % 5 == 0 -> the incoming 20% batch; rest = corpus
 # the (id, text, signature) arguments every documents band index shares
 BAND_KW = dict(
     id_col="doc_id",
@@ -137,48 +140,103 @@ def _artifact_path(name: str, sf_dir: str) -> str:
     )
 
 
-def _sigstore(spark: SparkSession, sf_dir: str) -> str:
-    """The SIGNATURE STORE: a fingerprinted stored artifact holding
-    every document's shingle set and LSH band keys — computed ONCE per
-    corpus state and read by every stored-index probe instead of
-    re-shingling the probe batch per query per session; it is the
-    prepare hook of every signature-store consumer.
+@dataclass(frozen=True)
+class Stored:
+    """One stored artifact, as data: ``name`` (its directory under the
+    store, see _artifact_path), the corpus ``table`` whose parquet file
+    it is fingerprinted on, the logical ``params`` string (a zero-arg
+    callable when it reads a run-time rule) and ``build(spark, sf_dir,
+    tmp)``, which writes the artifact into ``tmp`` and may return extra
+    meta fields. Calling the record with ``(spark, sf_dir)`` publishes
+    the artifact unless it is current and returns its path; a current
+    artifact costs one fingerprint stat and no ``table()`` call, since
+    every corpus read lives inside ``build`` or the step.
 
-    This is the at-rest half of what the ingest loop already does in
-    flight (stream_index_ingest computes each arriving batch's
-    signatures exactly once and persists them as the merge segment):
-    in a production pipeline signatures are computed when a document
-    ARRIVES and stored beside it; no later consumer ever re-derives
-    them from text. Signatures are pure per-row functions of
-    (text, params), so stored and freshly-computed rows are identical
-    (pinned by test) and the DuckDB oracles — which recompute from raw
-    text every run — still match bit-for-bit. ANY corpus edit
-    rebuilds, a stable corpus reuses with zero text I/O. Format =
-    write_band_index over the FULL table (bands partitioned by
-    band_idx, shingles flat); a probe filters its delta predicate down
-    the id column — at cluster scale the store would additionally be
-    bucketed by id."""
-    store = _artifact_path("dedup_index_sigstore", sf_dir)
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "documents.parquet")],
-        params=f"sigstore|sh={SHINGLE}|mh={N_MINHASH}|bands={N_BANDS}"
-        f"|fmt=L1|part=mod{DELTA_MOD}",
+    ``step=(key, tag, fn)`` makes it a staged artifact (the base plus
+    one in-place ingest/delete step, artifacts.ensure_staged): the base
+    is fingerprinted ``params|key=``, the final state ``params|key=tag``
+    with meta ``{key: [tag]}``, and ``fn(spark, sf_dir, path, tag)``
+    runs the step, overwriting its own partial output."""
+
+    name: str
+    table: str
+    params: str | Callable[[], str]
+    build: Callable[[SparkSession, str, str], dict | None]
+    step: tuple[str, str, Callable] | None = None
+
+    def __call__(self, spark: SparkSession, sf_dir: str) -> str:
+        path = _artifact_path(self.name, sf_dir)
+        src = [os.path.join(sf_dir, f"{self.table}.parquet")]
+        params = self.params() if callable(self.params) else self.params
+        meta: dict = {}  # filled by build; publish writes it after build
+
+        def build(tmp: str) -> None:
+            meta.update(self.build(spark, sf_dir, tmp) or {})
+
+        if self.step is None:
+            fp = artifacts.source_fingerprint(src, params)
+            artifacts.publish(path, fp, build, meta)
+        else:
+            key, tag, step = self.step
+            artifacts.ensure_staged(
+                path,
+                artifacts.source_fingerprint(src, f"{params}|{key}="),
+                artifacts.source_fingerprint(src, f"{params}|{key}={tag}"),
+                build,
+                lambda: step(spark, sf_dir, path, tag),
+                {key: [tag]},
+            )
+        return path
+
+
+def _docs(spark: SparkSession, sf_dir: str, pred=None) -> DataFrame:
+    """The ``documents`` rows matching ``pred``, spread; filtered
+    before spread() — the repartition is a barrier Catalyst won't push
+    filters through."""
+    d = table(spark, sf_dir, "documents")
+    return spread(d if pred is None else d.filter(pred))
+
+
+def _band_build(pred: Callable[[], Column]):
+    """Build of a documents band index over the rows matching
+    ``pred()`` (a callable: no Column exists before the session)."""
+    return lambda spark, sf_dir, tmp: dedup_ops.write_band_index(
+        _docs(spark, sf_dir, pred()), tmp, **BAND_KW
     )
-    artifacts.publish(
-        store,
-        fp,
-        lambda tmp: dedup_ops.write_band_index(
-            spread(table(spark, sf_dir, "documents")),
-            tmp,
-            **BAND_KW,
-            # bucket the store by the ingest id class: a delta probe
-            # filters doc_mod and the scan prunes the other classes'
-            # directories (the 100 TB id-range pruning claim, asserted
-            # in tests)
-            partition_mod=DELTA_MOD,
-        ),
-    )
-    return store
+
+
+# the band-index config every documents band artifact is keyed on
+_BAND_PARAMS = f"|sh={SHINGLE}|mh={N_MINHASH}|bands={N_BANDS}|fmt=L1"
+
+# The SIGNATURE STORE: a fingerprinted stored artifact holding every
+# document's shingle set and LSH band keys — computed ONCE per corpus
+# state and read by every stored-index probe instead of re-shingling
+# the probe batch per query per session; it is the prepare hook of
+# every signature-store consumer.
+#
+# This is the at-rest half of what the ingest loop already does in
+# flight (stream_index_ingest computes each arriving batch's
+# signatures exactly once and persists them as the merge segment): in
+# a production pipeline signatures are computed when a document
+# ARRIVES and stored beside it; no later consumer ever re-derives them
+# from text. Signatures are pure per-row functions of (text, params),
+# so stored and freshly-computed rows are identical (pinned by test)
+# and the DuckDB oracles — which recompute from raw text every run —
+# still match bit-for-bit. ANY corpus edit rebuilds, a stable corpus
+# reuses with zero text I/O. Format = write_band_index over the FULL
+# table (bands partitioned by band_idx, shingles flat), bucketed by
+# the ingest id class (partition_mod): a delta probe filters doc_mod
+# and the scan prunes the other classes' directories (the 100 TB
+# id-range pruning claim, asserted in tests); at cluster scale the
+# store would additionally be bucketed by id.
+_sigstore = Stored(
+    "dedup_index_sigstore",
+    "documents",
+    f"sigstore{_BAND_PARAMS}|part=mod{DELTA_MOD}",
+    lambda spark, sf_dir, tmp: dedup_ops.write_band_index(
+        _docs(spark, sf_dir), tmp, **BAND_KW, partition_mod=DELTA_MOD
+    ),
+)
 
 
 @register(
@@ -637,40 +695,34 @@ def _srp_twins_of(e0: DataFrame) -> DataFrame:
     )
 
 
-def _srp_band_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stored SRP band keys for the REAL embeddings AND the forged
-    fixture twins — the vector sibling of the text signature store
-    (_sigstore): published once per corpus state and read by every
-    later run; it is also embedding_neardup_srp's prepare hook. The
-    twins are a pure function of the corpus (the fixture's re-encode
-    analog), so their keys are stored too — the
-    24-plane sign-fold projection (whose CODEGEN alone costs seconds
-    per session) never runs at query time at all. Deterministic
-    planes make stored and fresh keys identical — pinned by test; the
-    oracle recomputes everything from raw vectors and still matches
-    exact-hash."""
-    store = _artifact_path("srp_sigstore", sf_dir)
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "embeddings.parquet")],
-        params=f"srp|planes={_SRP_PLANES}|bands={_SRP_BANDS}"
-        f"|bits={_SRP_BITS}|signs=md5-rademacher"
-        f"|twins=n{_SRP_TWIN_N}_off100000",
+def _build_srp_bands(spark: SparkSession, sf_dir: str, tmp: str) -> None:
+    e0 = spread(table(spark, sf_dir, "embeddings")).select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("v"),
     )
+    twin = _srp_twins_of(e0)
+    artifacts.sized(
+        _srp_bands_of(e0.unionByName(twin)), "band_idx"
+    ).write.mode("overwrite").partitionBy("band_idx").parquet(f"{tmp}/bands")
 
-    def build(tmp: str) -> None:
-        e0 = spread(table(spark, sf_dir, "embeddings")).select(
-            "vec_id",
-            F.col("embedding").cast("array<double>").alias("v"),
-        )
-        twin = _srp_twins_of(e0)
-        artifacts.sized(
-            _srp_bands_of(e0.unionByName(twin)), "band_idx"
-        ).write.mode("overwrite").partitionBy("band_idx").parquet(
-            f"{tmp}/bands"
-        )
 
-    artifacts.publish(store, fp, build)
-    return read_parquet(spark, f"{store}/bands")
+# Stored SRP band keys (``bands/``) for the REAL embeddings AND the
+# forged fixture twins — the vector sibling of the text signature
+# store (_sigstore): published once per corpus state and read by every
+# later run; it is also embedding_neardup_srp's prepare hook. The twins
+# are a pure function of the corpus (the fixture's re-encode analog),
+# so their keys are stored too — the 24-plane sign-fold projection
+# (whose CODEGEN alone costs seconds per session) never runs at query
+# time at all. Deterministic planes make stored and fresh keys
+# identical — pinned by test; the oracle recomputes everything from raw
+# vectors and still matches exact-hash.
+_srp_band_store = Stored(
+    "srp_sigstore",
+    "embeddings",
+    f"srp|planes={_SRP_PLANES}|bands={_SRP_BANDS}|bits={_SRP_BITS}"
+    f"|signs=md5-rademacher|twins=n{_SRP_TWIN_N}_off100000",
+    _build_srp_bands,
+)
 
 
 def _srp_oracle() -> str:
@@ -800,7 +852,9 @@ def embedding_neardup_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the candidate self-join (and the width aggregate under the cap)
     # consumes `bands` three times, and unlike persist() it leaves no
     # session cache entry that a later read of a rebuilt store matches
-    bands = _srp_band_store(spark, sf_dir).localCheckpoint(eager=True)
+    bands = read_parquet(
+        spark, f"{_srp_band_store(spark, sf_dir)}/bands"
+    ).localCheckpoint(eager=True)
     cand = dedup_ops.capped_band_candidates(
         bands, "vec_id", _SRP_MAX_BUCKET
     )
@@ -1052,8 +1106,6 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- incremental dedup: a new batch probed against the corpus index --------
 
-DELTA_MOD = 5  # doc_id % 5 == 0 -> the incoming 20% batch; rest = corpus
-
 
 def _incremental_probe_oracle(
     idx_pred: str = f"doc_id % {DELTA_MOD} <> 0",
@@ -1157,31 +1209,41 @@ def dedup_incremental_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe = bands_of(delta).select(
         F.col("doc_id").alias("new_doc_id"), "band_idx", "band_key"
     )
-    from pyspark import StorageLevel
-
     cand = (
         idx.join(F.broadcast(probe), ["band_idx", "band_key"])
         .select("new_doc_id", F.col("doc_id").alias("matched_doc_id"))
+        # hash-partitioned on the distinct key by an explicit count: the
+        # distinct needs no second shuffle, and AQE cannot coalesce the
+        # pinned frame to one partition, which would run the rescore's
+        # array intersects in one task
+        .repartition(
+            spark.sparkContext.defaultParallelism, "new_doc_id", "matched_doc_id"
+        )
         .distinct()
-        # persist + eager count: cand feeds BOTH the corpus semi-join
-        # (sh_hit) and the rescore join below — without the
-        # materialization each consumer re-ran the full corpus
-        # band-table build (shingle + minhash over every corpus doc,
-        # the most expensive subtree here; measured ~1.5 s per extra
-        # execution at sf0.1). Eager because two consumers in one
-        # action race a cold cache and both compute.
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        # pinned once: cand feeds BOTH the corpus semi-join (sh_hit)
+        # and the rescore join below — without the materialization
+        # each consumer re-ran the full corpus band-table build
+        # (shingle + minhash over every corpus doc, the most expensive
+        # subtree here; measured ~1.5 s per extra execution at sf0.1).
+        # An eager local checkpoint, not persist(): a cache entry
+        # outlives the call and a later run over an edited corpus
+        # matches it and reads the old candidates.
+        .localCheckpoint(eager=True)
     )
-    cand.count()
     # exact re-score: delta shingles are recomputed for the whole (small)
     # batch; corpus shingles only for rows that matched a band
     sh_new = delta.select(
         F.col("doc_id").alias("new_doc_id"),
         T.char_shingles_col(SHINGLE).alias("_sa"),
     )
+    # the matched-id set is delta-proportional; broadcast it explicitly:
+    # the checkpoint carries only the pre-join size estimate, which
+    # would plan a corpus shuffle here
     sh_hit = (
         corpus.join(
-            cand.select(F.col("matched_doc_id").alias("doc_id")).distinct(),
+            F.broadcast(
+                cand.select(F.col("matched_doc_id").alias("doc_id")).distinct()
+            ),
             "doc_id",
             "left_semi",
         )
@@ -1275,198 +1337,134 @@ def _stored_delta_sig(
     )
 
 
-def _ensure_stored_index(spark: SparkSession, sf_dir: str) -> str:
-    """Lifecycle half of dedup_stored_index: the corpus band+shingle
-    artifacts, fingerprint-published once per corpus state."""
-    d = table(spark, sf_dir, "documents")
-    corpus = spread(d.filter(F.col("doc_id") % DELTA_MOD != 0))
-    path = _artifact_path("dedup_index", sf_dir)
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "documents.parquet")],
-        params=f"dedup_stored_index|corpus=doc_id%{DELTA_MOD}!=0"
-        f"|sh={SHINGLE}|mh={N_MINHASH}|bands={N_BANDS}|fmt=L1",
-    )
-    artifacts.publish(
-        path,
-        fp,
-        lambda tmp: dedup_ops.write_band_index(corpus, tmp, **BAND_KW),
-    )
-    return path
+# Lifecycle half of dedup_stored_index: the corpus band+shingle
+# artifacts, fingerprint-published once per corpus state.
+_ensure_stored_index = Stored(
+    "dedup_index",
+    "documents",
+    f"dedup_stored_index|corpus=doc_id%{DELTA_MOD}!=0{_BAND_PARAMS}",
+    _band_build(lambda: F.col("doc_id") % DELTA_MOD != 0),
+)
 
 
-def _prep_stored_index(spark: SparkSession, sf_dir: str) -> None:
-    _ensure_stored_index(spark, sf_dir)
-    _sigstore(spark, sf_dir)
-
-
-def _ensure_maintain_index(spark: SparkSession, sf_dir: str) -> str:
-    """Lifecycle half of dedup_index_maintain: base index over
-    doc_id%5>=2 with ingest A (doc_id%5==0) merged as a segment."""
-    d = table(spark, sf_dir, "documents")
-    corpus = spread(d.filter(F.col("doc_id") % DELTA_MOD >= 2))
-    ingest_a = spread(d.filter(F.col("doc_id") % DELTA_MOD == 0))
-    path = _artifact_path("dedup_index_maintain", sf_dir)
-    src = [os.path.join(sf_dir, "documents.parquet")]
-    params = (
-        f"dedup_index_maintain|base=doc_id%{DELTA_MOD}>=2"
-        f"|sh={SHINGLE}|mh={N_MINHASH}|bands={N_BANDS}|fmt=L1"
-    )
+def _merge_ingest_a(spark: SparkSession, sf_dir: str, path: str, tag: str) -> None:
     # the ingest step probes (the dedup decision for A's rows would be
     # made here) and MERGEs, so every later ingest sees A
-    artifacts.ensure_staged(
-        path,
-        artifacts.source_fingerprint(src, params + "|ingests="),
-        artifacts.source_fingerprint(src, params + "|ingests=a"),
-        lambda tmp: dedup_ops.write_band_index(corpus, tmp, **BAND_KW),
-        lambda: dedup_ops.merge_band_index(
-            spark, path, ingest_a, tag="a", **BAND_KW
-        ),
-        {"ingests": ["a"]},
-    )
-    return path
+    ingest_a = _docs(spark, sf_dir, F.col("doc_id") % DELTA_MOD == 0)
+    dedup_ops.merge_band_index(spark, path, ingest_a, tag=tag, **BAND_KW)
 
 
-def _prep_maintain_index(spark: SparkSession, sf_dir: str) -> None:
-    _ensure_maintain_index(spark, sf_dir)
-    _sigstore(spark, sf_dir)
-
-
-def _ensure_delete_index(spark: SparkSession, sf_dir: str) -> str:
-    """Lifecycle half of dedup_index_delete: full-corpus index with
-    doc_id%10==7 tombstoned."""
-    d = table(spark, sf_dir, "documents")
-    corpus = spread(d.filter(F.col("doc_id") % DELTA_MOD != 0))
-    path = _artifact_path("dedup_index_delete", sf_dir)
-    src = [os.path.join(sf_dir, "documents.parquet")]
-    params = (
-        f"dedup_index_delete|corpus=doc_id%{DELTA_MOD}!=0"
-        f"|sh={SHINGLE}|mh={N_MINHASH}|bands={N_BANDS}|fmt=L1"
-    )
+def _tombstone_d7(spark: SparkSession, sf_dir: str, path: str, tag: str) -> None:
     # the takedown step tombstones doc_id%10==7
-    artifacts.ensure_staged(
-        path,
-        artifacts.source_fingerprint(src, params + "|deletes="),
-        artifacts.source_fingerprint(src, params + "|deletes=d7"),
-        lambda tmp: dedup_ops.write_band_index(corpus, tmp, **BAND_KW),
-        lambda: dedup_ops.delete_from_band_index(
-            spark,
-            path,
-            d.filter(F.col("doc_id") % 10 == 7).select("doc_id"),
-            tag="d7",
-        ),
-        {"deletes": ["d7"]},
-    )
-    return path
+    dels = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 7)
+    dedup_ops.delete_from_band_index(spark, path, dels.select("doc_id"), tag=tag)
 
 
-def _prep_delete_index(spark: SparkSession, sf_dir: str) -> None:
-    _ensure_delete_index(spark, sf_dir)
-    _sigstore(spark, sf_dir)
+# Lifecycle half of dedup_index_maintain: base index over doc_id%5>=2
+# with ingest A (doc_id%5==0) merged as a segment.
+_ensure_maintain_index = Stored(
+    "dedup_index_maintain",
+    "documents",
+    f"dedup_index_maintain|base=doc_id%{DELTA_MOD}>=2{_BAND_PARAMS}",
+    _band_build(lambda: F.col("doc_id") % DELTA_MOD >= 2),
+    step=("ingests", "a", _merge_ingest_a),
+)
+
+# Lifecycle half of dedup_index_delete: full-corpus index with
+# doc_id%10==7 tombstoned.
+_ensure_delete_index = Stored(
+    "dedup_index_delete",
+    "documents",
+    f"dedup_index_delete|corpus=doc_id%{DELTA_MOD}!=0{_BAND_PARAMS}",
+    _band_build(lambda: F.col("doc_id") % DELTA_MOD != 0),
+    step=("deletes", "d7", _tombstone_d7),
+)
+
+_COMPACT_PARAMS = f"dedup_index_compact|base=doc_id%{DELTA_MOD}>=2{_BAND_PARAMS}"
+# dedup_index_compact's base state, before its hand-kept steps
+_compact_base = Stored(
+    "dedup_index_compact",
+    "documents",
+    _COMPACT_PARAMS + "|state=base",
+    _band_build(lambda: F.col("doc_id") % DELTA_MOD >= 2),
+)
 
 
 def _ensure_compact_index(spark: SparkSession, sf_dir: str) -> str:
     """Lifecycle half of dedup_index_compact: base -> merge A ->
-    tombstone d7 -> compact, ending in a single folded base."""
-    d = table(spark, sf_dir, "documents")
-    corpus = spread(d.filter(F.col("doc_id") % DELTA_MOD >= 2))
-    ingest_a = spread(d.filter(F.col("doc_id") % DELTA_MOD == 0))
+    tombstone d7 -> compact, ending in a single folded base. Kept by
+    hand: the final fingerprint is stamped BEFORE compacting (swap()
+    carries the meta through, so invocation 2 sees a current,
+    compacted artifact and goes straight to the probe)."""
     path = _artifact_path("dedup_index_compact", sf_dir)
-    src = [os.path.join(sf_dir, "documents.parquet")]
-    params = (
-        f"dedup_index_compact|base=doc_id%{DELTA_MOD}>=2"
-        f"|sh={SHINGLE}|mh={N_MINHASH}|bands={N_BANDS}|fmt=L1"
-    )
-    fp_base = artifacts.source_fingerprint(src, params + "|state=base")
     fp_final = artifacts.source_fingerprint(
-        src, params + "|state=a,d7,compacted"
+        [os.path.join(sf_dir, "documents.parquet")],
+        _COMPACT_PARAMS + "|state=a,d7,compacted",
     )
     if not artifacts.is_current(path, fp_final):
         # full lifecycle: build base -> merge A -> tombstone -> compact
-        artifacts.publish(
-            path,
-            fp_base,
-            lambda tmp: dedup_ops.write_band_index(corpus, tmp, **BAND_KW),
-        )
-        dedup_ops.merge_band_index(spark, path, ingest_a, tag="a", **BAND_KW)
-        dedup_ops.delete_from_band_index(
-            spark,
-            path,
-            d.filter(F.col("doc_id") % 10 == 7).select("doc_id"),
-            tag="d7",
-        )
-        # stamp the final fingerprint BEFORE compacting: swap() carries
-        # the meta through, so invocation 2 sees a current, compacted
-        # artifact and goes straight to the probe
+        _compact_base(spark, sf_dir)
+        _merge_ingest_a(spark, sf_dir, path, "a")
+        _tombstone_d7(spark, sf_dir, path, "d7")
         artifacts.update_meta(
             path, fp_final, {"ingests": ["a"], "deletes": ["d7"]}
         )
-        assert dedup_ops.compact_band_index(spark, path), (
-            "compaction found nothing to fold"
-        )
-        assert not any(
+        if not dedup_ops.compact_band_index(spark, path):
+            raise RuntimeError("compaction found nothing to fold")
+        if any(
             seg.startswith(("bands_ingest_", "shingles_ingest_", "deletes_"))
             for seg in os.listdir(path)
-        ), "compaction left segments behind"
+        ):
+            raise RuntimeError("compaction left segments behind")
     return path
 
 
-def _prep_compact_index(spark: SparkSession, sf_dir: str) -> None:
-    _ensure_compact_index(spark, sf_dir)
-    _sigstore(spark, sf_dir)
-
-
-def _ensure_stream_base(spark: SparkSession, sf_dir: str) -> str:
-    """Lifecycle half of stream_index_ingest: the immutable
-    fingerprinted base corpus index the per-run roots symlink to."""
-    d = table(spark, sf_dir, "documents")
-    corpus = spread(d.filter(F.col("doc_id") % DELTA_MOD >= 2))
-    base_idx = _artifact_path("dedup_index_stream_base", sf_dir)
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "documents.parquet")],
-        params=f"stream_index_ingest|base=doc_id%{DELTA_MOD}>=2"
-        f"|sh={SHINGLE}|mh={N_MINHASH}|bands={N_BANDS}|fmt=L1",
-    )
-    artifacts.publish(
-        base_idx,
-        fp,
-        lambda tmp: dedup_ops.write_band_index(corpus, tmp, **BAND_KW),
-    )
-    return base_idx
+# Lifecycle half of stream_index_ingest: the immutable fingerprinted
+# base corpus index the per-run roots symlink to.
+_ensure_stream_base = Stored(
+    "dedup_index_stream_base",
+    "documents",
+    f"stream_index_ingest|base=doc_id%{DELTA_MOD}>=2{_BAND_PARAMS}",
+    _band_build(lambda: F.col("doc_id") % DELTA_MOD >= 2),
+)
 
 
 def _ensure_stream_fixture(
-    spark: SparkSession,
-    sf_dir: str,
     name: str,
     src_table: str,
-    builder,
-    params_extra: str = "",
-) -> str:
+    frame,
+    tag_col: str,
+    tag_mod: int,
+    params_extra: Callable[[], str] = lambda: "",
+) -> Stored:
     """The streaming fixture's INCOMING FILES as a published artifact:
     the two ingest batch files are a pure function of the corpus, so
     they are built once per corpus state and every run points its
     readStream at the immutable directory (each run's checkpoint is
     fresh, so availableNow re-delivers all files — the files
-    themselves never need rewriting). ``builder(tmp)`` writes
-    ``batch1.parquet`` then ``batch0.parquet``; mtimes are stamped so
-    tag 1 is strictly OLDER — FileStreamSource delivers by mtime, so a
-    per-file trigger cap (tests; the registered loop before round 11)
-    makes the sequencer's buffered reorder path fire, and the uncapped
-    availableNow batch arrives file-order-agnostic either way."""
-    path = _artifact_path(name, sf_dir)
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, f"{src_table}.parquet")],
-        params=f"{name}|tags=1,0|sig=v1{params_extra}",
-    )
+    themselves never need rewriting). ``frame(spark, sf_dir)`` is the
+    pandas frame of every arriving row; the rows with ``tag_col %
+    tag_mod == t`` are written as ``batch<t>.parquet``, tag 1 first,
+    and mtimes are stamped so tag 1 is strictly OLDER — FileStreamSource
+    delivers by mtime, so a per-file trigger cap (tests; the registered
+    loop before round 11) makes the sequencer's buffered reorder path
+    fire, and the uncapped availableNow batch arrives
+    file-order-agnostic either way. ``params_extra()`` extends the
+    fingerprint params."""
 
-    def build(tmp: str) -> None:
+    def build(spark: SparkSession, sf_dir: str, tmp: str) -> None:
         os.makedirs(tmp, exist_ok=True)  # pandas won't mkdir like Spark
-        builder(tmp)
+        rows = frame(spark, sf_dir)
+        for t in (1, 0):
+            rows[rows[tag_col] % tag_mod == t].to_parquet(
+                os.path.join(tmp, f"batch{t}.parquet"), index=False
+            )
         now = os.stat(os.path.join(tmp, "batch0.parquet")).st_mtime
         os.utime(os.path.join(tmp, "batch1.parquet"), (now - 10, now - 10))
 
-    artifacts.publish(path, fp, build)
-    return path
+    return Stored(
+        name, src_table, lambda: f"{name}|tags=1,0|sig=v1{params_extra()}", build
+    )
 
 
 STREAM_SRC_SCHEMA = (
@@ -1475,79 +1473,60 @@ STREAM_SRC_SCHEMA = (
 )
 
 
-def _ensure_stream_src(spark: SparkSession, sf_dir: str) -> str:
-    """stream_index_ingest's incoming files: tag = doc_id % 5 in
-    {0, 1}, one file per tag (see _ensure_stream_fixture). The files
-    carry the documents' SIGNATURES (shingles, packed hashes, band
-    keys in band order) computed ONCE at publication — the at-arrival
-    half of the signature-store contract: in production the upstream
-    ingest writer computes a document's signatures when it first
-    touches the text and stores them beside it; the dedup loop (and
-    every later consumer) reads, never re-derives. Signatures are
-    pure per-row functions of (text, params), so the probe rows are
-    identical to the recompute path's (same guarantee _sigstore pins
-    by test), and the oracle still recomputes from raw text."""
-
-    def build(tmp: str) -> None:
-        d = table(spark, sf_dir, "documents")
-        raw = spread(
-            d.filter(F.col("doc_id") % DELTA_MOD <= 1).select(
-                "doc_id", "text"
-            )
-        ).select(
-            "doc_id", "text", T.char_shingles_col(SHINGLE).alias("shingles")
-        )
-        keys = dedup_ops.minhash_signature(
-            raw.select("doc_id", "shingles"),
+def _stream_src_rows(spark: SparkSession, sf_dir: str):
+    d = table(spark, sf_dir, "documents")
+    raw = spread(
+        d.filter(F.col("doc_id") % DELTA_MOD <= 1).select("doc_id", "text")
+    ).select("doc_id", "text", T.char_shingles_col(SHINGLE).alias("shingles"))
+    keys = dedup_ops.minhash_signature(
+        raw.select("doc_id", "shingles"),
+        "doc_id",
+        "shingles",
+        N_MINHASH,
+        N_BANDS,
+    ).select(
+        "doc_id",
+        # band keys in band order (position = band_idx), packed to
+        # LONG like the stored index
+        F.array(
+            *[F.xxhash64(F.col(f"band{b}")) for b in range(N_BANDS)]
+        ).alias("bkeys"),
+    )
+    return (
+        raw.join(keys, "doc_id")
+        .select(
             "doc_id",
+            "text",
             "shingles",
-            N_MINHASH,
-            N_BANDS,
-        ).select(
-            "doc_id",
-            # band keys in band order (position = band_idx), packed to
-            # LONG like the stored index
-            F.array(
-                *[
-                    F.xxhash64(F.col(f"band{b}"))
-                    for b in range(N_BANDS)
-                ]
-            ).alias("bkeys"),
+            F.size("shingles").cast("long").alias("n_sh"),
+            F.transform("shingles", lambda s: F.xxhash64(s)).alias("sh_hash"),
+            "bkeys",
         )
-        both = (
-            raw.join(keys, "doc_id")
-            .select(
-                "doc_id",
-                "text",
-                "shingles",
-                F.size("shingles").cast("long").alias("n_sh"),
-                F.transform("shingles", lambda s: F.xxhash64(s)).alias(
-                    "sh_hash"
-                ),
-                "bkeys",
-            )
-            .toPandas()
-        )
-        for t in (1, 0):
-            both[both["doc_id"] % DELTA_MOD == t].to_parquet(
-                os.path.join(tmp, f"batch{t}.parquet"), index=False
-            )
-
-    return _ensure_stream_fixture(
-        spark, sf_dir, "stream_ingest_src", "documents", build
+        .toPandas()
     )
 
 
-def _prep_stream_base(spark: SparkSession, sf_dir: str) -> None:
-    _ensure_stream_base(spark, sf_dir)
-    _ensure_stream_src(spark, sf_dir)
+# stream_index_ingest's incoming files: tag = doc_id % 5 in {0, 1},
+# one file per tag (see _ensure_stream_fixture). The files carry the
+# documents' SIGNATURES (shingles, packed hashes, band keys in band
+# order) computed ONCE at publication — the at-arrival half of the
+# signature-store contract: in production the upstream ingest writer
+# computes a document's signatures when it first touches the text and
+# stores them beside it; the dedup loop (and every later consumer)
+# reads, never re-derives. Signatures are pure per-row functions of
+# (text, params), so the probe rows are identical to the recompute
+# path's (same guarantee _sigstore pins by test), and the oracle still
+# recomputes from raw text.
+_ensure_stream_src = _ensure_stream_fixture(
+    "stream_ingest_src", "documents", _stream_src_rows, "doc_id", DELTA_MOD
+)
 
 
 @register(
     "dedup_stored_index",
     oracle=_incremental_probe_oracle(),
     tags=("dedup", "incremental"),
-    prepare=_prep_stored_index,
+    prepare=(_ensure_stored_index, _sigstore),
     doc="Incremental near-dup probe against a STORED index — the "
     "cross-invocation production shape dedup_incremental_index only "
     "simulates: run 1 writes the corpus (id, band) LSH index AND the "
@@ -1576,10 +1555,9 @@ def _prep_stream_base(spark: SparkSession, sf_dir: str) -> None:
     "(study_scraper/storage/postgres.py:1160-1239).",
 )
 def dedup_stored_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # lifecycle (corpus filtered BEFORE spread — the repartition is a
-    # barrier Catalyst won't push filters through) lives in
-    # _ensure_stored_index, shared with the bench prepare hook; a warm
-    # artifact makes this a fingerprint stat-check, zero corpus I/O
+    # lifecycle in the _ensure_stored_index record, shared with the
+    # bench prepare hook; a warm artifact makes this a fingerprint
+    # stat-check, zero corpus I/O
     path = _ensure_stored_index(spark, sf_dir)
     # the probe batch's signatures come from the SIGNATURE STORE
     # (computed once at ingest time, stored, read here) — the probe
@@ -1605,7 +1583,7 @@ def dedup_stored_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"doc_id % {DELTA_MOD} <> 1", f"doc_id % {DELTA_MOD} = 1"
     ),
     tags=("dedup", "incremental"),
-    prepare=_prep_maintain_index,
+    prepare=(_ensure_maintain_index, _sigstore),
     doc="Stored-index DELTA MAINTENANCE — the step dedup_stored_index "
     "stops short of: after probing, each ingested batch is MERGED into "
     "the stored artifacts (operators/dedup_ops.merge_band_index), so "
@@ -1655,7 +1633,7 @@ def dedup_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"doc_id % {DELTA_MOD} = 0",
     ),
     tags=("dedup", "incremental"),
-    prepare=_prep_delete_index,
+    prepare=(_ensure_delete_index, _sigstore),
     doc="Stored-index DELETE by TOMBSTONE — the removal half of the "
     "index lifecycle (takedown / GDPR erasure / retraction; reference "
     "analog: the delete-then-insert upsert S7, elt/loader_clickhouse."
@@ -1702,7 +1680,7 @@ def dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"doc_id % {DELTA_MOD} = 1",
     ),
     tags=("dedup", "incremental"),
-    prepare=_prep_compact_index,
+    prepare=(_ensure_compact_index, _sigstore),
     doc="Stored-index COMPACTION — the fold-back half of the LSM "
     "lifecycle, run end-to-end and proven probe-identical (the dedup "
     "mirror of ann_ivf_compact): base corpus (doc_id%5 in {2,3,4}) is "
@@ -1863,45 +1841,32 @@ def _stream_decon_oracle() -> str:
     """
 
 
-def _ensure_decon_src(spark: SparkSession, sf_dir: str) -> str:
-    """stream_decontaminate's incoming files (arriving train-candidate
-    ids, two micro-batch files split by doc_id % 2) as a published
-    immutable artifact — fixture plumbing built once per corpus state
-    and run UNTIMED by the prepare hook, same convention as the ingest
-    loops' _ensure_stream_src (a per-run rewrite was two extra write
-    jobs inside every timed run)."""
+def _decon_src_rows(spark: SparkSession, sf_dir: str):
     from .text import _SPLIT_TRAIN_MAX
 
-    def build(tmp: str) -> None:
-        os.makedirs(tmp, exist_ok=True)
-        bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-        ids = (
-            table(spark, sf_dir, "documents")
-            .filter(
-                (bucket < _SPLIT_TRAIN_MAX)
-                & (F.col("doc_id") % DELTA_MOD == 0)
-            )
-            .select("doc_id")
-            .toPandas()
-        )
-        for t in (1, 0):
-            ids[ids["doc_id"] % 2 == t].to_parquet(
-                os.path.join(tmp, f"batch{t}.parquet"), index=False
-            )
-
-    return _ensure_stream_fixture(
-        spark,
-        sf_dir,
-        "stream_decon_src",
-        "documents",
-        build,
-        params_extra="|ids-only",
+    bucket = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
+    return (
+        table(spark, sf_dir, "documents")
+        .filter((bucket < _SPLIT_TRAIN_MAX) & (F.col("doc_id") % DELTA_MOD == 0))
+        .select("doc_id")
+        .toPandas()
     )
 
 
-def _prep_stream_decon(spark: SparkSession, sf_dir: str) -> None:
-    _sigstore(spark, sf_dir)
-    _ensure_decon_src(spark, sf_dir)
+# stream_decontaminate's incoming files (arriving train-candidate ids,
+# two micro-batch files split by doc_id % 2) as a published immutable
+# artifact — fixture plumbing built once per corpus state and run
+# UNTIMED by the prepare hook, same convention as the ingest loops'
+# _ensure_stream_src (a per-run rewrite was two extra write jobs inside
+# every timed run).
+_ensure_decon_src = _ensure_stream_fixture(
+    "stream_decon_src",
+    "documents",
+    _decon_src_rows,
+    "doc_id",
+    2,
+    params_extra=lambda: "|ids-only",
+)
 
 
 def _register_stream_decon() -> None:
@@ -1913,7 +1878,7 @@ def _register_stream_decon() -> None:
         "stream_decontaminate",
         oracle=_stream_decon_oracle(),
         tags=("streaming", "text", "dedup", "composite"),
-        prepare=_prep_stream_decon,
+        prepare=(_sigstore, _ensure_decon_src),
         doc="STREAMING test-set leakage guard — decontamination moved "
         "to where a production pipeline actually needs it: the ingest "
         "path. Train-candidate documents arrive as file micro-batches "
@@ -2096,7 +2061,7 @@ def _stream_ingest_oracle() -> str:
     "stream_index_ingest",
     oracle=_stream_ingest_oracle(),
     tags=("streaming", "dedup", "incremental"),
-    prepare=_prep_stream_base,
+    prepare=(_ensure_stream_base, _ensure_stream_src),
     doc="The INGEST LOOP as a real Structured Streaming job — the "
     "composition the stored-index family builds toward: document "
     "batches arrive as files (readStream, availableNow, no "
@@ -2220,7 +2185,7 @@ def stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_index_probe",
     oracle=_stream_ingest_oracle(),
     tags=("dedup", "incremental"),
-    prepare=_prep_stream_base,
+    prepare=(_ensure_stream_base, _ensure_stream_src),
     doc="PROBE-ONLY twin of stream_index_ingest — the like-for-like "
     "half of the round-9 verdict's measurement ask: the ingest loop's "
     "published time includes stream lifecycle (readStream/foreachBatch "
@@ -2496,55 +2461,46 @@ def _dup_spans(dup: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _ensure_winnow_store(spark: SparkSession, sf_dir: str) -> str:
-    """Stored winnow artifact at the substring-span parameters,
-    two segments (v2, round 10):
-
-    - ``anchors/`` — (doc_id, p, fp_hash): winnowing selections are
-      pure per-doc functions of the text (the canonical 'fingerprint
-      at ingest, store beside the document' artifact from the
-      winnowing paper itself), so the md5-gram + windowed-MIN pass
-      runs once per corpus state at publication.
-    - ``shared_docs/`` — the doc_ids whose anchor set intersects
-      another doc's: by the winnowing guarantee, the superset of every
-      document that can participate in a >= k+w-1 = 40-char cross-doc
-      repeat. Derived from anchors at publication (one aggregate +
-      semi-join, amortized like the selection itself) so the exact
-      span query's prefilter is a tiny id scan, not a per-run
-      aggregate over the full anchor table.
-
-    The oracles recompute everything from raw text every run."""
-    store = _artifact_path("winnow_anchors", sf_dir)
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "documents.parquet")],
-        params=f"wsub|k={_WSUB_K}|w={_WSUB_W}|m={_WSUB_M}|layout=v2",
+def _build_winnow_store(spark: SparkSession, sf_dir: str, tmp: str) -> None:
+    artifacts.sized(
+        dedup_ops.winnow_positions(
+            _docs(spark, sf_dir), "doc_id", "text", _WSUB_K, _WSUB_W, _WSUB_M
+        )
+    ).write.mode("overwrite").parquet(f"{tmp}/anchors")
+    a = read_parquet(spark, f"{tmp}/anchors")
+    (
+        a.join(F.broadcast(_shared_keys(a, "fp_hash")), "fp_hash", "left_semi")
+        .select("doc_id")
+        .distinct()
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(f"{tmp}/shared_docs")
     )
 
-    def build(tmp: str) -> None:
-        artifacts.sized(
-            dedup_ops.winnow_positions(
-                spread(table(spark, sf_dir, "documents")),
-                "doc_id",
-                "text",
-                _WSUB_K,
-                _WSUB_W,
-                _WSUB_M,
-            )
-        ).write.mode("overwrite").parquet(f"{tmp}/anchors")
-        a = read_parquet(spark, f"{tmp}/anchors")
-        (
-            a.join(
-                F.broadcast(_shared_keys(a, "fp_hash")), "fp_hash", "left_semi"
-            )
-            .select("doc_id")
-            .distinct()
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/shared_docs")
-        )
 
-    artifacts.publish(store, fp, build)
-    return store
+# Stored winnow artifact at the substring-span parameters, two
+# segments (v2, round 10):
+#
+# - ``anchors/`` — (doc_id, p, fp_hash): winnowing selections are pure
+#   per-doc functions of the text (the canonical 'fingerprint at
+#   ingest, store beside the document' artifact from the winnowing
+#   paper itself), so the md5-gram + windowed-MIN pass runs once per
+#   corpus state at publication.
+# - ``shared_docs/`` — the doc_ids whose anchor set intersects another
+#   doc's: by the winnowing guarantee, the superset of every document
+#   that can participate in a >= k+w-1 = 40-char cross-doc repeat.
+#   Derived from anchors at publication (one aggregate + semi-join,
+#   amortized like the selection itself) so the exact span query's
+#   prefilter is a tiny id scan, not a per-run aggregate over the full
+#   anchor table.
+#
+# The oracles recompute everything from raw text every run.
+_ensure_winnow_store = Stored(
+    "winnow_anchors",
+    "documents",
+    f"wsub|k={_WSUB_K}|w={_WSUB_W}|m={_WSUB_M}|layout=v2",
+    _build_winnow_store,
+)
 
 
 def _winnow_anchor_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2794,43 +2750,31 @@ def substring_dup_spans_winnowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ensure_winnow_delete_store(spark: SparkSession, sf_dir: str) -> str:
-    """Lifecycle half of substring_winnow_delete: the takedown list
-    (doc_id%10 == 7) published as a TOMBSTONE artifact beside — not
-    inside — the immutable full-corpus anchor store, which is SHARED
-    with substring_dup_spans_winnowed (the stream_index_ingest
-    pattern: one published base artifact, run-state in its own
-    store). Deleting from a winnow store never touches anchor rows:
-    exclusion happens at probe time, so the takedown costs one tiny
-    id-list write and the base stays bit-identical for every other
-    consumer."""
-    path = _artifact_path("winnow_delete", sf_dir)
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "documents.parquet")],
-        "wsub_delete|take=doc_id%10==7|base=v2",
-    )
-    artifacts.publish(
-        path,
-        fp,
-        lambda tmp: table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 10 == 7)
-        .select("doc_id")
-        .distinct()
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{tmp}/tombstones"),
-    )
-    return path
-
-
-def _prep_winnow_delete(spark: SparkSession, sf_dir: str) -> None:
-    _ensure_winnow_store(spark, sf_dir)
-    _ensure_winnow_delete_store(spark, sf_dir)
+# Lifecycle half of substring_winnow_delete: the takedown list
+# (doc_id%10 == 7) published as a TOMBSTONE artifact beside — not
+# inside — the immutable full-corpus anchor store, which is SHARED with
+# substring_dup_spans_winnowed (the stream_index_ingest pattern: one
+# published base artifact, run-state in its own store). Deleting from a
+# winnow store never touches anchor rows: exclusion happens at probe
+# time, so the takedown costs one tiny id-list write and the base stays
+# bit-identical for every other consumer.
+_ensure_winnow_delete_store = Stored(
+    "winnow_delete",
+    "documents",
+    "wsub_delete|take=doc_id%10==7|base=v2",
+    lambda spark, sf_dir, tmp: table(spark, sf_dir, "documents")
+    .filter(F.col("doc_id") % 10 == 7)
+    .select("doc_id")
+    .distinct()
+    .coalesce(1)
+    .write.mode("overwrite")
+    .parquet(f"{tmp}/tombstones"),
+)
 
 
 @register(
     "substring_winnow_delete",
-    prepare=_prep_winnow_delete,
+    prepare=(_ensure_winnow_store, _ensure_winnow_delete_store),
     oracle=f"""
         WITH {_wsub_anchor_ctes(" AND doc_id % 10 <> 7")}, shared AS (
             SELECT fp_hash FROM anchors GROUP BY fp_hash
@@ -2892,44 +2836,37 @@ def substring_winnow_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ensure_winnow_maintain_store(spark: SparkSession, sf_dir: str) -> str:
-    """Lifecycle half of substring_winnow_maintain: winnow anchors over
-    the BASE corpus (doc_id%5 != 0) published as the immutable base
-    segment, then the delta batch (doc_id%5 == 0) winnowed — a pure
-    per-doc function, so maintenance cost is delta-proportional and
-    needs no base reread — and appended as ``anchors_delta/`` beside
-    the base, LSM-style (append a segment, never rewrite the base)."""
-    d = table(spark, sf_dir, "documents")
-    path = _artifact_path("winnow_maintain", sf_dir)
-    src = [os.path.join(sf_dir, "documents.parquet")]
-    params = (
-        f"wsub_maintain|base=doc_id%{DELTA_MOD}!=0"
-        f"|k={_WSUB_K}|w={_WSUB_W}|m={_WSUB_M}"
-    )
+def _write_anchors(docs: DataFrame, out: str) -> None:
+    artifacts.sized(
+        dedup_ops.winnow_positions(
+            spread(docs), "doc_id", "text", _WSUB_K, _WSUB_W, _WSUB_M
+        )
+    ).write.mode("overwrite").parquet(out)
 
-    def anchors(docs: DataFrame, out: str) -> None:
-        artifacts.sized(
-            dedup_ops.winnow_positions(
-                spread(docs), "doc_id", "text", _WSUB_K, _WSUB_W, _WSUB_M
-            )
-        ).write.mode("overwrite").parquet(out)
 
+def _winnow_delta(spark: SparkSession, sf_dir: str, path: str, tag: str) -> None:
     # the delta step winnows ONLY the batch's docs; overwrite mode
     # makes a crashed orphan segment rerun-safe
-    artifacts.ensure_staged(
-        path,
-        artifacts.source_fingerprint(src, params + "|ingests="),
-        artifacts.source_fingerprint(src, params + "|ingests=delta"),
-        lambda tmp: anchors(
-            d.filter(F.col("doc_id") % DELTA_MOD != 0), f"{tmp}/anchors"
-        ),
-        lambda: anchors(
-            d.filter(F.col("doc_id") % DELTA_MOD == 0),
-            f"{path}/anchors_delta",
-        ),
-        {"ingests": ["delta"]},
-    )
-    return path
+    d = table(spark, sf_dir, "documents")
+    _write_anchors(d.filter(F.col("doc_id") % DELTA_MOD == 0), f"{path}/anchors_{tag}")
+
+
+# Lifecycle half of substring_winnow_maintain: winnow anchors over the
+# BASE corpus (doc_id%5 != 0) published as the immutable base segment,
+# then the delta batch (doc_id%5 == 0) winnowed — a pure per-doc
+# function, so maintenance cost is delta-proportional and needs no base
+# reread — and appended as ``anchors_delta/`` beside the base,
+# LSM-style (append a segment, never rewrite the base).
+_ensure_winnow_maintain_store = Stored(
+    "winnow_maintain",
+    "documents",
+    f"wsub_maintain|base=doc_id%{DELTA_MOD}!=0|k={_WSUB_K}|w={_WSUB_W}|m={_WSUB_M}",
+    lambda spark, sf_dir, tmp: _write_anchors(
+        table(spark, sf_dir, "documents").filter(F.col("doc_id") % DELTA_MOD != 0),
+        f"{tmp}/anchors",
+    ),
+    step=("ingests", "delta", _winnow_delta),
+)
 
 
 @register(
@@ -3005,39 +2942,34 @@ def substring_winnow_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ensure_winnow_compact_store(spark: SparkSession, sf_dir: str) -> str:
-    """Lifecycle half of substring_winnow_compact: the maintained
-    store's segments (base + delta append) FOLD into one clean base
-    with the takedown list (doc_id%10 == 7) applied during the fold —
-    the LSM compaction step that ends the base -> append -> takedown
-    cycle. Compaction writes a NEW artifact and leaves the maintained
-    store untouched (the segment-dropping twin of
-    dedup_index_compact's fold)."""
-    path = _artifact_path("winnow_compact", sf_dir)
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "documents.parquet")],
-        f"wsub_compact|base=doc_id%{DELTA_MOD}!=0|delta=doc_id%"
-        f"{DELTA_MOD}==0|take=doc_id%10==7"
-        f"|k={_WSUB_K}|w={_WSUB_W}|m={_WSUB_M}|state=folded",
+def _fold_winnow_store(spark: SparkSession, sf_dir: str, tmp: str) -> dict:
+    mpath = _ensure_winnow_maintain_store(spark, sf_dir)
+    base = read_parquet(spark, f"{mpath}/anchors")
+    delta = read_parquet(spark, f"{mpath}/anchors_delta")
+    tomb = (
+        table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 10 == 7)
+        .select("doc_id")
     )
+    artifacts.sized(
+        base.unionByName(delta).join(tomb, "doc_id", "left_anti")
+    ).write.mode("overwrite").parquet(f"{tmp}/anchors")
+    return {"folded": ["base", "delta"], "deletes": ["d7"]}
 
-    def build(tmp: str) -> None:
-        mpath = _ensure_winnow_maintain_store(spark, sf_dir)
-        base = read_parquet(spark, f"{mpath}/anchors")
-        delta = read_parquet(spark, f"{mpath}/anchors_delta")
-        tomb = (
-            table(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 10 == 7)
-            .select("doc_id")
-        )
-        artifacts.sized(
-            base.unionByName(delta).join(tomb, "doc_id", "left_anti")
-        ).write.mode("overwrite").parquet(f"{tmp}/anchors")
 
-    artifacts.publish(
-        path, fp, build, {"folded": ["base", "delta"], "deletes": ["d7"]}
-    )
-    return path
+# Lifecycle half of substring_winnow_compact: the maintained store's
+# segments (base + delta append) FOLD into one clean base with the
+# takedown list (doc_id%10 == 7) applied during the fold — the LSM
+# compaction step that ends the base -> append -> takedown cycle.
+# Compaction writes a NEW artifact and leaves the maintained store
+# untouched (the segment-dropping twin of dedup_index_compact's fold).
+_ensure_winnow_compact_store = Stored(
+    "winnow_compact",
+    "documents",
+    f"wsub_compact|base=doc_id%{DELTA_MOD}!=0|delta=doc_id%{DELTA_MOD}==0"
+    f"|take=doc_id%10==7|k={_WSUB_K}|w={_WSUB_W}|m={_WSUB_M}|state=folded",
+    _fold_winnow_store,
+)
 
 
 @register(
@@ -3103,11 +3035,6 @@ def substring_winnow_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _prep_stream_substring_guard(spark: SparkSession, sf_dir: str) -> None:
-    _ensure_winnow_store(spark, sf_dir)
-    _ensure_decon_src(spark, sf_dir)
-
-
 def _register_stream_substring_guard() -> None:
     """Registered via a builder so dataset_split's md5 bucket bounds
     import lazily from text.py (same pattern as stream_decontaminate)."""
@@ -3165,7 +3092,7 @@ def _register_stream_substring_guard() -> None:
             ORDER BY a.doc_id
         """,
         tags=("streaming", "dedup", "substring", "composite"),
-        prepare=_prep_stream_substring_guard,
+        prepare=(_ensure_winnow_store, _ensure_decon_src),
         doc="STREAMING substring-level leakage guard — the verbatim-"
         "quote half of the ingest guard: stream_decontaminate catches "
         "arriving docs that are fuzzy near-duplicates of an eval doc "
@@ -3277,7 +3204,7 @@ def _register_decontamination_excise() -> None:
 
     @register(
         "decontamination_excise",
-        prepare=_prep_stream_substring_guard,
+        prepare=(_ensure_winnow_store, _ensure_decon_src),
         oracle=f"""
             WITH {_wsub_anchor_ctes()}, test_fps AS (
                 SELECT DISTINCT fp_hash FROM anchors

@@ -16,8 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import parsing
-from ..operators import cubefile, jsonstat, multimodal
+from ..operators import artifacts, cubefile, jsonstat, multimodal
 from ..sources import read_parquet, spread, table
+from .dedup import Stored
 from .registry import register
 
 _CUBE1 = json.dumps(
@@ -1265,8 +1266,6 @@ _DH_HAM = 6  # report pairs within this Hamming distance
 
 
 def _fingerprint_store(
-    spark: SparkSession,
-    sf_dir: str,
     name: str,
     mod: int,
     twin_mod: int,
@@ -1274,7 +1273,7 @@ def _fingerprint_store(
     encode,
     decode,
     twin_kwargs: dict,
-) -> str:
+) -> Stored:
     """Stored PERCEPTUAL-FINGERPRINT artifact shared by the multimodal
     near-dup triad: the (doc_id, k0..k3) band keys of every sampled
     doc AND its forged re-encoded twin, published once per corpus
@@ -1285,19 +1284,8 @@ def _fingerprint_store(
     the near-dup query is then a band join + Hamming rescore over
     stored integers. The oracles recompute the identical integer
     pipelines in SQL every run, so exact-hash parity is untouched."""
-    import os
 
-    from ..operators import artifacts
-    from .dedup import _artifact_path
-
-    store = _artifact_path(f"{name}_store", sf_dir)
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "documents.parquet")],
-        params=f"{name}|mod={mod}|twin={twin_mod}|off={twin_off}"
-        f"|kw={sorted(twin_kwargs.items())}",
-    )
-
-    def build(tmp: str) -> None:
+    def build(spark: SparkSession, sf_dir: str, tmp: str) -> None:
         d = (
             spread(table(spark, sf_dir, "documents"))
             .filter(F.col("doc_id") % mod == 0)
@@ -1307,9 +1295,8 @@ def _fingerprint_store(
         # would collide undetectably in BOTH engines (same guard as
         # embedding_neardup_srp)
         max_id = d.agg(F.max("doc_id")).first()[0]
-        assert max_id is None or max_id < twin_off, (
-            f"{name}: doc_id {max_id} collides with twin id space"
-        )
+        if max_id is not None and max_id >= twin_off:
+            raise ValueError(f"{name}: doc_id {max_id} collides with twin id space")
         base = encode(d)
         twins = encode(
             d.filter(F.col("doc_id") % twin_mod == 0),
@@ -1320,8 +1307,13 @@ def _fingerprint_store(
             "overwrite"
         ).parquet(tmp)
 
-    artifacts.publish(store, fp, build)
-    return store
+    return Stored(
+        f"{name}_store",
+        "documents",
+        f"{name}|mod={mod}|twin={twin_mod}|off={twin_off}"
+        f"|kw={sorted(twin_kwargs.items())}",
+        build,
+    )
 
 
 def _hamming_neardup(
@@ -1370,12 +1362,11 @@ def _hamming_neardup(
     )
 
 
-def _dhash_store(spark: SparkSession, sf_dir: str) -> str:
-    return _fingerprint_store(
-        spark, sf_dir, "dhash", 7, 70, _DH_TWIN_OFF,
-        multimodal.encode_png_payloads, multimodal.decode_png_dhash,
-        {"shift": 8},
-    )
+_dhash_store = _fingerprint_store(
+    "dhash", 7, 70, _DH_TWIN_OFF,
+    multimodal.encode_png_payloads, multimodal.decode_png_dhash,
+    {"shift": 8},
+)
 
 
 def _image_neardup_oracle() -> str:
@@ -1486,12 +1477,11 @@ _VID_CAP = 24  # mega-bucket hub-star cap
 _VID_HAM = 6  # report pairs within this Hamming distance
 
 
-def _vid_store(spark: SparkSession, sf_dir: str) -> str:
-    return _fingerprint_store(
-        spark, sf_dir, "viddhash", 11, 110, _VID_TWIN_OFF,
-        multimodal.encode_video_payloads, multimodal.decode_video_dhash,
-        {"shift": 8},
-    )
+_vid_store = _fingerprint_store(
+    "viddhash", 11, 110, _VID_TWIN_OFF,
+    multimodal.encode_video_payloads, multimodal.decode_video_dhash,
+    {"shift": 8},
+)
 
 
 def _video_neardup_oracle() -> str:
@@ -1708,12 +1698,11 @@ _AFP_CAP = 24  # mega-bucket hub-star cap
 _AFP_HAM = 6  # report pairs within this Hamming distance
 
 
-def _afp_store(spark: SparkSession, sf_dir: str) -> str:
-    return _fingerprint_store(
-        spark, sf_dir, "afp", 9, 90, _AFP_TWIN_OFF,
-        multimodal.encode_wav_payloads, multimodal.decode_wav_fingerprint,
-        {"quantize": True},
-    )
+_afp_store = _fingerprint_store(
+    "afp", 9, 90, _AFP_TWIN_OFF,
+    multimodal.encode_wav_payloads, multimodal.decode_wav_fingerprint,
+    {"quantize": True},
+)
 
 
 def _audio_neardup_oracle() -> str:

@@ -24,7 +24,7 @@ from ..operators.vectors import (
 )
 from ..sources import read_parquet, spread, table
 from ..streaming.loop import drain_in_tag_order, ingest_run_root
-from .dedup import _artifact_path, _ensure_stream_fixture
+from .dedup import Stored, _artifact_path, _ensure_stream_fixture
 from .registry import register
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -408,74 +408,61 @@ def _ivf_oracle(exclude: str | None = None) -> str:
     """
 
 
-def _ensure_stored_ivf(spark: SparkSession, sf_dir: str) -> str:
-    """Lifecycle half of ann_stored_ivf: Lloyd-refined centroids +
-    centroid-partitioned vector index over ALL embeddings, published
-    once per corpus state (_ivf_builder)."""
-    path = _artifact_path("ann_ivf", sf_dir)
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "embeddings.parquet")],
-        params=f"ann_stored_ivf|k={N_CENTROIDS}|lloyd=1|round=6",
-    )
-    artifacts.publish(path, fp, _ivf_builder(_vectors(spark, sf_dir)))
-    return path
+def _build_ivf(spark: SparkSession, sf_dir: str, tmp: str, pred=None) -> None:
+    """Build of a base-trained IVF index over the vectors matching
+    ``pred`` (all of them by default), see _ivf_builder."""
+    e = _vectors(spark, sf_dir)
+    _ivf_builder(e if pred is None else e.filter(pred))(tmp)
 
 
-def _prep_maintained_ivf(spark: SparkSession, sf_dir: str) -> None:
-    """prepare hook for ann_ivf_maintain (late-bound ensure)."""
-    _ensure_maintained_ivf(spark, sf_dir, "ann_ivf_maintain")
+# Lifecycle half of ann_stored_ivf: Lloyd-refined centroids +
+# centroid-partitioned vector index over ALL embeddings, published once
+# per corpus state (_ivf_builder).
+_ensure_stored_ivf = Stored(
+    "ann_ivf",
+    "embeddings",
+    f"ann_stored_ivf|k={N_CENTROIDS}|lloyd=1|round=6",
+    _build_ivf,
+)
 
 
-def _prep_compacted_ivf(spark: SparkSession, sf_dir: str) -> None:
-    """prepare hook for ann_ivf_compact: maintain lifecycle + the
-    compaction fold (idempotent — compact returns False when clean)."""
-    from ..operators import vectors as _v
-
-    path = _ensure_maintained_ivf(spark, sf_dir, "ann_ivf_compact")
-    _v.compact_ivf_index(spark, path)
-
-
-def _ensure_stream_ivf_src(spark: SparkSession, sf_dir: str) -> str:
-    """stream_ivf_ingest's incoming files: tag = vec_id % 5 in {0, 1},
-    one file per tag, published once per corpus state (see dedup's
-    _ensure_stream_fixture — tag 1 mtime-stamped older, exercising
-    the sequencer whenever the source splits arrivals). The files
-    CARRY each vector's
-    centroid assignment against the frozen stored base centroids —
-    the at-arrival half of the vector-ingest contract: the upstream
-    ingest worker assigns a vector to its bucket when it arrives (it
-    holds the current index), so the dedup loop only probes and
-    persists, never re-assigns. Assignments are a pure function of
-    (v, stored centroids) — stored and fresh rows are identical, and
-    the oracle recomputes assignment from raw vectors."""
-
-    def build(tmp: str) -> None:
-        base_idx = _ensure_stream_ivf_base(spark, sf_dir)
-        cent = read_parquet(spark, f"{base_idx}/centroids")
-        both = assign_nearest(
+def _stream_ivf_src_rows(spark: SparkSession, sf_dir: str):
+    base_idx = _ensure_stream_ivf_base(spark, sf_dir)
+    cent = read_parquet(spark, f"{base_idx}/centroids")
+    return (
+        assign_nearest(
             _vectors(spark, sf_dir)
             .filter(F.col("vec_id") % 5 <= 1)
             .select("vec_id", "v"),
             cent,
-        ).drop("cos").toPandas()
-        for t in (1, 0):
-            both[both["vec_id"] % 5 == t].to_parquet(
-                os.path.join(tmp, f"batch{t}.parquet"), index=False
-            )
-
-    # the src fingerprint must track the base K rule (assignments are
-    # a function of the centroids): a pinned-K stress run publishes
-    # its own fixture instead of poisoning the sqrt-K one
-    return _ensure_stream_fixture(
-        spark, sf_dir, "stream_ivf_src", "embeddings", build,
-        params_extra=f"|assigned=k{_stream_ivf_k_rule()}_lloyd1",
+        )
+        .drop("cos")
+        .toPandas()
     )
 
 
-def _prep_stream_ivf_base(spark: SparkSession, sf_dir: str) -> None:
-    """prepare hook for stream_ivf_ingest (late-bound ensure)."""
-    _ensure_stream_ivf_base(spark, sf_dir)
-    _ensure_stream_ivf_src(spark, sf_dir)
+# stream_ivf_ingest's incoming files: tag = vec_id % 5 in {0, 1}, one
+# file per tag, published once per corpus state (see dedup's
+# _ensure_stream_fixture — tag 1 mtime-stamped older, exercising the
+# sequencer whenever the source splits arrivals). The files CARRY each
+# vector's centroid assignment against the frozen stored base
+# centroids — the at-arrival half of the vector-ingest contract: the
+# upstream ingest worker assigns a vector to its bucket when it arrives
+# (it holds the current index), so the dedup loop only probes and
+# persists, never re-assigns. Assignments are a pure function of (v,
+# stored centroids) — stored and fresh rows are identical, and the
+# oracle recomputes assignment from raw vectors. The fingerprint
+# tracks the base K rule (assignments are a function of the
+# centroids): a pinned-K stress run publishes its own fixture instead
+# of poisoning the sqrt-K one.
+_ensure_stream_ivf_src = _ensure_stream_fixture(
+    "stream_ivf_src",
+    "embeddings",
+    _stream_ivf_src_rows,
+    "vec_id",
+    5,
+    params_extra=lambda: f"|assigned=k{_stream_ivf_k_rule()}_lloyd1",
+)
 
 
 @register(
@@ -714,35 +701,47 @@ def _ivf_builder(base: DataFrame, k: int = N_CENTROIDS):
     return build
 
 
-def _ensure_maintained_ivf(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Shared maintain lifecycle: ensure ``<name>/<sf>`` holds the
-    base-trained IVF index (vec_id % 5 != 0) with ingest batch a
-    (vec_id % 5 == 0) merged as a frozen-centroid segment. Returns the
-    artifact path; used by ann_ivf_maintain (probes segmented) and
-    ann_ivf_compact (compacts first — probe-identical by design)."""
-    e = _vectors(spark, sf_dir)
-    path = _artifact_path(name, sf_dir)
-    params = f"{name}|k={N_CENTROIDS}|lloyd=1|round=6|mod=5"
-    src = [os.path.join(sf_dir, "embeddings.parquet")]
+def _ingest_ivf_segment(spark: SparkSession, sf_dir: str, path: str, tag: str) -> None:
+    # assign new vectors (vec_id % 5 == 0) to the FROZEN stored
+    # centroids and append them as a segment
+    cent = read_parquet(spark, f"{path}/centroids")
+    assign_nearest(
+        _vectors(spark, sf_dir).filter(F.col("vec_id") % 5 == 0).select("vec_id", "v"),
+        cent,
+    ).drop("cos").select("vec_id", "v", "centroid_id").write.mode(
+        "overwrite"
+    ).partitionBy("centroid_id").parquet(f"{path}/index_ingest_{tag}")
 
-    def ingest() -> None:
-        # assign new vectors to the FROZEN stored centroids and append
-        # them as a segment
-        cent = read_parquet(spark, f"{path}/centroids")
-        assign_nearest(
-            e.filter(F.col("vec_id") % 5 == 0).select("vec_id", "v"), cent
-        ).drop("cos").select("vec_id", "v", "centroid_id").write.mode(
-            "overwrite"
-        ).partitionBy("centroid_id").parquet(f"{path}/index_ingest_a")
 
-    artifacts.ensure_staged(
-        path,
-        artifacts.source_fingerprint(src, params + "|ingests="),
-        artifacts.source_fingerprint(src, params + "|ingests=a"),
-        _ivf_builder(e.filter(F.col("vec_id") % 5 != 0)),
-        ingest,
-        {"ingests": ["a"]},
+def _maintained_ivf(name: str) -> Stored:
+    """The shared maintain lifecycle as a record: ``<name>/<sf>`` holds
+    the base-trained IVF index (vec_id % 5 != 0) with ingest batch a
+    (vec_id % 5 == 0) merged as a frozen-centroid segment. Backs
+    ann_ivf_maintain (probes segmented), ann_ivf_compact (compacts
+    first — probe-identical by design) and ann_ivf_split_compact."""
+    return Stored(
+        name,
+        "embeddings",
+        f"{name}|k={N_CENTROIDS}|lloyd=1|round=6|mod=5",
+        lambda spark, sf_dir, tmp: _build_ivf(
+            spark, sf_dir, tmp, F.col("vec_id") % 5 != 0
+        ),
+        step=("ingests", "a", _ingest_ivf_segment),
     )
+
+
+_ensure_maintained_ivf = _maintained_ivf("ann_ivf_maintain")
+
+
+def _ensure_compacted_ivf(spark: SparkSession, sf_dir: str) -> str:
+    """ann_ivf_compact's artifact: the maintain lifecycle, then the
+    compaction fold (idempotent — compact returns False when clean)."""
+    from ..operators.vectors import compact_ivf_index
+
+    path = _maintained_ivf("ann_ivf_compact")(spark, sf_dir)
+    compact_ivf_index(spark, path)
+    if any(d.startswith("index_ingest_") for d in os.listdir(path)):
+        raise RuntimeError("compaction left ingest segments behind")
     return path
 
 
@@ -768,7 +767,7 @@ def _probe_ivf_index(spark: SparkSession, path: str) -> DataFrame:
     "ann_ivf_maintain",
     oracle=_ivf_maintain_oracle(),
     tags=("similarity", "incremental"),
-    prepare=_prep_maintained_ivf,
+    prepare=_ensure_maintained_ivf,
     doc="Stored-IVF DELTA MAINTENANCE — the vector-store mirror of "
     "dedup_index_maintain: the base vector set (vec_id % 5 != 0) "
     "trains the centroids and fills the partitioned index; an "
@@ -791,15 +790,14 @@ def _probe_ivf_index(spark: SparkSession, path: str) -> DataFrame:
     "ann_ivf_compact and the drift-recovery test.",
 )
 def ann_ivf_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    path = _ensure_maintained_ivf(spark, sf_dir, "ann_ivf_maintain")
-    return _probe_ivf_index(spark, path)
+    return _probe_ivf_index(spark, _ensure_maintained_ivf(spark, sf_dir))
 
 
 @register(
     "ann_ivf_compact",
     oracle=_ivf_maintain_oracle(),
     tags=("similarity", "incremental"),
-    prepare=_prep_compacted_ivf,
+    prepare=_ensure_compacted_ivf,
     doc="Stored-IVF segment COMPACTION — the half of the LSM lifecycle "
     "ann_ivf_maintain leaves open (the dedup family's "
     "compact_band_index, mirrored for vectors): per-ingest segments "
@@ -819,14 +817,7 @@ def ann_ivf_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     "drift-recovery test.",
 )
 def ann_ivf_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.vectors import compact_ivf_index
-
-    path = _ensure_maintained_ivf(spark, sf_dir, "ann_ivf_compact")
-    compact_ivf_index(spark, path)  # idempotent: False when segment-free
-    assert not any(
-        d.startswith("index_ingest_") for d in os.listdir(path)
-    ), "compaction left ingest segments behind"
-    return _probe_ivf_index(spark, path)
+    return _probe_ivf_index(spark, _ensure_compacted_ivf(spark, sf_dir))
 
 
 # Width bound for ann_ivf_split_compact, as a multiple of the average
@@ -1026,9 +1017,9 @@ def _ensure_split_ivf(spark: SparkSession, sf_dir: str) -> str:
     fp_presplit, fp_split = _split_ivf_fps(sf_dir)
     if not artifacts.is_current(path, fp_split):
         # meta == fp_presplit here matches neither fp_a nor fp_split,
-        # so _ensure_maintained_ivf rebuilds the maintain state from
+        # so the maintain record rebuilds the maintain state from
         # scratch — a crashed split never gets a second pass
-        _ensure_maintained_ivf(spark, sf_dir, name)
+        _maintained_ivf(name)(spark, sf_dir)
         compact_ivf_index(spark, path)
         artifacts.update_meta(path, fp_presplit)
         split_wide_clusters(spark, path, width_factor=SPLIT_WIDTH_FACTOR)
@@ -1152,30 +1143,22 @@ DEL_MOD = 7  # vec_id % 7 == 3 is the takedown batch
 DEL_REM = 3
 
 
-def _ensure_deleted_ivf(spark: SparkSession, sf_dir: str) -> str:
-    """Lifecycle half of ann_ivf_delete: full-set IVF index with
-    vec_id%7==3 tombstoned."""
+def _tombstone_ivf(spark: SparkSession, sf_dir: str, path: str, tag: str) -> None:
     from ..operators.vectors import delete_from_ivf_index
 
-    e = _vectors(spark, sf_dir)
-    path = _artifact_path("ann_ivf_delete", sf_dir)
-    src = [os.path.join(sf_dir, "embeddings.parquet")]
-    params = f"ann_ivf_delete|k={N_CENTROIDS}|lloyd=1|round=6"
-    tag = f"d{DEL_MOD}_{DEL_REM}"
-    artifacts.ensure_staged(
-        path,
-        artifacts.source_fingerprint(src, params + "|deletes="),
-        artifacts.source_fingerprint(src, params + f"|deletes={tag}"),
-        _ivf_builder(e),
-        lambda: delete_from_ivf_index(
-            spark,
-            path,
-            e.filter(F.col("vec_id") % DEL_MOD == DEL_REM).select("vec_id"),
-            tag=tag,
-        ),
-        {"deletes": [tag]},
-    )
-    return path
+    dels = _vectors(spark, sf_dir).filter(F.col("vec_id") % DEL_MOD == DEL_REM)
+    delete_from_ivf_index(spark, path, dels.select("vec_id"), tag=tag)
+
+
+# Lifecycle half of ann_ivf_delete: full-set IVF index with
+# vec_id%7==3 tombstoned.
+_ensure_deleted_ivf = Stored(
+    "ann_ivf_delete",
+    "embeddings",
+    f"ann_ivf_delete|k={N_CENTROIDS}|lloyd=1|round=6",
+    _build_ivf,
+    step=("deletes", f"d{DEL_MOD}_{DEL_REM}", _tombstone_ivf),
+)
 
 
 @register(
@@ -1208,36 +1191,31 @@ def _ensure_deleted_ivf(spark: SparkSession, sf_dir: str) -> str:
     "broadcast anti-join, zero when no deletes exist.",
 )
 def ann_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # lifecycle in _ensure_deleted_ivf (shared with bench prepare)
+    # lifecycle in the _ensure_deleted_ivf record (shared with bench
+    # prepare)
     return _probe_ivf_index(spark, _ensure_deleted_ivf(spark, sf_dir))
 
 
-def _ensure_stream_ivf_base(spark: SparkSession, sf_dir: str) -> str:
-    """Lifecycle half of stream_ivf_ingest: the immutable base-trained
-    IVF index (vec_id % 5 >= 2) the per-run roots symlink to. Its meta
-    records the K the build chose (``k``)."""
+def _build_stream_ivf_base(spark: SparkSession, sf_dir: str, tmp: str) -> dict:
     import math
 
     rule = _stream_ivf_k_rule()
-    base_idx = _artifact_path("ann_ivf_stream_base", sf_dir)
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "embeddings.parquet")],
-        params=f"stream_ivf_ingest|base=vec_id%5>=2"
-        f"|k={rule}|lloyd=1|round=6",
-    )
-    meta: dict = {}  # filled by build; publish writes it after build
+    base = _vectors(spark, sf_dir).filter(F.col("vec_id") % 5 >= 2)
+    k = int(rule) if rule.isdigit() else max(1, math.ceil(math.sqrt(base.count())))
+    _ivf_builder(base, k=k)(tmp)
+    return {"k": k}
 
-    def build(tmp: str) -> None:
-        base = _vectors(spark, sf_dir).filter(F.col("vec_id") % 5 >= 2)
-        meta["k"] = (
-            int(rule)
-            if rule.isdigit()
-            else max(1, math.ceil(math.sqrt(base.count())))
-        )
-        _ivf_builder(base, k=meta["k"])(tmp)
 
-    artifacts.publish(base_idx, fp, build, meta)
-    return base_idx
+# Lifecycle half of stream_ivf_ingest: the immutable base-trained IVF
+# index (vec_id % 5 >= 2) the per-run roots symlink to. Its meta
+# records the K the build chose (``k``).
+_ensure_stream_ivf_base = Stored(
+    "ann_ivf_stream_base",
+    "embeddings",
+    lambda: f"stream_ivf_ingest|base=vec_id%5>=2|k={_stream_ivf_k_rule()}"
+    "|lloyd=1|round=6",
+    _build_stream_ivf_base,
+)
 
 
 def _stream_ivf_oracle() -> str:
@@ -1318,7 +1296,7 @@ def _stream_ivf_oracle() -> str:
     "stream_ivf_ingest",
     oracle=_stream_ivf_oracle(),
     tags=("streaming", "similarity", "incremental"),
-    prepare=_prep_stream_ivf_base,
+    prepare=(_ensure_stream_ivf_base, _ensure_stream_ivf_src),
     doc="The VECTOR-STORE INGEST LOOP as a real Structured Streaming "
     "job — the streaming composition the stored-IVF family builds "
     "toward, and the vector mirror of stream_index_ingest: vector "

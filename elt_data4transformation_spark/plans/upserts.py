@@ -9,8 +9,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as Ty
 
-from ..operators import artifacts, upsert
+from ..operators import upsert
 from ..sources import read_parquet, table
+from .dedup import Stored
 from .registry import register
 
 T1 = "2024-01-15 00:00:00"
@@ -587,6 +588,96 @@ def _cdc_maintain_oracle() -> str:
     """
 
 
+def _cdc_epochs(e: DataFrame, *cuts: str) -> list[DataFrame]:
+    """The (event_id, event_type, value) rows of ``e`` split at the
+    ascending ``cuts``: ts < cuts[0], then each [cut, next cut), then
+    ts >= cuts[-1]."""
+    ts = F.col("ts")
+    at = [F.lit(c).cast("timestamp") for c in cuts]
+    conds = (
+        [ts < at[0]]
+        + [(ts >= lo) & (ts < hi) for lo, hi in zip(at, at[1:])]
+        + [ts >= at[-1]]
+    )
+    return [e.filter(c).select("event_id", "event_type", "value") for c in conds]
+
+
+def _cdc_split(epoch: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """An epoch's (inserts, delete requests): event_id % 10 == 0 rows
+    delete ``event_id - 10``."""
+    return (
+        epoch.filter(F.col("event_id") % 10 != 0),
+        epoch.filter(F.col("event_id") % 10 == 0).select(
+            (F.col("event_id") - 10).alias("target_id")
+        ),
+    )
+
+
+def _cdc_deleted(live: DataFrame, del_req: DataFrame) -> DataFrame:
+    # deletions fetch their target's (type, value) via one equi-join —
+    # a partition-pruned point lookup at scale, the only base access
+    # the maintenance path needs
+    return live.join(del_req, live["event_id"] == del_req["target_id"]).select(
+        "event_type", "value"
+    )
+
+
+def _cdc_agg(df: DataFrame, n: str, s: str) -> DataFrame:
+    """Per-type count and DECIMAL sum. DECIMAL partial sums: base +
+    inserts - deletes under doubles suffers cancellation error the
+    oracle's from-scratch SUM doesn't, so at a rounding boundary the
+    4dp hash could break. Fixed-point sums make maintained state
+    EXACTLY equal to a recompute (values are 2dp by construction, so
+    the cast is deterministic)."""
+    dec = F.col("value").cast("decimal(18,2)")
+    return df.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias(n), F.sum(dec).alias(s)
+    )
+
+
+def _cdc_maintained(base_agg: DataFrame, base: DataFrame, post: DataFrame) -> DataFrame:
+    """The per-type state after applying the ``post`` op-log to the
+    base aggregate ``base_agg`` (b_n, b_sum) of ``base``."""
+    inserts, del_req = _cdc_split(post)
+    deleted = _cdc_deleted(base.unionByName(inserts), del_req)
+    zero_dec = F.lit(0).cast("decimal(28,2)")
+    return (
+        base_agg.join(_cdc_agg(inserts, "i_n", "i_sum"), "event_type", "full_outer")
+        .join(_cdc_agg(deleted, "d_n", "d_sum"), "event_type", "full_outer")
+        .select(
+            "event_type",
+            (
+                F.coalesce("b_n", F.lit(0))
+                + F.coalesce("i_n", F.lit(0))
+                - F.coalesce("d_n", F.lit(0))
+            ).alias("n_rows"),
+            F.round(
+                (
+                    F.coalesce("b_sum", zero_dec)
+                    + F.coalesce("i_sum", zero_dec)
+                    - F.coalesce("d_sum", zero_dec)
+                ).cast("double"),
+                4,
+            ).alias("total_value"),
+            F.coalesce("i_n", F.lit(0)).alias("n_inserted"),
+            F.coalesce("d_n", F.lit(0)).alias("n_deleted_applied"),
+        )
+        .filter(F.col("n_rows") > 0)
+        .orderBy("event_type")
+    )
+
+
+def _build_cdc_state(spark: SparkSession, sf_dir: str, tmp: str) -> None:
+    base = _cdc_epochs(table(spark, sf_dir, "events"), T1)[0]
+    _cdc_agg(base, "b_n", "b_sum").write.mode("overwrite").parquet(f"{tmp}/state")
+
+
+# cdc_stored_state_maintain's state: the per-type base aggregate at cut T1
+_cdc_state = Stored(
+    "cdc_state", "events", f"cdc_stored_state|cut={T1}", _build_cdc_state
+)
+
+
 @register(
     "cdc_aggregate_maintain",
     oracle=_cdc_maintain_oracle(),
@@ -607,63 +698,8 @@ def _cdc_maintain_oracle() -> str:
     "a partition-pruned point-lookup join, not a scan.",
 )
 def cdc_aggregate_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = table(spark, sf_dir, "events")
-    base = e.filter(F.col("ts") < F.lit(T1).cast("timestamp")).select(
-        "event_id", "event_type", "value"
-    )
-    post = e.filter(F.col("ts") >= F.lit(T1).cast("timestamp")).select(
-        "event_id", "event_type", "value"
-    )
-    inserts = post.filter(F.col("event_id") % 10 != 0)
-    del_req = post.filter(F.col("event_id") % 10 == 0).select(
-        (F.col("event_id") - 10).alias("target_id")
-    )
-    live = base.unionByName(inserts)
-    # deletions fetch their target's (type, value) via one equi-join —
-    # the only base access the maintenance path needs
-    deleted = live.join(
-        del_req, live["event_id"] == del_req["target_id"]
-    ).select("event_type", "value")
-
-    # DECIMAL partial sums: base + inserts - deletes under doubles
-    # suffers cancellation error the oracle's from-scratch SUM doesn't,
-    # so at a rounding boundary the 4dp hash could break. Fixed-point
-    # sums make maintained state EXACTLY equal to a recompute (values
-    # are 2dp by construction, so the cast is deterministic).
-    dec = F.col("value").cast("decimal(18,2)")
-    zero_dec = F.lit(0).cast("decimal(28,2)")
-    base_agg = base.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("b_n"), F.sum(dec).alias("b_sum")
-    )
-    ins_agg = inserts.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("i_n"), F.sum(dec).alias("i_sum")
-    )
-    del_agg = deleted.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("d_n"), F.sum(dec).alias("d_sum")
-    )
-    maintained = (
-        base_agg.join(ins_agg, "event_type", "full_outer")
-        .join(del_agg, "event_type", "full_outer")
-        .select(
-            "event_type",
-            (
-                F.coalesce("b_n", F.lit(0))
-                + F.coalesce("i_n", F.lit(0))
-                - F.coalesce("d_n", F.lit(0))
-            ).alias("n_rows"),
-            F.round(
-                (
-                    F.coalesce("b_sum", zero_dec)
-                    + F.coalesce("i_sum", zero_dec)
-                    - F.coalesce("d_sum", zero_dec)
-                ).cast("double"),
-                4,
-            ).alias("total_value"),
-            F.coalesce("i_n", F.lit(0)).alias("n_inserted"),
-            F.coalesce("d_n", F.lit(0)).alias("n_deleted_applied"),
-        )
-    )
-    return maintained.filter(F.col("n_rows") > 0).orderBy("event_type")
+    base, post = _cdc_epochs(table(spark, sf_dir, "events"), T1)
+    return _cdc_maintained(_cdc_agg(base, "b_n", "b_sum"), base, post)
 
 
 @register(
@@ -686,74 +722,9 @@ def cdc_aggregate_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     "family beside dedup_stored_index and ann_stored_ivf.",
 )
 def cdc_stored_state_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from .dedup import _artifact_path
-
-    e = table(spark, sf_dir, "events")
-    base = e.filter(F.col("ts") < F.lit(T1).cast("timestamp")).select(
-        "event_id", "event_type", "value"
-    )
-    post = e.filter(F.col("ts") >= F.lit(T1).cast("timestamp")).select(
-        "event_id", "event_type", "value"
-    )
-    dec = F.col("value").cast("decimal(18,2)")
-    path = _artifact_path("cdc_state", sf_dir)
-    fp = artifacts.source_fingerprint(
-        [os.path.join(sf_dir, "events.parquet")],
-        params=f"cdc_stored_state|cut={T1}",
-    )
-    artifacts.publish(
-        path,
-        fp,
-        lambda tmp: base.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("b_n"), F.sum(dec).alias("b_sum"))
-        .write.mode("overwrite")
-        .parquet(f"{tmp}/state"),
-    )
-    base_agg = read_parquet(spark, f"{path}/state")
-
-    inserts = post.filter(F.col("event_id") % 10 != 0)
-    del_req = post.filter(F.col("event_id") % 10 == 0).select(
-        (F.col("event_id") - 10).alias("target_id")
-    )
-    # deletes still fetch their target's (type, value) via one key
-    # join — a partition-pruned point lookup at scale, the only base
-    # access the maintenance path makes
-    live = base.unionByName(inserts)
-    deleted = live.join(
-        del_req, live["event_id"] == del_req["target_id"]
-    ).select("event_type", "value")
-    ins_agg = inserts.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("i_n"), F.sum(dec).alias("i_sum")
-    )
-    del_agg = deleted.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("d_n"), F.sum(dec).alias("d_sum")
-    )
-    zero_dec = F.lit(0).cast("decimal(28,2)")
-    maintained = (
-        base_agg.join(ins_agg, "event_type", "full_outer")
-        .join(del_agg, "event_type", "full_outer")
-        .select(
-            "event_type",
-            (
-                F.coalesce("b_n", F.lit(0))
-                + F.coalesce("i_n", F.lit(0))
-                - F.coalesce("d_n", F.lit(0))
-            ).alias("n_rows"),
-            F.round(
-                (
-                    F.coalesce("b_sum", zero_dec)
-                    + F.coalesce("i_sum", zero_dec)
-                    - F.coalesce("d_sum", zero_dec)
-                ).cast("double"),
-                4,
-            ).alias("total_value"),
-            F.coalesce("i_n", F.lit(0)).alias("n_inserted"),
-            F.coalesce("d_n", F.lit(0)).alias("n_deleted_applied"),
-        )
-    )
-    return maintained.filter(F.col("n_rows") > 0).orderBy("event_type")
+    base, post = _cdc_epochs(table(spark, sf_dir, "events"), T1)
+    base_agg = read_parquet(spark, f"{_cdc_state(spark, sf_dir)}/state")
+    return _cdc_maintained(base_agg, base, post)
 
 
 def _cdc_advance_oracle() -> str:
@@ -817,6 +788,45 @@ def _cdc_advance_oracle() -> str:
     """
 
 
+def _build_cdc_advance(spark: SparkSession, sf_dir: str, tmp: str) -> dict:
+    # fold epoch 1 into the stored state and ADVANCE the cut: v2 =
+    # base_agg + ins1 - del1, where del1 targets rows live at cut T2
+    # (base ∪ ins1)
+    base, e1, _ = _cdc_epochs(table(spark, sf_dir, "events"), T1, T2)
+    ins1, del1 = _cdc_split(e1)
+    deleted1 = _cdc_deleted(base.unionByName(ins1), del1)
+    zero_dec = F.lit(0).cast("decimal(28,2)")
+    (
+        _cdc_agg(base, "b_n", "b_sum")
+        .join(_cdc_agg(ins1, "i_n", "i_sum"), "event_type", "full_outer")
+        .join(_cdc_agg(deleted1, "d_n", "d_sum"), "event_type", "full_outer")
+        .select(
+            "event_type",
+            (
+                F.coalesce("b_n", F.lit(0))
+                + F.coalesce("i_n", F.lit(0))
+                - F.coalesce("d_n", F.lit(0))
+            ).alias("s_n"),
+            (
+                F.coalesce("b_sum", zero_dec)
+                + F.coalesce("i_sum", zero_dec)
+                - F.coalesce("d_sum", zero_dec)
+            ).alias("s_sum"),
+            F.coalesce("i_n", F.lit(0)).alias("s_ins"),
+            F.coalesce("d_n", F.lit(0)).alias("s_del"),
+        )
+        .write.mode("overwrite")
+        .parquet(f"{tmp}/state")
+    )
+    return {"cut": T2}
+
+
+# cdc_state_advance's state, advanced to cut T2
+_cdc_advance = Stored(
+    "cdc_advance", "events", f"cdc_state_advance|cut={T2}", _build_cdc_advance
+)
+
+
 @register(
     "cdc_state_advance",
     oracle=_cdc_advance_oracle(),
@@ -841,93 +851,19 @@ def _cdc_advance_oracle() -> str:
     "(SURVEY §2.11) with its watermark actually moving.",
 )
 def cdc_state_advance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from .dedup import _artifact_path
-
-    e = table(spark, sf_dir, "events")
-    base = e.filter(F.col("ts") < F.lit(T1).cast("timestamp")).select(
-        "event_id", "event_type", "value"
-    )
-    e1 = e.filter(
-        (F.col("ts") >= F.lit(T1).cast("timestamp"))
-        & (F.col("ts") < F.lit(T2).cast("timestamp"))
-    ).select("event_id", "event_type", "value")
-    e2 = e.filter(F.col("ts") >= F.lit(T2).cast("timestamp")).select(
-        "event_id", "event_type", "value"
-    )
-    dec = F.col("value").cast("decimal(18,2)")
+    base, e1, e2 = _cdc_epochs(table(spark, sf_dir, "events"), T1, T2)
+    state = read_parquet(spark, f"{_cdc_advance(spark, sf_dir)}/state")
     zero_dec = F.lit(0).cast("decimal(28,2)")
-
-    def split_ops(epoch: DataFrame) -> tuple[DataFrame, DataFrame]:
-        return (
-            epoch.filter(F.col("event_id") % 10 != 0),
-            epoch.filter(F.col("event_id") % 10 == 0).select(
-                (F.col("event_id") - 10).alias("target_id")
-            ),
-        )
-
-    def agg(df: DataFrame, n: str, s: str) -> DataFrame:
-        return df.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias(n), F.sum(dec).alias(s)
-        )
-
-    path = _artifact_path("cdc_advance", sf_dir)
-    ins1, del1 = split_ops(e1)
-
-    def build(tmp: str) -> None:
-        # fold epoch 1 into the stored state and ADVANCE the cut:
-        # v2 = base_agg + ins1 - del1, where del1 targets rows live
-        # at cut T2 (base ∪ ins1)
-        live1 = base.unionByName(ins1)
-        deleted1 = live1.join(
-            del1, live1["event_id"] == del1["target_id"]
-        ).select("event_type", "value")
-        (
-            agg(base, "b_n", "b_sum")
-            .join(agg(ins1, "i_n", "i_sum"), "event_type", "full_outer")
-            .join(agg(deleted1, "d_n", "d_sum"), "event_type", "full_outer")
-            .select(
-                "event_type",
-                (
-                    F.coalesce("b_n", F.lit(0))
-                    + F.coalesce("i_n", F.lit(0))
-                    - F.coalesce("d_n", F.lit(0))
-                ).alias("s_n"),
-                (
-                    F.coalesce("b_sum", zero_dec)
-                    + F.coalesce("i_sum", zero_dec)
-                    - F.coalesce("d_sum", zero_dec)
-                ).alias("s_sum"),
-                F.coalesce("i_n", F.lit(0)).alias("s_ins"),
-                F.coalesce("d_n", F.lit(0)).alias("s_del"),
-            )
-            .write.mode("overwrite")
-            .parquet(f"{tmp}/state")
-        )
-
-    artifacts.publish(
-        path,
-        artifacts.source_fingerprint(
-            [os.path.join(sf_dir, "events.parquet")],
-            params=f"cdc_state_advance|cut={T2}",
-        ),
-        build,
-        extra_meta={"cut": T2},
-    )
-    state = read_parquet(spark, f"{path}/state")
 
     # steady state: only the ops SINCE the stored cut are applied; the
     # delete fetch joins live2 (base ∪ ins1 ∪ ins2) — a point lookup
     # against the keyed store at scale, the only pre-cut row access
-    ins2, del2 = split_ops(e2)
-    live2 = base.unionByName(ins1).unionByName(ins2)
-    deleted2 = live2.join(
-        del2, live2["event_id"] == del2["target_id"]
-    ).select("event_type", "value")
+    ins1, _ = _cdc_split(e1)
+    ins2, del2 = _cdc_split(e2)
+    deleted2 = _cdc_deleted(base.unionByName(ins1).unionByName(ins2), del2)
     return (
-        state.join(agg(ins2, "i_n", "i_sum"), "event_type", "full_outer")
-        .join(agg(deleted2, "d_n", "d_sum"), "event_type", "full_outer")
+        state.join(_cdc_agg(ins2, "i_n", "i_sum"), "event_type", "full_outer")
+        .join(_cdc_agg(deleted2, "d_n", "d_sum"), "event_type", "full_outer")
         .select(
             "event_type",
             (

@@ -1,9 +1,13 @@
 """Spark-free tests of the stored-artifact helpers: the one path rule
 (plans.dedup._artifact_path), the staged ensure
-(operators.artifacts.ensure_staged) and the fused-ingest precondition."""
+(operators.artifacts.ensure_staged), the stored-artifact record
+(plans.dedup.Stored) and the fused-ingest precondition, plus static
+guards that keep every artifact on the record and every broken
+precondition in plans/ a raised error."""
 
 from __future__ import annotations
 
+import ast
 import os
 
 import pytest
@@ -83,6 +87,116 @@ def test_ensure_staged_without_meta_rebuilds_both(tmp_path):
     a.ensure()
     assert (a.builds, a.steps) == (2, 2)
     assert artifacts.load_meta(a.path)["fingerprint"] == "fp-final"
+
+
+def _record(tmp_path, monkeypatch, **kw) -> tuple[dedup.Stored, str, list]:
+    """A pure-Python Stored over ``<tmp>/sf/events.parquet`` whose build
+    writes base.txt and returns ``{"k": 3}``; calls are logged."""
+    monkeypatch.setattr(dedup, "_index_root", lambda: str(tmp_path / "dedup_index"))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "events.parquet").write_text("x")
+    calls = []
+
+    def build(spark, sf_dir, tmp):
+        calls.append(("build", sf_dir))
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "base.txt"), "w") as fh:
+            fh.write("base")
+        return {"k": 3}
+
+    return dedup.Stored("art", "events", "p|x=1", build, **kw), str(sf), calls
+
+
+def test_stored_publishes_build_meta_then_reuses(tmp_path, monkeypatch):
+    rec, sf, calls = _record(tmp_path, monkeypatch)
+    path = rec(None, sf)
+    assert path == dedup._artifact_path("art", sf)
+    src = [os.path.join(sf, "events.parquet")]
+    assert artifacts.load_meta(path) == {
+        "fingerprint": artifacts.source_fingerprint(src, "p|x=1"),
+        "k": 3,
+    }
+    assert rec(None, sf) == path
+    assert calls == [("build", sf)]
+
+
+def test_stored_step_derives_both_stamps_from_one_tag(tmp_path, monkeypatch):
+    steps = []
+    rec, sf, calls = _record(
+        tmp_path,
+        monkeypatch,
+        step=("ingests", "a", lambda spark, sf_dir, path, tag: steps.append(tag)),
+    )
+    path = rec(None, sf)
+    src = [os.path.join(sf, "events.parquet")]
+    assert artifacts.load_meta(path) == {
+        "fingerprint": artifacts.source_fingerprint(src, "p|x=1|ingests=a"),
+        "ingests": ["a"],
+    }
+    # the crash window: base current, final stamp never written
+    artifacts.update_meta(path, artifacts.source_fingerprint(src, "p|x=1|ingests="))
+    rec(None, sf)
+    rec(None, sf)
+    assert (len(calls), steps) == (1, ["a", "a"])
+
+
+PLANS = os.path.join(os.path.dirname(dedup.__file__))
+
+
+def _plans_trees():
+    for f in sorted(os.listdir(PLANS)):
+        if f.endswith(".py"):
+            with open(os.path.join(PLANS, f)) as fh:
+                yield f, ast.parse(fh.read())
+
+
+def test_plans_have_no_assert_statement():
+    # python -O strips asserts: a compaction or an id-collision guard
+    # written as one would silently stop running
+    offenders = [
+        f"{f}:{n.lineno}"
+        for f, tree in _plans_trees()
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Assert)
+    ]
+    assert not offenders, f"raise instead of assert: {offenders}"
+
+
+# the record's ensure and the lifecycles kept by hand on purpose
+# (final or pre-split stamps between their steps)
+_PUBLISHERS = {"Stored.__call__", "_ensure_compact_index", "_ensure_split_ivf"}
+
+
+def test_artifacts_are_published_only_through_the_record():
+    # a hand-written path + fingerprint + publish copy drifts from the
+    # record's; a new stored artifact is a Stored
+    offenders = []
+    for f, tree in _plans_trees():
+        scopes = []
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ClassDef):
+                scopes += [
+                    (f"{node.name}.{m.name}", m)
+                    for m in node.body
+                    if isinstance(m, ast.FunctionDef)
+                ]
+            elif isinstance(node, ast.FunctionDef) and node.col_offset == 0:
+                scopes.append((node.name, node))
+        owner = {}
+        for name, fn in scopes:
+            for n in ast.walk(fn):
+                owner[id(n)] = name
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            func = ast.unparse(n.func)
+            if func in ("artifacts.publish", "artifacts.ensure_staged") or (
+                func.split(".")[-1] == "_artifact_path"
+            ):
+                if owner.get(id(n)) not in _PUBLISHERS:
+                    offenders.append(f"{f}:{n.lineno} {func}")
+    assert not offenders, f"declare a plans.dedup.Stored record: {offenders}"
 
 
 def test_ingest_band_index_fused_rejects_empty_ready():

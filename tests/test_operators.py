@@ -4387,7 +4387,9 @@ def test_srp_band_store_rows_equal_fresh_computation(spark):
 
     stored = {
         (r["vec_id"], r["band_idx"], r["band_key"])
-        for r in _srp_band_store(spark, SF_SMALL).collect()
+        for r in spark.read.parquet(
+            f"{_srp_band_store(spark, SF_SMALL)}/bands"
+        ).collect()
     }
     e0 = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")

@@ -1,8 +1,8 @@
 """The shared query-shape helpers: the span fold (plans.dedup._dup_spans)
 and the Lloyd centroid mean (operators.vectors.centroid_means) against
 pure-Python references on tiny hand-built frames, a static guard that
-keeps each shape in its one helper, and the stored-fingerprint near-dup
-queries re-run in one session after a corpus edit."""
+keeps each shape in its one helper, and the near-dup queries that pin
+a reused frame re-run in one session after a corpus edit."""
 
 from __future__ import annotations
 
@@ -12,6 +12,7 @@ import shutil
 
 import duckdb
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -116,6 +117,16 @@ def test_query_shape_lives_in_one_helper(needle, helper):
     assert not offenders, f"use {helper}: {offenders}"
 
 
+def _check_oracle(spark, sf, name: str) -> None:
+    spec = REGISTRY[name]
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    want = con.execute(spec.oracle).df()
+    con.close()
+    assert_frames_match(spec.fn(spark, str(sf)).toPandas(), want, name)
+
+
 @pytest.mark.parametrize(
     "name, table, key",
     [
@@ -123,31 +134,42 @@ def test_query_shape_lives_in_one_helper(needle, helper):
         ("video_neardup", "documents", "doc_id"),
         ("audio_neardup", "documents", "doc_id"),
         ("embedding_neardup_srp", "embeddings", "vec_id"),
+        ("dedup_incremental_index", "documents", "doc_id"),
     ],
 )
 def test_neardup_rerun_after_corpus_edit_matches_oracle(
     spark, tmp_path, monkeypatch, name, table, key
 ):
     # the stored fingerprints are rebuilt after the edit; a session
-    # cache entry for the store path would serve the old keys
+    # cache entry for the store (or corpus) path would serve old rows
     sf = tmp_path / "sf"
     shutil.copytree(SF_SMALL, sf)
     monkeypatch.setattr(
         dedup, "_index_root", lambda: str(tmp_path / "store" / "dedup_index")
     )
-    spec = REGISTRY[name]
-
-    def check() -> None:
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-        want = con.execute(spec.oracle).df()
-        con.close()
-        assert_frames_match(spec.fn(spark, str(sf)).toPandas(), want, name)
-
-    check()
+    _check_oracle(spark, sf, name)
     path = sf / f"{table}.parquet"
     t = pq.read_table(path)
     keep = np.asarray(t.column(key).to_numpy()) % 3 != 0
     pq.write_table(t.filter(keep), path)
-    check()
+    _check_oracle(spark, sf, name)
+
+
+def test_incremental_index_rerun_after_text_edit_matches_oracle(spark, tmp_path):
+    # dropped documents cannot show a stale candidate set (it is a
+    # superset, and the fresh shingle joins drop the missing docs); an
+    # incoming batch whose documents now copy corpus documents can:
+    # cached candidates from the first run miss every new pair
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_SMALL, sf)
+    _check_oracle(spark, sf, "dedup_incremental_index")
+    path = sf / "documents.parquet"
+    t = pq.read_table(path)
+    ids = t.column("doc_id").to_pylist()
+    text = t.column("text").to_pylist()
+    for i in range(len(ids) - 1):
+        if ids[i] % dedup.DELTA_MOD == 0 and ids[i] % 3 == 0:
+            text[i] = text[i + 1]
+    i_text = t.schema.get_field_index("text")
+    pq.write_table(t.set_column(i_text, "text", pa.array(text)), path)
+    _check_oracle(spark, sf, "dedup_incremental_index")

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 import re
+import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -19,6 +20,7 @@ from elt_data4transformation_spark.sources import TABLES, tables
 from tests.conftest import SF_SMALL
 
 NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+PLANS = "elt_data4transformation_spark.plans"
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     "elt_data4transformation_spark",
@@ -86,14 +88,36 @@ def test_read_parquet_matches_inferred_read_on_prepared_artifacts(
         _assert_hit_matches_inferred(spark, path)
 
 
-def test_ensure_on_current_artifact_runs_no_job(spark, store):
-    # each ensure builds its corpus DataFrames from table() before the
-    # fingerprint check; with the schema memo that costs no job
-    for ensure in (dedup._ensure_maintain_index, similarity._ensure_stored_ivf):
-        ensure(spark, SF_SMALL)
+def test_ensure_on_current_artifact_runs_no_job(spark, store, monkeypatch):
+    # every registry prepare hook, called again on current artifacts,
+    # is a fingerprint stat-check: no Spark job and no corpus table()
+    # read (each record builds its frames inside its build or step)
+    from elt_data4transformation_spark.plans import REGISTRY
+
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(args[2] if len(args) > 2 else kwargs.get("name"))
+        return tables.table(*args, **kwargs)
+
+    # patch the name in every plans module, as perfbench's tracer does
+    for mod in list(sys.modules.values()):
+        if getattr(mod, "__name__", "").startswith(PLANS) and getattr(
+            mod, "table", None
+        ) is tables.table:
+            monkeypatch.setattr(mod, "table", counted)
+    hooks = {}
+    for name, spec in sorted(REGISTRY.items()):
+        if spec.prepare is not None:
+            hooks.setdefault(spec.prepare, name)
+    assert len(hooks) >= 22, len(hooks)
+    for prepare, name in hooks.items():
+        prepare(spark, SF_SMALL)
+        del calls[:]
         j0 = _next_job(spark)
-        ensure(spark, SF_SMALL)
-        assert _next_job(spark) == j0, ensure.__name__
+        prepare(spark, SF_SMALL)
+        assert _next_job(spark) == j0, f"{name}: a current prepare ran a job"
+        assert not calls, f"{name}: a current prepare read {calls}"
 
 
 def test_read_parquet_misses_on_rewritten_file(spark, memo, tmp_path):
